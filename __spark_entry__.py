@@ -45,8 +45,8 @@ def _cell_sql(lon, lat, z):
 
 # DataFrame handles per (session, sf_dir): `spark.read.parquet` runs a
 # schema-inference job per table, so re-reading all 10 tables on every
-# query construction cost 0.83 s / 10 Spark jobs PER QUERY (measured,
-# bench_extra.py `views`; guide §1.2 step 1 — don't redo work you throw
+# query construction cost 0.83 s / 10 Spark jobs PER QUERY (round-8
+# measurement; guide §1.2 step 1 — don't redo work you throw
 # away).  Only the analyzed plan (path + schema + file listing) is
 # memoized; every action still scans the parquet files — no result or
 # data caching.  Keyed by applicationId so a new session never sees a
@@ -806,7 +806,7 @@ def _warp_tile_stats(out: DataFrame) -> DataFrame:
     """Comparable per-tile stats: every column BIGINT/string, payload
     compared bit-for-bit via CRC-32 of the raw tile bytes (JVM crc32).
     One selectExpr call (r8) — the Column form paid 8 py4j round trips
-    and this projection is built 4x per warp_tiles_chunks construction."""
+    and this projection is built 4x per q_warp_tiles_chunks construction."""
     return out.selectExpr(
         "CAST(z AS BIGINT) AS z",
         "CAST(x AS BIGINT) AS x",
@@ -1171,7 +1171,7 @@ def q_warp_reference_options(spark, sf_dir):
     before pinning).  Config list is shared with the pin tool via
     geowarp_spark.sources.reference_configs so the sides cannot drift."""
     from geowarp_spark.operators.warp_tiles import (
-        fixture_chunk_records, tiles_df, warp_tiles_broadcast_variants)
+        fixture_chunk_records, tiles_df, warp_tiles_broadcast)
     from geowarp_spark.sources.fixtures import build_fixture
     from geowarp_spark.sources.reference_configs import (
         OPTIONS_BBOX, OPTIONS_OUT_SIZE, OPTIONS_ZOOM, options_variants,
@@ -1183,7 +1183,7 @@ def q_warp_reference_options(spark, sf_dir):
     # all 20 variants in one pass: one broadcast, one tile-table scan
     variants = [(tag, method, py_opts(js_opts))
                 for tag, method, js_opts in options_variants()]
-    out = warp_tiles_broadcast_variants(
+    out = warp_tiles_broadcast(
         tiles, recs, variants, out_size=OPTIONS_OUT_SIZE)
     return out.select(
         F.col("z").cast("long").alias("z"),

@@ -290,8 +290,9 @@ def orchestrate():
             "--conf", "spark.sql.execution.arrow.pyspark.enabled=true",
             "--conf", "spark.driver.memory=16g",
             # r5 root cause of the r4 8->32 "anti-scaling", two layers
-            # (bench/profile_confirm.py): (1) with default -Xms the first
-            # full-scale stage commits+zeroes ~14 GB of heap mid-query
+            # (round-5 interleaved A/B legs with per-run GC counters):
+            # (1) with default -Xms the first full-scale stage
+            # commits+zeroes ~14 GB of heap mid-query
             # (20-80 s, worse at 32 threads) — pre-touch moves that to JVM
             # startup, outside the timed stages; (2) G1's first full-heap
             # GC cycle still burned 20-35 s in the first full-scale

@@ -2,26 +2,28 @@
 
 This is the Spark lift of the reference's per-tile usage pattern
 (test.js:172-196: XYZ tile -> tileToBBOX -> windowed GeoTIFF read ->
-geowarp(...)): the windowed read becomes a cell-binned equi-join between
-the tile table and the raster-chunk table, and the warp call becomes a
-numpy kernel inside ``applyInPandas`` over tile groups.
+geowarp(...)): the windowed read becomes an assignment of raster chunks
+to tiles, and the warp call becomes the numpy kernel run once per
+(tile, source window).  Chunks are grid-aligned sub-windows of one
+raster with halo rows duplicated at ingest, so box-stat windows never
+cross owners.  Two plans assign chunks to tiles:
 
-Scale design (north rule):
-- the tile<->chunk assignment is an EQUI-join on cell ids (both sides
-  explode the cells their bbox covers), so Catalyst shuffles on a key —
-  no O(tiles x chunks) theta join;
-- small chunk tables are broadcast instead (``join_strategy='broadcast'``,
-  the J3/J4 broadcast-join path, geowarp tests' single-source case);
-- each tile group stitches its matched chunk windows into one source
-  array (chunks are grid-aligned sub-windows of the same raster, with
-  halo duplication at ingest so box-stat windows never cross owners) and
-  runs the numpy kernel once — all pixel math vectorized, no per-row
-  Python.
+- ``warp_tiles_broadcast`` — a small source is broadcast to every
+  executor once; a mapInPandas over the tile table hit-tests each tile
+  against the chunk boxes, stitches the matches into one window and
+  warps it.  No pixel payload is shuffled.
+- ``warp_tiles`` — the chunk-anchored plan for sources too large to
+  broadcast: payload-free pair discovery on a cover-cell EQUI-join (no
+  O(tiles x chunks) theta join), each chunk warps its matched tiles from
+  its own window and keeps the pixels it owns, and an output-sized
+  shuffle merges the owned rects.  The payload crosses one exchange.
+
+``warp_fixture_to_tiles(join_strategy='auto')`` picks between them by
+measured source bytes (``AUTO_BROADCAST_BYTES``); both give the same
+bytes.
 """
 
 from __future__ import annotations
-
-import io
 
 import numpy as np
 import pandas as pd
@@ -32,9 +34,9 @@ from pyspark.sql.types import (
     StructField, StructType,
 )
 
-from ..grid.tiles import latlng_to_cell, tile_to_bbox_3857, tile_to_bbox_4326
+from ..grid.tiles import tile_to_bbox_3857, tile_to_bbox_4326
 from ..kernels.affine import Geotransform
-from ..kernels.bbox import boolean_intersects, reproject_bbox
+from ..kernels.bbox import reproject_bbox
 from ..kernels.proj import transformer
 from ..kernels.warp import warp
 
@@ -197,11 +199,11 @@ def mosaic_meta_df(spark: SparkSession, meta, *, chunk=256, halo=8,
     (r8): one row per virtual-lattice chunk position carrying exactly the
     (raster_id, row_off, col_off, bbox_4326) the composite's rows would
     carry — computed from the lattice geometry alone, WITHOUT executing
-    the composite.  Pass as ``warp_tiles_chunks(..., chunks_meta=...)``
-    so the composite has exactly ONE consumer (the payload join): the r8
-    plan audit found the composite applyInPandas executed twice per
-    action (metadata + payload), and checkpoint-based fixes either force
-    a build-time job (AQE materializes the piece shuffle when the RDD is
+    the composite.  Pass as ``warp_tiles(..., chunks_meta=...)`` so the
+    composite has exactly ONE consumer (the payload join): the r8 plan
+    audit found the composite applyInPandas executed twice per action
+    (metadata + payload), and checkpoint-based fixes either force a
+    build-time job (AQE materializes the piece shuffle when the RDD is
     taken) or cache payload.
 
     The row set is a SUPERSET of the composite's (positions no piece
@@ -241,8 +243,8 @@ def mosaic_meta_df(spark: SparkSession, meta, *, chunk=256, halo=8,
 
 
 def mosaic_chunks(chunks: DataFrame, *, chunk=256, halo=8,
-                  raster_id="mosaic", hole_no_data=None, meta=None,
-                  persist=False) -> DataFrame:
+                  raster_id="mosaic", hole_no_data=None,
+                  meta=None) -> DataFrame:
     """Distributed pixel-level composite of grid-aligned rasters onto one
     virtual raster lattice -> a standard single-raster chunk table.
 
@@ -288,18 +290,10 @@ def mosaic_chunks(chunks: DataFrame, *, chunk=256, halo=8,
     Values must match what the collect would return — the same
     validation runs either way.
 
-    ``persist`` (r8): lazily localCheckpoint the composite so one action
-    computes it ONCE even when consumed twice.  Downstream chunk-anchored
-    warps consume the composite twice per action (pair-discovery metadata
-    + the payload join) unless given ``chunks_meta``, and Catalyst only
-    dedupes the piece exchange underneath — the composite applyInPandas
-    itself ran twice (r8 plan audit).  Caveats: the checkpoint caches to
-    executor-local memory/disk (lost executors replay nothing), and
-    taking the RDD forces AQE to materialize the piece shuffle at
-    CONSTRUCTION time — a build-side job even if the caller never runs
-    the composite.  Default OFF: the preferred shape is passing
-    ``warp_tiles_chunks(..., chunks_meta=mosaic_meta_df(...))`` so the
-    composite has exactly one consumer and stays fully lazy.
+    A downstream ``warp_tiles`` consumes the composite twice per action
+    (pair discovery + payload join) unless it is given
+    ``chunks_meta=mosaic_meta_df(...)``, which leaves the composite one
+    consumer and keeps it fully lazy.
     """
     spark = chunks.sparkSession
     if meta is None:
@@ -402,14 +396,8 @@ def mosaic_chunks(chunks: DataFrame, *, chunk=256, halo=8,
     # explicit-width exchange: composite partials are small per piece, so
     # AQE's advisory target would coalesce the shuffle to a few tasks
     pieces = pieces.repartition(n_parts, "vkr", "vkc")
-    out = pieces.groupBy("vkr", "vkc").applyInPandas(
+    return pieces.groupBy("vkr", "vkc").applyInPandas(
         composite, schema=CHUNK_SCHEMA)
-    if persist:
-        # lazy (eager=False): no job at construction time; the first
-        # action materializes each partition once and both downstream
-        # consumers read the cached RDD
-        out = out.localCheckpoint(eager=False)
-    return out
 
 
 def tiles_df(spark: SparkSession, zooms, bbox_4326=None,
@@ -461,7 +449,9 @@ def tiles_df(spark: SparkSession, zooms, bbox_4326=None,
         # round-trip form) with the D suffix, operator order is kept,
         # and the output was verified bit-identical to the Column form
         # over full tile tables at z4-z14 (0.056 s per call after).
-        nD = f"CAST({n} AS INT)"
+        # DOUBLE, not INT: 2^z overflows INT at z >= 31, and the literal
+        # only feeds `/`, which returns double either way
+        nD = f"CAST({n} AS DOUBLE)"
         t = (
             spark.range(0, nx * ny, numPartitions=n_ptns)
             .selectExpr(
@@ -502,78 +492,12 @@ def _cover_cells_sql(bbox_col, z):
     )
 
 
-def warp_tiles(tiles: DataFrame, chunks: DataFrame, *, method="near",
-               out_size=256, out_srs=3857, join_strategy="chunks",
-               bin_z=6, out_dtype=None, turbo=False, chunk=256, halo=8,
-               chunks_meta: DataFrame | None = None,
-               **warp_kwargs) -> DataFrame:
-    """tiles x chunks -> warped tile rows (TILE_OUT_SCHEMA).
-
-    join_strategy (default 'chunks' — the plan that is safe at ANY source
-    size; at the DataFrame level the chunk-table size isn't knowable
-    without an action, so the scale-safe plan is the default and the
-    payload-duplicating 'cells' plan is strictly opt-in.  Callers that
-    KNOW the source is small should use warp_fixture_to_tiles's 'auto',
-    which picks broadcast from the measured fixture size):
-      'chunks'    — chunk-anchored two-phase plan: payload crosses one
-                    shuffle, partial tiles merge in an output-sized second
-                    shuffle (the 100 TB path for non-broadcastable sources)
-      'cells'     — explode cover cells on both sides, equi-join; the
-                    matched chunk PAYLOADS are duplicated per tile through
-                    the groupBy exchange — fine for small sources, WRONG
-                    at scale (use 'chunks')
-      'broadcast' — broadcast the chunk table, overlap predicate
-                    (single-raster / small-source case)
-    """
-    if join_strategy == "chunks":
-        return warp_tiles_chunks(
-            tiles, chunks, method=method, out_size=out_size, out_srs=out_srs,
-            bin_z=bin_z, out_dtype=out_dtype, turbo=turbo, chunk=chunk,
-            halo=halo, chunks_meta=chunks_meta, **warp_kwargs)
-    tile_key = "bbox_4326"
-    if join_strategy == "cells":
-        t = tiles.withColumn("cell", F.explode(F.expr(_cover_cells_sql(tile_key, bin_z))))
-        c = chunks.withColumnRenamed("bbox_4326", "chunk_bbox_4326").withColumn(
-            "cell", F.explode(F.expr(_cover_cells_sql("chunk_bbox_4326", bin_z)))
-        )
-        # duplicates (chunk matched through several cover cells) are
-        # deduped inside the group kernel — avoids a second shuffle here
-        joined = t.join(c, "cell").drop("cell")
-    else:
-        cond = (
-            (F.col("t.bbox_4326")[0] <= F.col("c.bbox_4326")[2])
-            & (F.col("t.bbox_4326")[2] >= F.col("c.bbox_4326")[0])
-            & (F.col("t.bbox_4326")[1] <= F.col("c.bbox_4326")[3])
-            & (F.col("t.bbox_4326")[3] >= F.col("c.bbox_4326")[1])
-        )
-        joined = tiles.alias("t").join(
-            F.broadcast(chunks.alias("c")), cond
-        ).select("t.*", *[F.col(f"c.{f.name}").alias(f.name) for f in CHUNK_SCHEMA
-                          if f.name != "bbox_4326"],
-                 F.col("c.bbox_4326").alias("chunk_bbox_4326"))
-
-    method_name = method if isinstance(method, str) else "custom"
-
-    def warp_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.drop_duplicates(subset=["row_off", "col_off"])
-        first = pdf.iloc[0]
-        recs = pdf.to_dict("records")
-        row = _stitch_and_warp(
-            recs, int(first["z"]), int(first["x"]), int(first["y"]),
-            method, method_name, out_size, out_srs, out_dtype, turbo, warp_kwargs,
-        )
-        return pd.DataFrame([row])
-
-    return joined.groupBy("raster_id", "z", "x", "y").applyInPandas(
-        warp_group, schema=TILE_OUT_SCHEMA
-    )
-
-
 def _stitch_and_warp(recs, z, x, y, method, method_name, out_size, out_srs,
                      out_dtype, turbo, warp_kwargs):
-    """Stitch matched chunk records into one grid-aligned source window
-    and run the numpy kernel once (shared by the join and broadcast
-    execution paths — bit-identical by construction)."""
+    """Stitch chunk records into one grid-aligned source window and run
+    the numpy kernel once.  Both plans warp through here: the broadcast
+    plan passes every chunk a tile overlaps, the chunk-anchored plan one
+    chunk at a time (then keeps only the pixels that chunk owns)."""
     first = recs[0]
     srs = int(first["srs"])
     full_gt = list(first["geotransform"])
@@ -657,19 +581,24 @@ PARTIAL_SCHEMA = StructType([
 ])
 
 
-def warp_tiles_chunks(tiles: DataFrame, chunks: DataFrame, *, method="near",
-                      out_size=256, out_srs=3857, bin_z=6, out_dtype=None,
-                      turbo=False, chunk=256, halo=8, out_no_data=None,
-                      mosaic=False, chunks_meta: DataFrame | None = None,
-                      **warp_kwargs) -> DataFrame:
-    """Chunk-anchored warp plan for sources too large to broadcast
-    (VERDICT r1 'What's wrong' #3): the pixel payload crosses exactly ONE
-    exchange, instead of being duplicated per matched tile.
+def warp_tiles(tiles: DataFrame, chunks: DataFrame, *, method="near",
+               out_size=256, out_srs=3857, join_strategy="chunks", bin_z=6,
+               out_dtype=None, turbo=False, chunk=256, halo=8,
+               out_no_data=None, mosaic=False,
+               chunks_meta: DataFrame | None = None,
+               **warp_kwargs) -> DataFrame:
+    """tiles x chunks -> warped tile rows (TILE_OUT_SCHEMA) through the
+    chunk-anchored plan, the one that is safe at ANY source size: the
+    pixel payload crosses exactly ONE exchange instead of being
+    duplicated per matched tile (VERDICT r1 'What's wrong' #3).  Sources
+    known to be small are cheaper through ``warp_tiles_broadcast``;
+    ``warp_fixture_to_tiles(join_strategy='auto')`` picks by size.
+    ``join_strategy`` must be 'chunks', the only plan this takes.
 
     Plan:
       1. payload-free pair discovery — tile METADATA x chunk METADATA via
          the cover-cell equi-join + exact bbox-overlap filter (the same
-         matched set as the broadcast plans);
+         matched set as the broadcast plan's hit test);
       2. the tile keys are grouped per chunk (collect_list of (z,x,y) —
          a few bytes per tile) and joined back to the full chunk rows:
          this is the single shuffle the payload crosses;
@@ -706,9 +635,13 @@ def warp_tiles_chunks(tiles: DataFrame, chunks: DataFrame, *, method="near",
     bit-identical to warping the undivided raster
     (test_warp_mosaic_of_halves_equals_whole).
 
-    Proven bit-identical to the mosaic plans by
+    Proven bit-identical to the broadcast plan by
     test_warp_tiles_all_strategies_identical and
     test_warp_chunks_cutline_resolution_rowrange."""
+    if join_strategy != "chunks":
+        raise ValueError(
+            f"warp_tiles: unknown join_strategy {join_strategy!r}; the only "
+            "plan is 'chunks' (use warp_tiles_broadcast for small sources)")
     # ``chunks_meta`` (r8): an alternative source for the pair-discovery
     # columns, e.g. mosaic_meta_df's analytic lattice rows.  Must hold a
     # SUPERSET of the chunk table's (raster_id, row_off, col_off) keys
@@ -886,10 +819,6 @@ def _chunk_partials(rec, method, out_size, out_srs, out_dtype, turbo,
     row_off, col_off = int(rec["row_off"]), int(rec["col_off"])
     kr = 0 if row_off == 0 else (row_off + halo) // chunk
     kc = 0 if col_off == 0 else (col_off + halo) // chunk
-    # edge chunks own the outside halfplane too: box-stat windows of out
-    # pixels whose CENTER falls just past the raster edge still clip into
-    # the raster (geowarp.js:929 tests full-window containment, not the
-    # center), and that value must come from exactly one partial
     rh_full, rw_full = int(rec["raster_height"]), int(rec["raster_width"])
     # single-raster: edge chunks own the outside halfplane too (box-stat
     # windows of out pixels whose CENTER lies just past the raster edge
@@ -1007,72 +936,41 @@ def _chunk_partials(rec, method, out_size, out_srs, out_dtype, turbo,
     return out
 
 
-def warp_tiles_broadcast(tiles: DataFrame, chunk_records, *, method="near",
-                         methods=None, out_size=256, out_srs=3857,
-                         out_dtype=None, turbo=False, **warp_kwargs) -> DataFrame:
-    """Broadcast execution path: ship the (small) chunk set to every
-    executor ONCE and mapInPandas over the tile table — zero shuffle of
-    pixel payloads.  The cell equi-join path duplicates each matched
-    chunk's payload per tile through the groupBy exchange (measured as
-    the dominant cost: ~4 GB of Arrow traffic for a 1 MB source at z11);
-    when the source fits in a broadcast this plan is strictly better.
-    ``chunk_records``: list of dicts with CHUNK_SCHEMA fields (data=bytes).
-    ``methods``: run several resampling methods in ONE pass — one
-    broadcast, one scan of the tile table, one stitch per (tile, method)
-    — instead of unioning per-method jobs that each re-broadcast the same
-    records (VERDICT r3 'wrong' #4).
-    """
-    spark = tiles.sparkSession
-    bc = spark.sparkContext.broadcast(chunk_records)
-    meths = list(methods) if methods is not None else [method]
-    named = [(m, m if isinstance(m, str) else "custom") for m in meths]
-
-    def gen(batches):
-        recs = bc.value
-        boxes = np.array([r["bbox_4326"] for r in recs], dtype=np.float64)
-        for pdf in batches:
-            rows = []
-            for z, x, y, tb in zip(pdf["z"], pdf["x"], pdf["y"], pdf["bbox_4326"]):
-                tb = np.asarray(tb, dtype=np.float64)
-                hit = (
-                    (boxes[:, 0] <= tb[2]) & (boxes[:, 2] >= tb[0])
-                    & (boxes[:, 1] <= tb[3]) & (boxes[:, 3] >= tb[1])
-                )
-                idx = np.flatnonzero(hit)
-                if idx.size == 0:
-                    continue
-                matched = [recs[i] for i in idx]
-                for m, mname in named:
-                    rows.append(_stitch_and_warp(
-                        matched, int(z), int(x), int(y),
-                        m, mname, out_size, out_srs, out_dtype,
-                        turbo, warp_kwargs,
-                    ))
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return tiles.mapInPandas(gen, schema=TILE_OUT_SCHEMA)
-
-
 TILE_OUT_CONFIG_SCHEMA = StructType(
     list(TILE_OUT_SCHEMA.fields) + [StructField("config", StringType())])
 
 
-def warp_tiles_broadcast_variants(tiles: DataFrame, chunk_records, variants, *,
-                                  out_size=256, out_srs=3857, out_dtype=None,
-                                  turbo=False) -> DataFrame:
-    """Option-surface sweep in ONE job: broadcast the chunk records once
-    and warp every (config_tag, method, warp_kwargs) variant per matched
-    tile inside a single mapInPandas pass (VERDICT r3 'wrong' #4: the
-    per-variant union re-broadcast the same records 20x).  Emits
-    TILE_OUT_SCHEMA plus a ``config`` tag column."""
+def warp_tiles_broadcast(tiles: DataFrame, chunk_records, variants=None, *,
+                         method="near", methods=None, out_size=256,
+                         out_srs=3857, out_dtype=None, turbo=False,
+                         **warp_kwargs) -> DataFrame:
+    """Broadcast plan: ship the (small) chunk set to every executor ONCE
+    and mapInPandas over the tile table — zero shuffle of pixel payloads.
+    ``chunk_records``: list of dicts with CHUNK_SCHEMA fields (data=bytes).
+
+    Every matched tile is warped once per variant inside the same pass —
+    one broadcast, one scan of the tile table, one stitch per (tile,
+    variant) — instead of unioning per-variant jobs that each
+    re-broadcast the same records (VERDICT r3 'wrong' #4):
+      ``variants``  — (config_tag, method, warp_kwargs) triples, e.g. the
+                      reference option sweep (a variant's kwargs may set
+                      ``turbo``); emits TILE_OUT_SCHEMA plus a ``config``
+                      tag column;
+      otherwise     — one variant per entry of ``methods`` (default
+                      ``[method]``), all sharing ``warp_kwargs``; emits
+                      TILE_OUT_SCHEMA.
+    """
     spark = tiles.sparkSession
     bc = spark.sparkContext.broadcast(chunk_records)
+    tagged = variants is not None
+    if not tagged:
+        variants = [(None, m, warp_kwargs)
+                    for m in (methods if methods is not None else [method])]
     vs = []
     for tag, m, kw in variants:
         kw = dict(kw)
         vs.append((tag, m, m if isinstance(m, str) else "custom",
-                   bool(kw.pop("turbo", turbo)), kw))
+                   kw.pop("turbo", turbo), kw))
 
     def gen(batches):
         recs = bc.value
@@ -1093,12 +991,14 @@ def warp_tiles_broadcast_variants(tiles: DataFrame, chunk_records, variants, *,
                     row = _stitch_and_warp(
                         matched, int(z), int(x), int(y), m, mname,
                         out_size, out_srs, out_dtype, tb_v, kw)
-                    row["config"] = tag
+                    if tagged:
+                        row["config"] = tag
                     rows.append(row)
             if rows:
                 yield pd.DataFrame(rows)
 
-    return tiles.mapInPandas(gen, schema=TILE_OUT_CONFIG_SCHEMA)
+    return tiles.mapInPandas(
+        gen, schema=TILE_OUT_CONFIG_SCHEMA if tagged else TILE_OUT_SCHEMA)
 
 
 # broadcast the source when it fits comfortably in an executor broadcast;
@@ -1126,23 +1026,26 @@ def warp_fixture_to_tiles(spark, fixture, zooms, method="near", out_size=256,
       'broadcast_map' — zero-payload-shuffle path (source broadcast to
                         executors, mapInPandas over tiles)
       'chunks'        — chunk-anchored two-phase plan (large sources)
-      'cells' / 'broadcast' — the mosaic plans (see warp_tiles)
     """
-    inv = transformer(fixture["srs"], 4326)
-    bb4326 = reproject_bbox(fixture["bbox"], inv.transform, density=16, nan_strategy="skip")
-    # chunk-anchored plans consume the tile table only for metadata pair
-    # discovery (per-row cost trivial) — size its partitions by rows;
-    # the broadcast paths warp per tile row and keep the full width
-    rpp = 65536 if join_strategy in ("chunks", "cells") else None
-    tiles = tiles_df(spark, zooms, bbox_4326=bb4326, rows_per_partition=rpp)
     if join_strategy == "auto":
         join_strategy = ("broadcast_map"
                          if fixture["data"].nbytes <= AUTO_BROADCAST_BYTES
                          else "chunks")
+    if join_strategy not in ("broadcast_map", "chunks"):
+        raise ValueError(
+            f"warp_fixture_to_tiles: unknown join_strategy {join_strategy!r}; "
+            "expected 'auto', 'broadcast_map' or 'chunks'")
+    inv = transformer(fixture["srs"], 4326)
+    bb4326 = reproject_bbox(fixture["bbox"], inv.transform, density=16, nan_strategy="skip")
+    # the chunk-anchored plan consumes the tile table only for metadata
+    # pair discovery (per-row cost trivial) — size its partitions by rows;
+    # the broadcast plan warps per tile row and keeps the full width
+    rpp = 65536 if join_strategy == "chunks" else None
+    tiles = tiles_df(spark, zooms, bbox_4326=bb4326, rows_per_partition=rpp)
     if join_strategy == "broadcast_map":
         recs = fixture_chunk_records(fixture, chunk=chunk, halo=halo)
         return warp_tiles_broadcast(tiles, recs, method=method,
                                     out_size=out_size, **kw)
     chunks = chunks_to_df(spark, fixture, chunk=chunk, halo=halo)
     return warp_tiles(tiles, chunks, method=method, out_size=out_size,
-                      join_strategy=join_strategy, chunk=chunk, halo=halo, **kw)
+                      chunk=chunk, halo=halo, **kw)

@@ -67,8 +67,8 @@ def get_spark(app_name: str = "geowarp-spark", master: str | None = None,
     if pretouch:
         # UseParallelGC: G1's FIRST full-heap cycle (triggered by the
         # first full-scale shuffle's allocation burst) costs 20-35 s of
-        # GC at 32 threads even on a pre-touched heap (bench/
-        # profile_confirm.py gc_ms deltas: 34.6 s / 20.2 s in two
+        # GC at 32 threads even on a pre-touched heap (round-5
+        # A/B profile, gc_ms deltas: 34.6 s / 20.2 s in two
         # interleaved G1 legs vs 1.7 s / 4.8 s under ParallelGC, equal
         # or better steady state).  The throughput collector is the
         # right default for batch analytics; a latency-sensitive

@@ -840,7 +840,7 @@ def tiff_chunks_df(spark, path, chunk=256, halo=8, level=0, scale=None):
     """Real-file ingestion: ``binaryFile`` source -> Arrow-batched
     per-file TIFF decode -> CHUNK_SCHEMA rows (same chunking + halo
     duplication as synthetic ingestion, so the output feeds
-    warp_tiles(join_strategy='chunks') unchanged).
+    warp_tiles unchanged).
 
     ``level``: overview IFD to decode (0 = full resolution).  ``scale``:
     instead of a fixed level, pick PER FILE the coarsest overview still
