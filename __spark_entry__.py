@@ -250,9 +250,10 @@ _PIP_TRIANGLE_SQL = f"""
 
 def _knn_queries(spark):
     # query 4 sits in a sparse polar region: its z4/ring2 cell disk holds
-    # fewer than k near points, so knn_join_cells must ring-widen to stay
-    # exact (the oracle is the brute-force rank — any silent under-fill
-    # or non-nearest result hash-mismatches)
+    # fewer than k near points, so knn_join_cells' certified ring must
+    # reach past the ring=2 floor to stay exact (the oracle is the
+    # brute-force rank — any silent under-fill or non-nearest result
+    # hash-mismatches)
     return spark.sql(
         "SELECT 1 AS query_id, 0.0 AS qlon, 40.0 AS qlat "
         "UNION ALL SELECT 2, -5.0, 35.0 UNION ALL SELECT 3, 120.0, -45.0 "

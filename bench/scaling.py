@@ -100,7 +100,7 @@ def _job_join(spark, sf_dir, replication=None):
     pip_rows = pip_agg.collect()
     n_joined = sum(r["n"] for r in pip_rows)
     stages["pip_join"] = round(time.time() - t, 3)
-    # 3. kNN via cell-disk candidates (exact, ring-widening)
+    # 3. kNN via cell-disk candidates (exact, one certified pass)
     t = time.time()
     qdf = spark.sql(
         "SELECT 1 AS query_id, 0.0 AS qlon, 40.0 AS qlat "

@@ -84,8 +84,8 @@ def test_hilbert_spark_chain_matches_numpy(spark):
 
 def test_knn_cells_hilbert_equals_brute(spark):
     """J5 battery under the new scheme: cells path == brute force,
-    including the ring-widening multipass (sparse region query) and the
-    polar-clamp regression case."""
+    including a sparse-region query that needs a wide certified ring and
+    the polar-clamp regression case."""
     from geowarp_spark.operators.spatial import knn_join, knn_join_cells
 
     rng = np.random.default_rng(13)

@@ -185,8 +185,8 @@ def test_knn_cells_equals_brute(spark, sf_dir):
 
     brute = {tuple(r) for r in em.q_knn(spark, sf_dir).collect()}
     cells = {tuple(r) for r in em.q_knn_cells(spark, sf_dir).collect()}
-    # 4 queries x k=5; query 4 is in a sparse polar region so the cells
-    # path must ring-widen past the initial ring=2 disk to agree with brute
+    # 4 queries x k=5; query 4 is in a sparse polar region so its
+    # certified ring must reach past the ring=2 floor to agree with brute
     assert brute == cells and len(brute) == 20
 
 
@@ -207,54 +207,12 @@ def test_knn_cells_polar_opposite_latitude(spark):
     assert cells == brute
 
 
-def test_knn_cells_annulus_disjoint_from_inner_disk(spark):
-    """Re-passes probe only NEW cells: disk(cur) \\ disk(prev) must not
-    intersect disk(prev), including clamp-collapsed polar duplicates."""
-    from geowarp_spark.operators.spatial import _disk_cells_sql
-
-    q = spark.createDataFrame(
-        [(0, 10.0, -89.0), (1, 179.9, 0.0), (2, 0.0, 89.9)],
-        "query_id long, qlon double, qlat double")
-    inner = _disk_cells_sql("qlon", "qlat", 4, 2)
-    annulus = f"array_except({_disk_cells_sql('qlon', 'qlat', 4, 4)}, {inner})"
-    rows = q.select(
-        F.size(F.expr(f"array_intersect({annulus}, {inner})")).alias("overlap"),
-        F.size(F.expr(annulus)).alias("n_new"),
-    ).collect()
-    for r in rows:
-        assert r["overlap"] == 0
-        assert r["n_new"] > 0
-
-
-def test_knn_cells_annulus_union_completeness(spark):
-    """disk(prev) ∪ annulus(prev→cur) must equal disk(cur) exactly —
-    incremental widening may never lose a cell (incl. polar clamping and
-    antimeridian wrap)."""
-    from geowarp_spark.operators.spatial import _disk_cells_sql
-
-    q = spark.createDataFrame(
-        [(0, 10.0, -89.5), (1, 179.95, 0.0), (2, -179.95, 89.5),
-         (3, 0.0, 0.0), (4, -90.0, 45.0)],
-        "query_id long, qlon double, qlat double")
-    for z, prev, cur in ((4, 1, 2), (4, 2, 4), (5, 4, 8), (3, 2, 7)):
-        inner = _disk_cells_sql("qlon", "qlat", z, prev)
-        full = _disk_cells_sql("qlon", "qlat", z, cur)
-        annulus = f"array_except({full}, {inner})"
-        rows = q.select(
-            F.size(F.expr(f"array_except({full}, array_union({inner}, {annulus}))"))
-            .alias("missing"),
-        ).collect()
-        assert all(r["missing"] == 0 for r in rows), (z, prev, cur)
-
-
 def test_knn_cells_multipass_exact_and_distributed(spark):
-    """A sparse far-away neighbor forces >= 2 widening passes; the result
-    must still be exact and must come back as a DISTRIBUTED plan (no
-    driver-side createDataFrame round-trip: localCheckpoint scans, not a
-    parallelized local collection of pre-collected rows)."""
+    """A sparse far-away neighbor needs a certified ring far past the
+    ring=1 floor; the result must still be exact."""
     from geowarp_spark.operators.spatial import knn_join, knn_join_cells
 
-    # 2 near points + 1 point ~40 degrees away: k=3 cannot settle at ring=1
+    # 2 near points + 1 point ~40 degrees away: k=3 needs a wide ring
     pts = spark.createDataFrame(
         [(0, 10.0, 10.0), (1, 10.1, 10.1), (2, 50.0, 10.0)],
         "doc_id long, lon double, lat double")
@@ -302,6 +260,137 @@ def test_knn_cells_many_queries_bounded_plan(spark):
            out.join(qs.select("query_id"), "query_id", "left_semi")
            .select(*[c for c in knn_join(pts, qs, k=3).columns]).collect()}
     assert sub == brute
+
+
+def _knn_edge_tables(rng):
+    """Points and queries for the kNN exactness checks: a dense cluster,
+    a sparse world, rows on both sides of the antimeridian and at both
+    poles, and ten exact duplicates so ties straddle the k-th rank."""
+    n_world = 240
+    lon = np.concatenate([rng.uniform(5, 8, 120), rng.uniform(-180, 180, n_world),
+                          rng.uniform(179.8, 180.0, 8), rng.uniform(-180.0, -179.8, 8),
+                          rng.uniform(-180, 180, 16), np.full(10, 42.0)])
+    lat = np.concatenate([rng.uniform(44, 46, 120), rng.uniform(-90, 90, n_world),
+                          rng.uniform(-5, 5, 16),
+                          np.r_[rng.uniform(89.8, 90.0, 8), rng.uniform(-90.0, -89.8, 8)],
+                          np.full(10, -12.5)])
+    pts = [(int(i), float(a), float(b)) for i, (a, b) in enumerate(zip(lon, lat))]
+    qs = [(0, 179.95, 0.0), (1, -179.95, 2.0), (2, 100.0, 89.9), (3, -60.0, -89.9),
+          (4, 6.5, 45.0), (5, 42.0, -12.5), (6, -120.0, 30.0), (7, 0.0, 0.0)]
+    return pts, qs
+
+
+def test_certified_rings_cover_the_true_kth_neighbour():
+    """Property of the certified radius, on the driver alone: for random
+    tables (wrap, poles, duplicates, k above the row count) every point
+    at or inside the brute-force k-th distance lies in the query's
+    disk(R) under the same cell arithmetic the gather uses."""
+    from geowarp_spark.operators.spatial import _certified_rings
+
+    def cells(lon, lat, z):
+        n = 1 << z
+        return (np.clip(np.floor((lon + 180.0) / 360.0 * n), 0, n - 1).astype(np.int64),
+                np.clip(np.floor((90.0 - lat) / 180.0 * n), 0, n - 1).astype(np.int64))
+
+    for seed in range(12):
+        rng = np.random.default_rng(seed)
+        pts, qs = _knn_edge_tables(rng)
+        keep = rng.random(len(pts)) < rng.choice([0.05, 0.5, 1.0])
+        lon = np.array([p[1] for p in pts])[keep]
+        lat = np.array([p[2] for p in pts])[keep]
+        qlon = np.r_[[q[1] for q in qs], rng.uniform(-180, 180, 24)]
+        qlat = np.r_[[q[2] for q in qs], rng.uniform(-90, 90, 24)]
+        z = int(rng.integers(2, 12))
+        k = int(rng.choice([1, 5, 20, len(lon) + 3]))
+        zc = min(z, 10)
+        grid = np.zeros((1 << zc, 1 << zc), np.int64)
+        gx, gy = cells(lon, lat, zc)
+        np.add.at(grid, (gy, gx), 1)
+        rings = _certified_rings(grid, qlon, qlat, k, z, 1)
+        n = 1 << z
+        px, py = cells(lon, lat, z)
+        qx, qy = cells(qlon, qlat, z)
+        for i in range(len(qlon)):
+            d2 = (lon - qlon[i]) ** 2 + (lat - qlat[i]) ** 2
+            if len(d2) < k:
+                assert rings[i] == n - 1, (seed, i)
+                continue
+            need = d2 <= np.sort(d2)[k - 1]
+            dx = np.abs(px[need] - qx[i])
+            dx = np.minimum(dx, n - dx)
+            dy = np.abs(py[need] - qy[i])
+            assert rings[i] >= 1 and max(dx.max(), dy.max()) <= rings[i], (seed, i, z, k)
+
+
+@pytest.mark.parametrize("scheme", ["equirect", "hilbert"])
+def test_knn_cells_exact_at_edges(spark, scheme):
+    """knn_join_cells == knn_join brute force, every column incl. rank,
+    for queries at lon +-179.95 (wrap), lat +-89.9 (clamped rows), on
+    duplicate coordinates (ties broken on doc_id), with k above the
+    number of points (all points return), on an empty points table
+    (0 rows, no error) and with a ring= floor above the certified R."""
+    from geowarp_spark.operators.spatial import (_certified_rings, _count_grid,
+                                                 knn_join, knn_join_cells)
+
+    pts_rows, q_rows = _knn_edge_tables(np.random.default_rng(7))
+    pts = spark.createDataFrame(pts_rows, "doc_id long, lon double, lat double")
+    q = spark.createDataFrame(q_rows, "query_id long, qlon double, qlat double")
+    few = pts.filter(F.col("doc_id") % 97 == 0)             # 5 points
+    empty = pts.limit(0)
+
+    def same(p, k, z, ring):
+        brute = {tuple(r) for r in knn_join(p, q, k=k).collect()}
+        got = {tuple(r) for r in knn_join_cells(p, q, k=k, z=z, ring=ring,
+                                                scheme=scheme).collect()}
+        assert got == brute, (k, z, ring, sorted(brute ^ got)[:6])
+        return brute
+
+    # duplicates: query 5 sits on ten equal points, so ranks 1..7 are ties
+    top = same(pts, 7, 6, 1)
+    dup = sorted(r[1] for r in top if r[0] == 5)
+    assert dup == list(range(len(pts_rows) - 10, len(pts_rows) - 3))
+    # a ring floor above every certified R only adds candidates
+    grid = _count_grid(pts, 6, "lon", "lat")
+    rings = _certified_rings(grid, np.array([r[1] for r in q_rows]),
+                             np.array([r[2] for r in q_rows]), 7, 6, 1)
+    assert rings.max() < 20
+    same(pts, 7, 6, 20)
+    # k above the row count: full cover, every point for every query
+    assert len(same(few, 6, 5, 1)) == 5 * len(q_rows)
+    assert knn_join_cells(empty, q, k=3, z=5, scheme=scheme).count() == 0
+
+
+def test_knn_cells_single_action_free(spark):
+    """The result is a plain lazy plan: no localCheckpoint runs inside
+    the call or sits in its lineage, and count() then collect() on the
+    same DataFrame agree."""
+    from pyspark.sql import DataFrame
+
+    from geowarp_spark.operators.spatial import knn_join, knn_join_cells
+
+    pts_rows, q_rows = _knn_edge_tables(np.random.default_rng(3))
+    pts = spark.createDataFrame(pts_rows, "doc_id long, lon double, lat double")
+    q = spark.createDataFrame(q_rows, "query_id long, qlon double, qlat double")
+    cls = type(pts)
+    calls = []
+    orig = cls.localCheckpoint
+
+    def spy(self, *a, **kw):
+        calls.append(1)
+        return orig(self, *a, **kw)
+
+    cls.localCheckpoint = spy
+    try:
+        out = knn_join_cells(pts, q, k=5, z=6)
+    finally:
+        cls.localCheckpoint = orig
+    assert issubclass(cls, DataFrame) and calls == []
+    lineage = out._jdf.queryExecution().toRdd().toDebugString()
+    assert "LocalCheckpointRDD" not in lineage and "localCheckpoint" not in lineage
+    n = out.count()
+    rows = out.collect()
+    assert n == len(rows) == 5 * len(q_rows)
+    assert {tuple(r) for r in rows} == {tuple(r) for r in knn_join(pts, q, k=5).collect()}
 
 
 def test_hilbert_range_pruning_pushdown_and_knn(spark, tmp_path):
@@ -743,15 +832,18 @@ def _plan(df):
 
 
 def test_knn_cells_candidates_broadcast_no_cartesian(spark, sf_dir):
-    from geowarp_spark.operators.spatial import _knn_cells_pass
+    """The candidate gather is a cell-id equi-join against the broadcast
+    query disks (a per-query ring column), never a cartesian product."""
+    from geowarp_spark.operators.spatial import _knn_candidates
     import __spark_entry__ as em
 
     pts = em._docs_pts(spark, sf_dir)
-    q = em._knn_queries(spark)
-    plan = _plan(_knn_cells_pass(pts, q, 5, 4, 2, "lon", "lat", "qlon", "qlat",
-                                 "doc_id", "query_id"))
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
+    q = em._knn_queries(spark).withColumn("_ring", F.lit(2))
+    for scheme in ("equirect", "hilbert"):
+        plan = _plan(_knn_candidates(pts, q, 4, "_ring", "lon", "lat", "qlon",
+                                     "qlat", "doc_id", "query_id", scheme))
+        assert "BroadcastHashJoin" in plan, scheme
+        assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
 
 
 def test_lsh_topk_no_cartesian_for_candidates(spark, sf_dir):
@@ -1422,16 +1514,13 @@ def test_warp_mosaic_mixed_dtype_raises(spark):
         out.collect()
 
 
-def test_knn_prune_coords_collected_once_per_todo_change(spark, tmp_path,
-                                                         monkeypatch):
-    """The prune-coordinate collect must run once per CHANGE of the
-    unsettled set, not once per widening pass (VERDICT r6 next #7): a
-    single query that widens through several rings keeps the same todo
-    set, so exactly ONE driver round-trip for coordinates happens."""
-    from pyspark.sql import DataFrame
-    from pyspark.sql import functions as F
-
-    from geowarp_spark.operators.spatial import (knn_join, knn_join_cells,
+def test_knn_round_trips_independent_of_ring(spark, tmp_path):
+    """One certified pass: a query settled at the smallest certified
+    ring and one that needs full cover cost the same driver round trips
+    (Spark jobs and collects inside the call), with Hilbert scan pruning
+    on, and both stay exact."""
+    from geowarp_spark.operators.spatial import (_certified_rings, _count_grid,
+                                                 knn_join, knn_join_cells,
                                                  write_hilbert_sorted)
 
     pts = spark.createDataFrame(
@@ -1442,28 +1531,29 @@ def test_knn_prune_coords_collected_once_per_todo_change(spark, tmp_path,
     stored = spark.read.parquet(path)
     q = spark.createDataFrame(
         [(0, 10.0, 10.0)], "query_id long, qlon double, qlat double")
-
-    cls = type(q)          # the concrete (classic/connect) DataFrame class
-    calls = []
-    orig = cls.collect
-
-    def spy(self):
-        calls.append(1)
-        return orig(self)
-
-    monkeypatch.setattr(cls, "collect", spy)
-    out = knn_join_cells(stored, q, k=3, z=6, ring=1, scheme="hilbert",
-                         prune_col="hcell")
-    n_collects_during_build = len(calls)
-    monkeypatch.setattr(cls, "collect", orig)
-    # multi-pass is forced (far third point cannot settle at ring=1) but
-    # the todo set never changes until the loop exits
-    assert n_collects_during_build == 1, n_collects_during_build
-    brute = {tuple(r) for r in knn_join(pts, q, k=3).collect()}
-    got = {tuple(r) for r in
-           out.select("query_id", "doc_id", "dist2", "rank").collect()} \
-        if "rank" in out.columns else {tuple(r) for r in out.collect()}
-    assert {t[:2] for t in got} == {t[:2] for t in brute}
+    grid = _count_grid(pts, 6, "lon", "lat")
+    sc = spark.sparkContext
+    cls = type(q)
+    trips = {}
+    for k in (1, 5):                       # 5 > 3 points: full cover
+        r = _certified_rings(grid, np.array([10.0]), np.array([10.0]), k, 6, 1)
+        assert r[0] == (2 if k == 1 else 63), r
+        calls = []
+        orig = {m: getattr(cls, m) for m in ("collect", "toPandas")}
+        for m, f in orig.items():
+            setattr(cls, m, lambda self, _f=f: calls.append(1) or _f(self))
+        sc.setJobGroup(f"knn-k{k}", "round trips")
+        try:
+            out = knn_join_cells(stored, q, k=k, z=6, ring=1, scheme="hilbert",
+                                 prune_col="hcell")
+        finally:
+            for m, f in orig.items():
+                setattr(cls, m, f)
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        trips[k] = (len(sc.statusTracker().getJobIdsForGroup(f"knn-k{k}")), len(calls))
+        assert {tuple(r) for r in out.select(*knn_join(pts, q, k=k).columns).collect()} \
+            == {tuple(r) for r in knn_join(pts, q, k=k).collect()}
+    assert trips[1] == trips[5] and trips[1][0] > 0, trips
 
 
 def test_bbox_cover_pruning_pip_and_rasterize(spark, tmp_path):
@@ -1736,7 +1826,7 @@ def test_lsh_bucket_vectorized_matches_sql(spark, sf_dir):
     """r8: the Arrow-vectorized lsh_bucket_expr must reproduce the
     interpreted SQL form bit-for-bit — including left-to-right float
     accumulation, NaN (Spark: NaN >= 0 is true), NULL vectors
-    (bucket 0) and empty vectors (all sign bits set) — for both the
+    (bucket 0) and empty vectors (also bucket 0) — for both the
     seed-0 family and a banded seed."""
     from geowarp_spark.operators.similarity import (lsh_bucket_expr,
                                                     lsh_bucket_sql_expr)
