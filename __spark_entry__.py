@@ -49,18 +49,20 @@ def _cell_sql(lon, lat, z):
 # measurement; guide §1.2 step 1 — don't redo work you throw
 # away).  Only the analyzed plan (path + schema + file listing) is
 # memoized; every action still scans the parquet files — no result or
-# data caching.  Keyed by applicationId so a new session never sees a
-# stale entry.  The temp-view registration itself (10 catalog calls,
+# data caching.  Keyed by the session object: temp views and the
+# DataFrames that register them belong to one SparkSession, and a
+# `newSession()` shares the applicationId but not the catalog.  The
+# temp-view registration itself (10 catalog calls,
 # measured 54 ms) is skipped when this exact (session, sf_dir) pair was
 # the one registered last — nothing in the repo registers competing
 # views with these names, so the views can only be stale when sf_dir
 # (or the session) changed.
-_VIEW_DFS: dict[tuple[str, str], dict] = {}
+_VIEW_DFS: dict[tuple[SparkSession, str], dict] = {}
 _VIEWS_LAST: list = [None]
 
 
 def _views(spark: SparkSession, sf_dir: str) -> None:
-    key = (spark.sparkContext.applicationId, sf_dir)
+    key = (spark, sf_dir)
     if _VIEWS_LAST[0] == key:
         return
     dfs = _VIEW_DFS.get(key)

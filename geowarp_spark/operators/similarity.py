@@ -86,6 +86,10 @@ def lsh_bucket_expr(vec_col: str, n_planes=12, seed=0):
       TRUE for NaN — mirrored with isnan();
     - a NULL vector yields bucket 0 (every CASE WHEN NULL falls to
       ELSE 0), mirrored explicitly;
+    - so does a vector with a NULL element (its dot folds to NULL).
+      Arrow hands that element to pandas as NaN, indistinguishable
+      from a real NaN, so the UDF also gets an ``exists(.. IS NULL)``
+      flag column;
     - an EMPTY vector also yields bucket 0: sequence(0, size-1) on
       size 0 is sequence(0, -1) = [0, -1], so zip_with pads x with
       NULLs and every dot folds to NULL -> ELSE 0 (pinned by the
@@ -99,10 +103,11 @@ def lsh_bucket_expr(vec_col: str, n_planes=12, seed=0):
     # NB: `from __future__ import annotations` stringifies hints, which
     # pandas_udf can't infer — set real annotations explicitly (same
     # workaround as the extract_invariant entry).
-    def _bucket_fn(v):
+    def _bucket_fn(v, has_null):
         out = np.zeros(len(v), dtype=np.int64)
         arrs = v.to_numpy()
-        isnull = np.array([a is None for a in arrs])
+        isnull = (np.array([a is None for a in arrs])
+                  | has_null.to_numpy(dtype=bool, na_value=False))
         dims = np.array([0 if a is None else len(a) for a in arrs])
         for d in np.unique(dims[~isnull]):
             if d == 0:
@@ -123,9 +128,10 @@ def lsh_bucket_expr(vec_col: str, n_planes=12, seed=0):
             out[idx] = b
         return pd.Series(out)
 
-    _bucket_fn.__annotations__ = {"v": pd.Series, "return": pd.Series}
+    _bucket_fn.__annotations__ = {"v": pd.Series, "has_null": pd.Series,
+                                  "return": pd.Series}
     _bucket = F.pandas_udf(_bucket_fn, "long")
-    return _bucket(F.col(vec_col))
+    return _bucket(F.col(vec_col), F.exists(vec_col, lambda x: x.isNull()))
 
 
 def brute_force_topk(emb: DataFrame, queries: DataFrame, k=10,

@@ -1826,15 +1826,17 @@ def test_lsh_bucket_vectorized_matches_sql(spark, sf_dir):
     """r8: the Arrow-vectorized lsh_bucket_expr must reproduce the
     interpreted SQL form bit-for-bit — including left-to-right float
     accumulation, NaN (Spark: NaN >= 0 is true), NULL vectors
-    (bucket 0) and empty vectors (also bucket 0) — for both the
-    seed-0 family and a banded seed."""
+    (bucket 0), vectors with a NULL element (bucket 0, though Arrow
+    delivers the element as NaN) and empty vectors (also bucket 0) —
+    for both the seed-0 family and a banded seed."""
     from geowarp_spark.operators.similarity import (lsh_bucket_expr,
                                                     lsh_bucket_sql_expr)
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     edge = spark.createDataFrame(
         [(100001, [float("nan"), 1.0]), (100002, []),
-         (100003, None), (100004, [-1e-300, 1e-300])],
+         (100003, None), (100004, [-1e-300, 1e-300]),
+         (100005, [1.0, None])],
         "vec_id long, embedding array<double>")
     both = emb.select("vec_id", F.col("embedding").cast("array<double>")
                       .alias("embedding")).unionByName(edge)
