@@ -1291,7 +1291,10 @@ def q_similarity_lsh(spark, sf_dir):  # ANN scale path — deterministic LSH,
 def _lsh_bucket_duck(vcol: str, n_planes: int, seed: int = 0) -> str:
     """DuckDB replica of similarity.lsh_bucket_expr: sign-bit bucket from
     the deterministic integer hyperplanes (seed 0: ((p*31+i*17)%7)-3;
-    seeded bands add the nonlinear-in-i term, similarity._plane_weight_sql)."""
+    seeded bands add the nonlinear-in-i term, similarity._plane_weight_sql).
+    list_sum skips NULL elements where Spark's fold turns NULL, so a
+    vector with a NULL element (list_count < len) is given bucket 0, as
+    both Spark forms give it."""
     terms = []
     for p in range(n_planes):
         if seed == 0:
@@ -1302,7 +1305,8 @@ def _lsh_bucket_duck(vcol: str, n_planes: int, seed: int = 0) -> str:
         dot = (f"list_sum(list_transform(range(1, len({vcol}) + 1), "
                f"i -> {vcol}[i] * {w}))")
         terms.append(f"(CASE WHEN ({dot}) >= 0 THEN {1 << p} ELSE 0 END)")
-    return "(" + " + ".join(terms) + ")"
+    return (f"(CASE WHEN list_count({vcol}) < len({vcol}) THEN 0 ELSE "
+            + " + ".join(terms) + " END)")
 
 
 def _lsh_oracle_sql(k=10, n_planes=8) -> str:

@@ -87,14 +87,20 @@ def unpack_hilbert(cell):
     return cell >> Z_BITS, cell & ((np.int64(1) << Z_BITS) - 1)
 
 
-def latlng_to_hilbert(lat, lon, z: int):
-    """Point -> Hilbert cell id (equirect axis mapping, as tiles.py)."""
-    lat = np.asarray(lat, dtype=np.float64)
-    lon = np.asarray(lon, dtype=np.float64)
+def _grid_xy(lon, lat, z: int):
+    """Equirect (x, y) cells of lon/lat points at zoom z, clipped to the
+    grid (the formulas of hilbert_xy_sql and tiles.cell_sql_expr)."""
     n = 1 << z
+    lon = np.asarray(lon, dtype=np.float64)
+    lat = np.asarray(lat, dtype=np.float64)
     x = np.clip(np.floor((lon + 180.0) / 360.0 * n), 0, n - 1).astype(np.int64)
     y = np.clip(np.floor((90.0 - lat) / 180.0 * n), 0, n - 1).astype(np.int64)
-    return pack_hilbert(z, xy_to_d(z, x, y))
+    return x, y
+
+
+def latlng_to_hilbert(lat, lon, z: int):
+    """Point -> Hilbert cell id (equirect axis mapping, as tiles.py)."""
+    return pack_hilbert(z, xy_to_d(z, *_grid_xy(lon, lat, z)))
 
 
 # ----------------------------------------------------------- SQL chain
@@ -164,12 +170,23 @@ def hilbert_nested_sql(inner_sql: str, lon_col: str, lat_col: str, z: int,
 def with_hilbert_cell(df, z: int, lon: str = "lon", lat: str = "lat",
                       out: str = "cell"):
     """DataFrame form of the same walk: one withColumns per level — all
-    pure JVM codegen (no UDF), Catalyst folds the CASE pipeline."""
+    pure JVM codegen (no UDF), Catalyst folds the CASE pipeline.  The
+    ``out`` column is stamped ``{"hilbert_zoom": z}`` (hilbert_walk)."""
     from pyspark.sql import functions as F
 
     x0, y0 = hilbert_xy_sql(lon, lat, z)
-    cur = (df.withColumn("hx0", F.expr(x0)).withColumn("hy0", F.expr(y0))
-           .withColumn("hd0", F.lit(0).cast("bigint")))
+    return hilbert_walk(df.withColumns({"hx0": F.expr(x0), "hy0": F.expr(y0)}),
+                        z, out)
+
+
+def hilbert_walk(df, z: int, out: str):
+    """Grid columns ``hx0``/``hy0`` (consumed) -> Hilbert id column
+    ``out`` stamped with metadata ``{"hilbert_zoom": z}``.  The stamp
+    survives parquet, filter and select; operators.spatial._prune_scan
+    checks its pruning zoom against it (else against a probed id)."""
+    from pyspark.sql import functions as F
+
+    cur = df.withColumn("hd0", F.lit(0).cast("bigint"))
     levels = hilbert_level_exprs(z, "hx", "hy", "hd")
     for i, (_s, hd, hx, hy) in enumerate(levels):
         j = i + 1
@@ -177,8 +194,8 @@ def with_hilbert_cell(df, z: int, lon: str = "lon", lat: str = "lat",
                                 f"hy{j}": F.expr(hy)})
                .drop(f"hx{i}", f"hy{i}", f"hd{i}"))
     last = len(levels)
-    return (cur.withColumn(out, F.lit(z << Z_BITS).cast("bigint")
-                           + F.col(f"hd{last}"))
+    cell = F.lit(z << Z_BITS).cast("bigint") + F.col(f"hd{last}")
+    return (cur.withColumn(out, cell.alias(out, metadata={"hilbert_zoom": z}))
             .drop(f"hx{last}", f"hy{last}", f"hd{last}"))
 
 # ------------------------------------------------------- range pruning
@@ -189,17 +206,23 @@ def disk_cell_ids(lats, lons, z: int, ring: int):
     query points (vectorized: #queries x (2r+1)^2 neighbor grid; lon
     wraps, lat clamps — identical to the SQL disk in operators.spatial).
     Returns sorted unique ids."""
-    lats = np.atleast_1d(np.asarray(lats, dtype=np.float64))
-    lons = np.atleast_1d(np.asarray(lons, dtype=np.float64))
     n = 1 << z
-    x0 = np.clip(np.floor((lons + 180.0) / 360.0 * n), 0, n - 1).astype(np.int64)
-    y0 = np.clip(np.floor((90.0 - lats) / 180.0 * n), 0, n - 1).astype(np.int64)
+    x0, y0 = _grid_xy(np.atleast_1d(lons), np.atleast_1d(lats), z)
     off = np.arange(-ring, ring + 1, dtype=np.int64)
     dx, dy = np.meshgrid(off, off)
     xs = np.mod(x0[:, None] + dx.ravel()[None, :], n)
     ys = np.clip(y0[:, None] + dy.ravel()[None, :], 0, n - 1)
     d = xy_to_d(z, xs.ravel(), ys.ravel())
     return np.unique(pack_hilbert(z, d))
+
+
+def _bbox_spans(bboxes, z: int):
+    """Inclusive (x0, x1, y0, y1) z-cell spans of lon/lat rectangles
+    ``(xmin, ymin, xmax, ymax)``, clipped to the grid."""
+    b = np.asarray(bboxes, dtype=np.float64).reshape(-1, 4)
+    x0, y1 = _grid_xy(b[:, 0], b[:, 1], z)
+    x1, y0 = _grid_xy(b[:, 2], b[:, 3], z)
+    return [tuple(map(int, s)) for s in zip(x0, x1, y0, y1)]
 
 
 def bbox_cover_cell_ids(bboxes, z: int):
@@ -210,34 +233,19 @@ def bbox_cover_cell_ids(bboxes, z: int):
     predicate); callers guard the cell count before enumerating.
     Boundary cells are included, so the id set is a SUPERSET of the
     cells any half-open bbox predicate can match."""
-    n = 1 << z
-    parts = []
-    for xmin, ymin, xmax, ymax in bboxes:
-        x0 = int(np.clip(np.floor((xmin + 180.0) / 360.0 * n), 0, n - 1))
-        x1 = int(np.clip(np.floor((xmax + 180.0) / 360.0 * n), 0, n - 1))
-        y0 = int(np.clip(np.floor((90.0 - ymax) / 180.0 * n), 0, n - 1))
-        y1 = int(np.clip(np.floor((90.0 - ymin) / 180.0 * n), 0, n - 1))
+    parts = [np.empty(0, np.int64)]
+    for x0, x1, y0, y1 in _bbox_spans(bboxes, z):
         xs, ys = np.meshgrid(np.arange(x0, x1 + 1, dtype=np.int64),
                              np.arange(y0, y1 + 1, dtype=np.int64))
-        d = xy_to_d(z, xs.ravel(), ys.ravel())
-        parts.append(pack_hilbert(z, d))
-    if not parts:
-        return np.array([], dtype=np.int64)
+        parts.append(pack_hilbert(z, xy_to_d(z, xs.ravel(), ys.ravel())))
     return np.unique(np.concatenate(parts))
 
 
 def bbox_cover_cell_count(bboxes, z: int) -> int:
     """Cheap upper bound on ``bbox_cover_cell_ids`` output size (no
     enumeration) — the guard callers check before materializing ids."""
-    n = 1 << z
-    total = 0
-    for xmin, ymin, xmax, ymax in bboxes:
-        x0 = int(np.clip(np.floor((xmin + 180.0) / 360.0 * n), 0, n - 1))
-        x1 = int(np.clip(np.floor((xmax + 180.0) / 360.0 * n), 0, n - 1))
-        y0 = int(np.clip(np.floor((90.0 - ymax) / 180.0 * n), 0, n - 1))
-        y1 = int(np.clip(np.floor((90.0 - ymin) / 180.0 * n), 0, n - 1))
-        total += (x1 - x0 + 1) * (y1 - y0 + 1)
-    return total
+    return sum((x1 - x0 + 1) * (y1 - y0 + 1)
+               for x0, x1, y0, y1 in _bbox_spans(bboxes, z))
 
 
 def coalesce_ranges(ids, max_ranges: int | None = None):

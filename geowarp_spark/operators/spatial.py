@@ -20,32 +20,64 @@ from pyspark.sql import functions as F
 
 from ..grid.hilbert import (Z_BITS, bbox_cover_cell_count,
                             bbox_cover_cell_ids, coalesce_ranges,
-                            disk_cell_ids, hilbert_level_exprs,
+                            disk_cell_ids, hilbert_walk, hilbert_xy_sql,
                             with_hilbert_cell)
 from ..grid.tiles import X_BITS, cell_sql_expr
 
-# Driver-side guard for scan-pruning cover enumeration (shared by
-# pip_join_bbox, knn_join_cells and pages_pipeline.pixel_counts —
-# hoisted r8, VERDICT r7 nit #2): covers are enumerated on the driver
-# as numpy id arrays, so bound the cell count at ~4M ids (~32 MB of
-# int64, well under driver headroom).  Past that the cover spans most
-# of the grid anyway — a scan predicate would prune almost nothing, so
-# pruning is skipped rather than risking driver memory.
+# Driver-side guard for _prune_scan's cover enumeration: at most ~4M
+# ids (~32 MB of int64).  A larger cover spans most of the grid anyway,
+# so its scan predicate would prune almost nothing.
 COVER_GUARD_CELLS = 4_000_000
 
 
 def cell_range_predicate(ranges, cell_col: str = "hcell"):
-    """OR-of-closed-intervals predicate over a cell id column.  On a
+    """OR-of-closed-intervals predicate over a cell id column, parsed
+    from ONE SQL string ``(col BETWEEN lo AND hi) OR ...`` (building it
+    Column by Column costs two py4j round trips per bound).  On a
     parquet/Iceberg-backed table the bounds reach the scan as
     PushedFilters (GreaterThanOrEqual/LessThanOrEqual), so row groups
     whose min-max stats miss every interval are skipped without
     decoding — the property Hilbert ids were built for (a spatial disk
     is a handful of numeric runs)."""
-    pred = None
-    for lo, hi in ranges:
-        p = (F.col(cell_col) >= int(lo)) & (F.col(cell_col) <= int(hi))
-        pred = p if pred is None else (pred | p)
-    return pred if pred is not None else F.lit(False)
+    terms = [f"(`{cell_col}` BETWEEN {int(lo)}L AND {int(hi)}L)"
+             for lo, hi in ranges]
+    return F.expr(" OR ".join(terms) or "false")
+
+
+def _stored_zoom(points: DataFrame, col: str):
+    """(zoom, source) of a stored Hilbert column: its ``hilbert_zoom``
+    stamp (with_hilbert_cell), else the high bits of one stored id from
+    a limit-1 probe job; zoom is None for an empty unstamped table."""
+    z = points.schema[col].metadata.get("hilbert_zoom")
+    if z is not None:
+        return int(z), "stamp"
+    probe = points.select(F.col(col).alias("_c")).limit(1).collect()
+    return (int(probe[0]["_c"]) >> Z_BITS if probe else None), "probe"
+
+
+def _prune_scan(points: DataFrame, col: str, z: int | None, cover_ids,
+                cover_size, max_ranges: int = 64) -> DataFrame:
+    """The one Hilbert scan-pruning step (pip_join_bbox, knn_join_cells,
+    pages_pipeline.pixel_counts): filter ``points`` to the coalesced id
+    ranges (<= ``max_ranges``, a superset) of a cover at zoom ``z``.
+    ``cover_ids``/``cover_size`` are zero-argument callables giving the
+    sorted cover ids and a cheap upper bound on their count; past
+    COVER_GUARD_CELLS ``points`` is returned unpruned.  Ids carry their
+    zoom in the high bits, so a ``z`` other than _stored_zoom's would
+    silently filter every row: that raises ValueError instead."""
+    if z is None:
+        raise ValueError("prune_col requires prune_z (the zoom the "
+                         "stored Hilbert column was written at)")
+    stored_z, source = _stored_zoom(points, col)
+    if stored_z is not None and stored_z != int(z):
+        raise ValueError(
+            f"prune_z={z} does not match the zoom the stored column "
+            f"{col!r} was written at ({stored_z}, from the {source}); "
+            "pruning with it would silently filter all rows")
+    if cover_size() > COVER_GUARD_CELLS:
+        return points
+    ranges = coalesce_ranges(cover_ids(), max_ranges=max_ranges)
+    return points.filter(cell_range_predicate(ranges, col))
 
 
 def write_hilbert_sorted(df: DataFrame, path: str, z: int, lon="lon",
@@ -57,7 +89,8 @@ def write_hilbert_sorted(df: DataFrame, path: str, z: int, lon="lon",
     it (files hold disjoint id ranges) and sorts within files (row-group
     min-max stats become tight intervals).  Small row groups by default
     so pruning granularity is fine; at scale Iceberg's sort-order spec
-    plays the same role."""
+    plays the same role.  The column keeps with_hilbert_cell's
+    ``hilbert_zoom`` stamp, so pruned reads check their zoom for free."""
     (with_hilbert_cell(df, z, lon=lon, lat=lat, out=cell_col)
      .repartitionByRange(num_files, cell_col)
      .sortWithinPartitions(cell_col)
@@ -75,47 +108,26 @@ def pip_join_bbox(points: DataFrame, boxes: DataFrame, lon="lon", lat="lat",
     is small relative to pages — north rule 'broadcast of the
     tile-polygon index').
 
-    ``prune_col``/``prune_z`` (round 7, VERDICT r6 next #5): when the
-    points table is CELL-SORTED on a stored Hilbert column at zoom
-    ``prune_z`` (write_hilbert_sorted), the boxes' tile-cover id ranges
-    become a scan predicate — parquet min-max stats skip row groups
-    outside every box before the exact join condition runs.  The cover
-    is a superset (boundary cells included), so results are identical;
-    the box collect is driver-side by nature (boxes are the SMALL
-    broadcast side already).  Pruning is skipped when the cover exceeds
-    the driver guard (the boxes span most of the grid — nothing to
-    prune)."""
-    p = points
+    ``prune_col``/``prune_z``: when the points table is CELL-SORTED on a
+    stored Hilbert column at zoom ``prune_z`` (write_hilbert_sorted),
+    _prune_scan turns the boxes' tile cover into a scan predicate, so
+    parquet min-max stats skip row groups outside every box before the
+    exact join condition runs; the cover is a superset, so results are
+    identical.  The stored zoom comes from the column's ``hilbert_zoom``
+    stamp, else a probe job; a different ``prune_z`` raises ValueError."""
     if prune_col is not None:
-        if prune_z is None:
-            raise ValueError("prune_col requires prune_z (the zoom the "
-                             "stored Hilbert column was written at)")
-        # cheap zoom validation (ADVICE r7 low): pack_hilbert stores the
-        # zoom in the id's high bits, so a prune_z differing from the
-        # stored column's zoom makes every interval disjoint from every
-        # stored id — the join would silently return EMPTY instead of
-        # erroring.  One stored id (limit-1 scan of one row group)
-        # settles it.
-        probe = points.select(F.col(prune_col).alias("_c")).limit(1).collect()
-        if probe:
-            stored_z = int(probe[0]["_c"]) >> Z_BITS
-            if stored_z != int(prune_z):
-                raise ValueError(
-                    f"prune_z={prune_z} does not match the zoom the stored "
-                    f"column {prune_col!r} was written at ({stored_z}); "
-                    "pruning with it would silently filter all rows")
         bbs = [(r["xmin"], r["ymin"], r["xmax"], r["ymax"])
                for r in boxes.select("xmin", "ymin", "xmax", "ymax")
                .collect()]
-        if bbox_cover_cell_count(bbs, prune_z) <= COVER_GUARD_CELLS:
-            ids = bbox_cover_cell_ids(bbs, prune_z)
-            ranges = coalesce_ranges(ids, max_ranges=prune_max_ranges)
-            p = p.filter(cell_range_predicate(ranges, prune_col))
+        points = _prune_scan(points, prune_col, prune_z,
+                             lambda: bbox_cover_cell_ids(bbs, prune_z),
+                             lambda: bbox_cover_cell_count(bbs, prune_z),
+                             prune_max_ranges)
     cond = (
         (F.col(lon) >= F.col("xmin")) & (F.col(lon) < F.col("xmax"))
         & (F.col(lat) >= F.col("ymin")) & (F.col(lat) < F.col("ymax"))
     )
-    return p.join(F.broadcast(boxes), cond)
+    return points.join(F.broadcast(boxes), cond)
 
 
 def pip_join_polygon(points: DataFrame, polys: DataFrame, lon="lon", lat="lat") -> DataFrame:
@@ -204,13 +216,11 @@ def _disk_cells_sql(qlon, qlat, z, ring):
     query's cell, as a Spark SQL array expression.  Lon wraps (pmod),
     lat clamps to the poles — matching cell_sql_expr's point encoding."""
     n = 1 << z
-    zp = z << 58
-    qx = f"CAST(least(greatest(floor(({qlon} + 180.0) / 360.0 * {n}), 0), {n - 1}) AS BIGINT)"
-    qy = f"CAST(least(greatest(floor((90.0 - {qlat}) / 180.0 * {n}), 0), {n - 1}) AS BIGINT)"
+    qx, qy = hilbert_xy_sql(qlon, qlat, z)
     return (
         f"array_distinct(flatten(transform(sequence(-{ring}, {ring}), dx -> "
         f"transform(sequence(-{ring}, {ring}), dy -> "
-        f"{zp}L + pmod({qx} + dx, {n}) * {1 << 29}L + "
+        f"{z << 58}L + pmod({qx} + dx, {n}) * {1 << 29}L + "
         f"least(greatest({qy} + dy, 0), {n - 1})))))"
     )
 
@@ -230,28 +240,14 @@ def _hilbert_disk(queries, z, ring, qlon, qlat):
     _disk_cells_sql, encodes each neighbor through the same unrolled
     Hilbert walk, and drops clamp-collapsed polar duplicates by cell id."""
     n = 1 << z
-    x0, y0 = (f"CAST(least(greatest(floor(({qlon} + 180.0) / 360.0 * {n}), 0), "
-              f"{n - 1}) AS BIGINT)",
-              f"CAST(least(greatest(floor((90.0 - {qlat}) / 180.0 * {n}), 0), "
-              f"{n - 1}) AS BIGINT)")
+    x0, y0 = hilbert_xy_sql(qlon, qlat, z)
     d = (queries
          .withColumn("dx", F.explode(F.expr(f"sequence(-{ring}, {ring})")))
          .withColumn("dy", F.explode(F.expr(f"sequence(-{ring}, {ring})")))
-         .withColumn("hx0", F.expr(f"pmod({x0} + dx, {n})"))
-         .withColumn("hy0", F.expr(f"least(greatest({y0} + dy, 0), {n - 1})"))
-         .withColumn("hd0", F.lit(0).cast("bigint"))
+         .withColumns({"hx0": F.expr(f"pmod({x0} + dx, {n})"),
+                       "hy0": F.expr(f"least(greatest({y0} + dy, 0), {n - 1})")})
          .drop("dx", "dy"))
-    levels = hilbert_level_exprs(z, "hx", "hy", "hd")
-    for i, (_s, hd, hx, hy) in enumerate(levels):
-        j = i + 1
-        d = (d.withColumns({f"hd{j}": F.expr(hd), f"hx{j}": F.expr(hx),
-                            f"hy{j}": F.expr(hy)})
-             .drop(f"hx{i}", f"hy{i}", f"hd{i}"))
-    last = len(levels)
-    return (d.withColumn("cell", F.lit(z << Z_BITS).cast("bigint")
-                         + F.col(f"hd{last}"))
-            .drop(f"hx{last}", f"hy{last}", f"hd{last}")
-            .dropDuplicates([*queries.columns, "cell"]))
+    return hilbert_walk(d, z, "cell").dropDuplicates([*queries.columns, "cell"])
 
 
 def _knn_candidates(points, queries, z, ring, lon, lat, qlon, qlat,
@@ -403,14 +399,13 @@ def knn_join_cells(points: DataFrame, queries: DataFrame, k: int, z: int = 7,
     squares, so the count grid is always equirect and the proof is
     encoding-independent; only the gather's id packing differs.
 
-    ``prune_col`` (hilbert scheme only): name of a STORED Hilbert cell
-    column at the SAME zoom ``z`` (written with ``write_hilbert_sorted``).
-    The points SCAN is then pre-filtered with the disk(R) id intervals
-    (``disk_cell_ids`` per distinct R, coalesced to <= prune_max_ranges
-    ``cell BETWEEN lo AND hi``), which parquet min-max stats turn into
-    skipped row groups; the candidate equi-join still keys EXACT cell
-    ids, so the superset predicate never changes results.  Pruning is
-    skipped past COVER_GUARD_CELLS disk cells.
+    ``prune_col`` (hilbert scheme only): a STORED Hilbert cell column
+    at zoom ``z`` (write_hilbert_sorted).  _prune_scan pre-filters the
+    points scan to the disk(R) id intervals, so parquet min-max stats
+    skip row groups; the equi-join still keys EXACT cell ids, so results
+    never change.  The stored zoom comes from the column's
+    ``hilbert_zoom`` stamp, else a probe job; a different ``z`` raises
+    ValueError.
 
     The result is a plain lazy plan (no checkpoint): every action on it
     recomputes the same rows.
@@ -426,13 +421,14 @@ def knn_join_cells(points: DataFrame, queries: DataFrame, k: int, z: int = 7,
                              qlons, qlats, k, z, ring)
     q = queries.sparkSession.createDataFrame(
         qpdf.assign(_ring=rings), qcols.schema.add("_ring", "integer"))
-    if (prune_col is not None and len(rings)
-            and ((2 * rings.astype(np.int64) + 1) ** 2).sum() <= COVER_GUARD_CELLS):
-        ids = np.unique(np.concatenate(
-            [disk_cell_ids(qlats[rings == r], qlons[rings == r], z, int(r))
-             for r in np.unique(rings)]))
-        points = points.filter(cell_range_predicate(
-            coalesce_ranges(ids, max_ranges=prune_max_ranges), prune_col))
+    if prune_col is not None:
+        points = _prune_scan(
+            points, prune_col, z,
+            lambda: np.unique(np.concatenate(
+                [disk_cell_ids(qlats[rings == r], qlons[rings == r], z, int(r))
+                 for r in np.unique(rings)] or [np.empty(0, np.int64)])),
+            lambda: int(((2 * rings.astype(np.int64) + 1) ** 2).sum()),
+            prune_max_ranges)
     cand = _knn_candidates(points, q, z, "_ring", lon, lat, qlon, qlat,
                            point_id, query_id, scheme)
     return _topk_two_phase(cand, k, query_id, point_id)

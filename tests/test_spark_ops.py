@@ -1739,6 +1739,148 @@ def test_pip_prune_z_mismatch_raises(spark, tmp_path):
     assert ok.count() == 2
 
 
+def _stamped_and_unstamped(spark, tmp_path, pts, z):
+    """The same cell-sorted table twice: as write_hilbert_sorted leaves
+    it (hcell stamped with its zoom) and rewritten without the stamp,
+    the shape of a table written before the stamp existed."""
+    from geowarp_spark.operators.spatial import write_hilbert_sorted
+
+    path = str(tmp_path / "stamped.parquet")
+    write_hilbert_sorted(pts, path, z, num_files=2)
+    stamped = spark.read.parquet(path)
+    bare = str(tmp_path / "unstamped.parquet")
+    stamped.withMetadata("hcell", {}).write.parquet(bare)
+    unstamped = spark.read.parquet(bare)
+    assert stamped.schema["hcell"].metadata == {"hilbert_zoom": z}
+    assert unstamped.schema["hcell"].metadata == {}
+    # keyed by where _stored_zoom reads each table's zoom from
+    return {"stamp": stamped, "probe": unstamped}
+
+
+def test_prune_zoom_mismatch_raises_at_every_site(spark, tmp_path):
+    """A pruning zoom other than the stored column's would make every id
+    interval disjoint from every stored id and return 0 rows; each of
+    the three pruned operators raises instead, whether the zoom is read
+    from the column's stamp or from the probe fallback.  The matching
+    zoom still returns the unpruned answer."""
+    from geowarp_spark.operators.pages_pipeline import pixel_counts
+    from geowarp_spark.operators.spatial import (_stored_zoom, knn_join_cells,
+                                                 pip_join_bbox)
+
+    pts = spark.range(2_000).select(
+        F.col("id").alias("doc_id"),
+        (F.pmod(F.col("id") * 7919, F.lit(360_000)) / 1000.0 - 180.0).alias("lon"),
+        (F.pmod(F.col("id") * 104729, F.lit(170_000)) / 1000.0 - 85.0).alias("lat"))
+    q = spark.createDataFrame([(0, 10.0, 10.0), (1, -70.0, 40.0)],
+                              "query_id long, qlon double, qlat double")
+    boxes = spark.createDataFrame(
+        [(0, -20.0, -20.0, 20.0, 20.0)],
+        "tile_id long, xmin double, ymin double, xmax double, ymax double")
+    bbox = (-20.0, -20.0, 20.0, 20.0)
+    want_px = {tuple(r) for r in pixel_counts(pts, z=4, bbox=bbox).collect()}
+    assert len(want_px) > 0
+    for source, stored in _stamped_and_unstamped(spark, tmp_path, pts, 7).items():
+        assert _stored_zoom(stored, "hcell") == (7, source)
+        with pytest.raises(ValueError, match="does not match the zoom"):
+            knn_join_cells(stored, q, k=5, z=6, scheme="hilbert", prune_col="hcell")
+        with pytest.raises(ValueError, match="does not match the zoom"):
+            pixel_counts(stored, z=4, bbox=bbox, prune_col="hcell", prune_z=6)
+        with pytest.raises(ValueError, match="does not match the zoom"):
+            pip_join_bbox(stored, boxes, prune_col="hcell", prune_z=6)
+        assert knn_join_cells(stored, q, k=5, z=7, scheme="hilbert",
+                              prune_col="hcell").count() == 10, source
+        got_px = {tuple(r) for r in pixel_counts(
+            stored, z=4, bbox=bbox, prune_col="hcell", prune_z=7).collect()}
+        assert got_px == want_px, source
+
+
+def test_hilbert_zoom_stamp_survives_parquet_filter_select(spark, tmp_path):
+    """write_hilbert_sorted's hcell keeps with_hilbert_cell's zoom stamp
+    through the parquet write and read and through filter and select,
+    so a pruned call downstream of them still skips the probe job."""
+    from geowarp_spark.operators.spatial import (_stored_zoom,
+                                                 write_hilbert_sorted)
+
+    pts = spark.createDataFrame([(0, 10.0, 10.0), (1, -70.0, 40.0)],
+                                "doc_id long, lon double, lat double")
+    path = str(tmp_path / "stamp.parquet")
+    write_hilbert_sorted(pts, path, z=9, num_files=1)
+    df = spark.read.parquet(path).filter("lon > -100").select("hcell", "lon")
+    assert df.schema["hcell"].metadata == {"hilbert_zoom": 9}
+    assert _stored_zoom(df, "hcell") == (9, "stamp")
+
+
+def test_pip_prune_construction_runs_no_probe_job(spark, tmp_path):
+    """On a stamped table, building a pruned pip_join_bbox launches as
+    many Spark jobs as the unpruned call (the boxes here are a local
+    table, so 0); an unstamped table pays exactly one probe job."""
+    from geowarp_spark.operators.spatial import pip_join_bbox
+
+    pts = spark.createDataFrame([(0, 10.0, 10.0), (1, 10.1, 10.1)],
+                                "doc_id long, lon double, lat double")
+    tables = _stamped_and_unstamped(spark, tmp_path, pts, 7)
+    boxes = spark.createDataFrame(pd.DataFrame(
+        {"tile_id": [1], "xmin": [9.0], "ymin": [9.0], "xmax": [11.0],
+         "ymax": [11.0]}))
+    sc = spark.sparkContext
+
+    def jobs(tag, build):
+        sc.setJobGroup(tag, "pip construction")
+        try:
+            build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(tag))
+
+    plain = jobs("pip-plain", lambda: pip_join_bbox(tables["stamp"], boxes))
+    stamped = jobs("pip-stamp", lambda: pip_join_bbox(
+        tables["stamp"], boxes, prune_col="hcell", prune_z=7))
+    probed = jobs("pip-probe", lambda: pip_join_bbox(
+        tables["probe"], boxes, prune_col="hcell", prune_z=7))
+    assert (plain, stamped, probed) == (0, 0, 1)
+
+
+def test_cell_range_predicate_pushes_column_built_bounds(spark, tmp_path):
+    """The one-string predicate reaches the parquet scan with the same
+    multiset of bounds as the Column-by-Column OR over the same 64
+    ranges."""
+    import contextlib
+    import io
+    import re
+    from collections import Counter
+
+    from geowarp_spark.grid.hilbert import (bbox_cover_cell_ids,
+                                            coalesce_ranges)
+    from geowarp_spark.operators.spatial import (cell_range_predicate,
+                                                 write_hilbert_sorted)
+
+    pts = spark.createDataFrame([(0, 10.0, 10.0)],
+                                "doc_id long, lon double, lat double")
+    path = str(tmp_path / "bounds.parquet")
+    write_hilbert_sorted(pts, path, z=12, num_files=1)
+    stored = spark.read.parquet(path)
+    bbs = [(8.0, 8.0, 12.0, 12.0), (-75.0, 38.0, -70.0, 42.0),
+           (138.0, -34.0, 142.0, -30.0)]
+    ranges = coalesce_ranges(bbox_cover_cell_ids(bbs, 12), max_ranges=64)
+    assert len(ranges) == 64
+    ref = None
+    for lo, hi in ranges:
+        p = (F.col("hcell") >= lo) & (F.col("hcell") <= hi)
+        ref = p if ref is None else (ref | p)
+
+    def bounds(pred):
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            stored.filter(pred).explain("formatted")
+        pushed = re.search(r"PushedFilters: (.*)", buf.getvalue()).group(1)
+        return Counter(re.findall(
+            r"((?:GreaterThan|LessThan)OrEqual)\(hcell,(-?\d+)\)", pushed))
+
+    got, want = bounds(cell_range_predicate(ranges, "hcell")), bounds(ref)
+    assert sum(want.values()) == 128 and got == want
+
+
 def test_centroid_assign_single_centroid(spark):
     """ADVICE r7: greatest() needs >= 2 args, so k=1 centroids (legal
     k-means output for a degenerate sample) must not break assignment."""
@@ -1849,3 +1991,31 @@ def test_lsh_bucket_vectorized_matches_sql(spark, sf_dir):
         for r in rows:
             assert r["vec_b"] == (r["sql_b"] if r["sql_b"] is not None
                                   else 0), r
+
+
+def test_lsh_duckdb_replica_matches_sql_on_edge_vectors(spark):
+    """The DuckDB oracle replica of the LSH bucket gives a vector with a
+    NULL element bucket 0, like the Spark SQL form (DuckDB's list_sum
+    skips NULLs, Spark's fold turns NULL), and agrees with it on empty,
+    NULL and NaN vectors too."""
+    import duckdb
+
+    import __spark_entry__ as em
+    from geowarp_spark.operators.similarity import lsh_bucket_sql_expr
+
+    vecs = [(1, [1.0, None]), (2, []), (3, None), (4, [float("nan"), 1.0])]
+    sdf = spark.createDataFrame(vecs, "vec_id long, v array<double>")
+    con = duckdb.connect()
+    # SQL literals: DuckDB's parameter binding would turn the NaN into NULL
+    con.execute("CREATE TABLE e AS SELECT * FROM (VALUES "
+                "(1, [1.0, NULL]::DOUBLE[]), (2, []::DOUBLE[]), "
+                "(3, NULL::DOUBLE[]), (4, ['nan'::DOUBLE, 1.0])) t(vec_id, v)")
+    for planes, seed in ((8, 0), (12, 2)):
+        duck = dict(con.execute(
+            f"SELECT vec_id, {em._lsh_bucket_duck('v', planes, seed)} "
+            "FROM e").fetchall())
+        spark_b = {r["vec_id"]: r["b"] for r in sdf.select(
+            "vec_id", lsh_bucket_sql_expr("v", planes, seed).alias("b"))
+            .collect()}
+        assert duck == spark_b, (planes, seed, duck, spark_b)
+        assert duck[1] == 0 and duck[4] != 0

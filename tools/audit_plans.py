@@ -47,11 +47,13 @@ def _audit_hilbert_pruning(spark):
     same shape test_hilbert_range_pruning_pushdown_and_knn uses and
     capture (a) the BETWEEN bounds reaching the scan as PushedFilters
     and (b) the measured row-group pruning from the executed plan's own
-    scan metrics."""
+    scan metrics, plus (c) where the pruning operators read the stored
+    zoom from: the column's hilbert_zoom stamp, or a probe job."""
     from pyspark.sql import functions as F
 
     from geowarp_spark.grid.hilbert import coalesce_ranges, disk_cell_ids
-    from geowarp_spark.operators.spatial import (cell_range_predicate,
+    from geowarp_spark.operators.spatial import (_stored_zoom,
+                                                 cell_range_predicate,
                                                  write_hilbert_sorted)
 
     z = 7
@@ -62,6 +64,8 @@ def _audit_hilbert_pruning(spark):
     path = "/tmp/plans_audit_pts_sorted.parquet"
     write_hilbert_sorted(pts, path, z, num_files=8, row_group_bytes=1 << 17)
     stored = spark.read.parquet(path)
+    zoom, source = _stored_zoom(stored, "hcell")
+    print(f"hilbert audit: stored zoom z{zoom} read from the {source}")
     ids = disk_cell_ids([10.0, 40.0, -30.0], [10.0, -70.0, 140.0], z, ring=2)
     ranges = coalesce_ranges(ids, max_ranges=32)
     flt = stored.filter(cell_range_predicate(ranges, "hcell"))
@@ -91,6 +95,10 @@ def _audit_hilbert_pruning(spark):
         f"({100.0 * n_pruned / n_full:.1f}%)** — granularity-bound by the "
         "row-group size, exactness preserved by the downstream cell "
         "equi-join (the intervals are a superset).",
+        "",
+        f"Stored zoom: z{zoom}, read from the {source} (`stamp`: the "
+        "column's `hilbert_zoom` metadata, free; `probe`: one limit-1 "
+        "job per pruned call).",
         "",
         "```",
         buf.getvalue().strip()[:3000],
