@@ -12,9 +12,12 @@ the z+log2(px) cell grid — rollups and rasters agree by construction.
 Plan shape (scale posture):
   pages ──JVM exprs──> (lon, lat, cell@z)          no UDF, no shuffle
         ──groupBy(cell, px, py).count()            one shuffle, partial aggs
-        ──groupBy(cell).applyInPandas(paint)       second shuffle on tile id
-                                                   (small: one row per
+        ──repartition(n_cores, cell)               second shuffle on tile id
+          .sortWithinPartitions(cell)              (small: one row per
                                                     nonzero pixel)
+        ──mapInPandas(paint)                       streamed: every tile of
+                                                   an Arrow batch in one
+                                                   numpy pass
   -> tile rows (binary uint32 count grids) -> CheckpointStore.commit
 """
 
@@ -82,6 +85,10 @@ def pixel_counts(points: DataFrame, z: int, px_bits: int = 6,
     )
 
 
+# upper bound on the uint32 grid block behind one yielded paint frame
+_PAINT_FRAME_BYTES = 64 << 20
+
+
 def rasterize_tiles(points: DataFrame, z: int, px_bits: int = 6,
                     lon="lon", lat="lat") -> DataFrame:
     """Paint per-pixel counts into dense uint32 tile rasters.
@@ -89,22 +96,64 @@ def rasterize_tiles(points: DataFrame, z: int, px_bits: int = 6,
     Input to the pandas stage is already aggregated (one row per nonzero
     pixel), so the Arrow exchange carries counts, not points — the heavy
     reduction happened JVM-side with partial aggregation.
+
+    The paint is one streamed pass, not a Python call per tile: the
+    counts are hash-partitioned on ``cell`` to ``defaultParallelism``
+    partitions (explicit width, as in warp_tiles), sorted within each
+    partition, and a mapInPandas paints every tile of an Arrow batch at
+    once — tile runs from ``np.unique`` on the sorted cells, one
+    fancy-index assignment into an ``(n_tiles, size * size)`` block
+    (exact: ``(cell, px, py)`` is unique after the groupBy) and
+    ``n_pages`` from one segmented sum.  The last tile of a batch may
+    continue in the next, so its rows are held back and painted with
+    the batch that closes it.
+
+    Memory: at most one tile's rows (``size**2``) are held across a
+    batch boundary, and each yielded frame holds at most
+    ``_PAINT_FRAME_BYTES`` (64 MB) of grids — or one tile when a single
+    grid is larger.
     """
     size = 1 << px_bits
+    npix = size * size
+    per_frame = max(1, _PAINT_FRAME_BYTES // (4 * npix))
     counts = pixel_counts(points, z, px_bits, lon, lat)
+    n_cores = points.sparkSession.sparkContext.defaultParallelism
 
-    def paint(pdf: pd.DataFrame) -> pd.DataFrame:
-        grid = np.zeros((size, size), dtype=np.uint32)
-        grid[pdf["py"].to_numpy(), pdf["px"].to_numpy()] = pdf["n"].to_numpy()
-        return pd.DataFrame([{
-            "cell": int(pdf["cell"].iloc[0]),
-            "z": z,
-            "px_size": size,
-            "n_pages": int(pdf["n"].sum()),
-            "data": grid.tobytes(),
-        }])
+    def tiles(cell, px, py, n):
+        # rows of whole tiles, sorted by cell -> frames of <= per_frame tiles
+        ids, start, inv = np.unique(cell, return_index=True, return_inverse=True)
+        bounds = np.r_[start, len(cell)]
+        for a in range(0, len(ids), per_frame):
+            b = min(a + per_frame, len(ids))
+            lo, hi = bounds[a], bounds[b]
+            grid = np.zeros((b - a, npix), dtype=np.uint32)
+            grid[inv[lo:hi] - a, py[lo:hi] * size + px[lo:hi]] = n[lo:hi]
+            yield pd.DataFrame({
+                "cell": ids[a:b],
+                "z": np.full(b - a, z, dtype=np.int32),
+                "px_size": np.full(b - a, size, dtype=np.int32),
+                "n_pages": np.add.reduceat(n[lo:hi], start[a:b] - lo),
+                "data": [g.tobytes() for g in grid],
+            })
 
-    return counts.groupBy("cell").applyInPandas(paint, schema=RASTER_TILE_SCHEMA)
+    def paint(batches):
+        held = None   # columns of the tile the last batch left open
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            cols = [pdf[c].to_numpy() for c in ("cell", "px", "py", "n")]
+            if held is not None:
+                cols = [np.concatenate(pair) for pair in zip(held, cols)]
+            cut = int(np.searchsorted(cols[0], cols[0][-1]))
+            if cut:
+                yield from tiles(*(c[:cut] for c in cols))
+            held = [c[cut:] for c in cols]
+        if held is not None:
+            yield from tiles(*held)
+
+    return (counts.repartition(n_cores, "cell")
+            .sortWithinPartitions("cell")
+            .mapInPandas(paint, schema=RASTER_TILE_SCHEMA))
 
 
 def pages_tile_pyramid(spark: SparkSession, sf_dir: str, z: int = 6,

@@ -2019,3 +2019,136 @@ def test_lsh_duckdb_replica_matches_sql_on_edge_vectors(spark):
             .collect()}
         assert duck == spark_b, (planes, seed, duck, spark_b)
         assert duck[1] == 0 and duck[4] != 0
+
+
+# ------------------------------------------------------------ rasterize
+
+
+def _raster_oracle(lon, lat, z, px_bits):
+    """Per-tile (n_pages, uint32 grid bytes) painted in numpy straight
+    from raw points, with the equirect cell math of cell_sql_expr."""
+    size = 1 << px_bits
+
+    def xy(zz):
+        n = 1 << zz
+        x = np.clip(np.floor((lon + 180.0) / 360.0 * n), 0, n - 1).astype(np.int64)
+        y = np.clip(np.floor((90.0 - lat) / 180.0 * n), 0, n - 1).astype(np.int64)
+        return x, y
+
+    cx, cy = xy(z)
+    fx, fy = xy(z + px_bits)
+    cell = (z << 58) + (cx << 29) + cy
+    out = {}
+    for c in np.unique(cell):
+        m = cell == c
+        grid = np.zeros((size, size), dtype=np.uint32)
+        np.add.at(grid, (fy[m] - cy[m] * size, fx[m] - cx[m] * size), 1)
+        out[int(c)] = (int(m.sum()), grid.tobytes())
+    return out
+
+
+def test_rasterize_tiles_matches_numpy_oracle_across_batches(spark):
+    """rasterize_tiles paints exactly the numpy oracle's grids and page
+    counts — clip-edge points, a dense cluster whose tile spans many
+    Arrow batches, sparse global points — at batch sizes that make
+    tiles straddle batch boundaries, and returns no rows on empty input."""
+    from geowarp_spark.operators.pages_pipeline import rasterize_tiles
+
+    rng = np.random.default_rng(11)
+    lon = np.r_[180.0, -180.0, 0.0, rng.normal(22.5, 3.0, 600),
+                rng.uniform(-180.0, 180.0, 400)]
+    lat = np.r_[-90.0, 90.0, 0.0, rng.normal(33.75, 2.0, 600),
+                rng.uniform(-90.0, 90.0, 400)]
+    pts = spark.createDataFrame(pd.DataFrame({"lon": lon, "lat": lat}))
+    want = _raster_oracle(lon, lat, 3, 4)
+    # the cluster's tile has far more nonzero pixels than the batch sizes
+    assert max(np.count_nonzero(np.frombuffer(g, np.uint32))
+               for _, g in want.values()) > 40
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    try:
+        for batch in ("4096", "7", "1"):
+            spark.conf.set(key, batch)
+            rows = rasterize_tiles(pts, z=3, px_bits=4).collect()
+            assert len(rows) == len(want), batch
+            for r in rows:
+                assert (r["z"], r["px_size"]) == (3, 16)
+                assert (r["n_pages"], bytes(r["data"])) == want[r["cell"]], batch
+        assert rasterize_tiles(pts.limit(0), z=3, px_bits=4).collect() == []
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_rasterize_tiles_px_bits_8_over_frame_limit(spark):
+    """At px_bits=8 one tile grid is 256 KB, so a paint task with more
+    than 256 tiles holds more than the 64 MB one output frame may carry
+    and must slice its frames; the sliced output still matches the
+    numpy oracle."""
+    import zlib
+
+    from geowarp_spark.operators.pages_pipeline import rasterize_tiles
+
+    n_cores = spark.sparkContext.defaultParallelism
+    # one point at the centre of every z6 tile whose cell id hashes to
+    # the first paint partition, two more in every third tile
+    centres = spark.range(1 << 12).select(
+        ((F.col("id") % 64 + 0.5) * (360.0 / 64) - 180.0).alias("lon"),
+        (90.0 - (F.floor(F.col("id") / 64) + 0.5) * (180.0 / 64)).alias("lat"),
+        (F.lit(6 << 58) + (F.col("id") % 64) * F.lit(1 << 29)
+         + F.floor(F.col("id") / 64)).cast("bigint").alias("cell"))
+    mine = centres.filter(F.pmod(F.hash("cell"), F.lit(n_cores)) == 0) \
+        .select("lon", "lat").toPandas()
+    extra = mine.iloc[::3]
+    pdf = pd.concat([mine, extra, extra + [0.7, 0.7]], ignore_index=True)
+    lon, lat = pdf["lon"].to_numpy(), pdf["lat"].to_numpy()
+    want = _raster_oracle(lon, lat, 6, 8)
+    out = rasterize_tiles(spark.createDataFrame(pdf), z=6, px_bits=8)
+    per_task = out.groupBy(F.spark_partition_id()).count().collect()
+    assert max(r["count"] for r in per_task) > (64 << 20) // (256 * 256 * 4)
+    got = {r["cell"]: (r["n_pages"], r["crc"]) for r in out.select(
+        "cell", "n_pages", F.crc32("data").alias("crc")).collect()}
+    assert got == {c: (n, zlib.crc32(g)) for c, (n, g) in want.items()}
+
+
+def test_rasterize_tiles_plan_streams_one_paint(spark):
+    """The paint is one mapInPandas over a cell-repartitioned, sorted
+    stream — no grouped pandas UDF — and the plan has exactly two
+    shuffles: the (cell, px, py) count aggregate and the explicit-width
+    repartition on cell."""
+    import re
+
+    from geowarp_spark.operators.pages_pipeline import rasterize_tiles
+
+    pts = spark.createDataFrame([(1.0, 2.0)], "lon double, lat double")
+    plan = _plan(rasterize_tiles(pts, z=3, px_bits=4))
+    assert "FlatMapGroupsInPandas" not in plan
+    assert len(re.findall(r"\bMapInPandas\b", plan)) == 1
+    exchanges = re.findall(r"Exchange (hashpartitioning\([^)]*\)), (\w+)", plan)
+    assert [(re.sub(r"#\d+L?", "", p), kind) for p, kind in exchanges] == [
+        (f"hashpartitioning(cell, {spark.sparkContext.defaultParallelism})",
+         "REPARTITION_BY_NUM"),
+        ("hashpartitioning(cell, px, py, 8)", "ENSURE_REQUIREMENTS"),
+    ]
+
+
+def test_pages_tile_pyramid_snapshot_matches_rasterize(spark, sf_dir, tmp_path):
+    """pages_tile_pyramid's committed snapshot holds exactly the tiles
+    rasterize_tiles paints from the same points, and its lineage rows
+    count every tile."""
+    from geowarp_spark.operators.pages_pipeline import (pages_tile_pyramid,
+                                                        rasterize_tiles)
+    from geowarp_spark.plans.lineage import CheckpointStore
+    from geowarp_spark.sources.pages import LAT_SQL, LON_SQL
+
+    def digest(df):
+        return sorted(tuple(r) for r in df.select(
+            "cell", "n_pages", F.crc32("data")).collect())
+
+    snap = pages_tile_pyramid(spark, sf_dir, z=4, px_bits=5,
+                              checkpoint_root=str(tmp_path))
+    pts = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        F.expr(LON_SQL).alias("lon"), F.expr(LAT_SQL).alias("lat"))
+    want = digest(rasterize_tiles(pts, z=4, px_bits=5))
+    assert len(want) > 0 and digest(snap) == want
+    lin = CheckpointStore(spark, str(tmp_path)).read_lineage().collect()
+    assert sum(r["tiles_emitted"] for r in lin) == len(want)

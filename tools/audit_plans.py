@@ -216,6 +216,45 @@ def _audit_mosaic_composite(spark):
     return det
 
 
+def _audit_rasterize(spark):
+    """rasterize_tiles paints in ONE streamed mapInPandas over a
+    cell-repartitioned, sorted stream: two shuffles (the (cell, px, py)
+    count aggregate and the explicit-width repartition on cell) and no
+    grouped pandas UDF, i.e. no Python call per tile."""
+    from pyspark.sql import functions as F
+
+    from geowarp_spark.operators.pages_pipeline import rasterize_tiles
+
+    pts = spark.range(10_000).select(
+        (F.rand(0) * 360.0 - 180.0).alias("lon"),
+        (F.rand(1) * 180.0 - 90.0).alias("lat"))
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        rasterize_tiles(pts, z=4, px_bits=6).explain("formatted")
+    plan = buf.getvalue()
+    n_exchange = len(re.findall(r"\(\d+\) Exchange\b", plan))
+    n_grouped = len(re.findall(r"\(\d+\) FlatMapGroupsInPandas\b", plan))
+    n_map = len(re.findall(r"\(\d+\) MapInPandas\b", plan))
+    det = [
+        "## rasterize_tiles streamed paint",
+        "",
+        "**Expectation:** the paint is one mapInPandas over a stream "
+        "repartitioned on cell to defaultParallelism and sorted within "
+        "partitions; every tile of an Arrow batch is painted in one numpy "
+        "pass, so the plan holds no grouped pandas UDF.",
+        "",
+        f"Measured: **{n_exchange} Exchange** ((cell, px, py) partial+final "
+        f"count; cell repartition), {n_map} MapInPandas, {n_grouped} "
+        "FlatMapGroupsInPandas (must be 0).",
+        "",
+        "```",
+        plan.strip()[:3000],
+        "```", "",
+    ]
+    assert n_grouped == 0, "rasterize paint fell back to a grouped pandas UDF"
+    return det
+
+
 def main():
     out_path = sys.argv[1] if len(sys.argv) > 1 else "BENCH/PLANS_r6.md"
     import __spark_entry__ as em
@@ -273,11 +312,12 @@ def main():
     out += summary
     out.append("")
     out += details
-    # round-6 plan shapes that live outside queries() (stored-table
-    # pruning, the certified kNN pass, the composite operator)
+    # plan shapes that live outside queries() (stored-table pruning, the
+    # certified kNN pass, the composite operator, the rasterize paint)
     out += _audit_hilbert_pruning(spark)
     out += _audit_knn_certified(spark)
     out += _audit_mosaic_composite(spark)
+    out += _audit_rasterize(spark)
     with open(out_path, "w") as f:
         f.write("\n".join(out))
     print(f"wrote {out_path} ({len(AUDITS)} plans)")
