@@ -54,9 +54,11 @@ def pixel_counts(points: DataFrame, z: int, px_bits: int = 6,
     predicate as pip_join_bbox).  With ``prune_col``/``prune_z`` on a
     cell-sorted pages table (write_hilbert_sorted), _prune_scan also
     pushes the bbox's Hilbert cover to the parquet scan; the exact bbox
-    filter still runs, so results never change.  The stored zoom comes
-    from the column's ``hilbert_zoom`` stamp, else a probe job; a
-    different ``prune_z`` raises ValueError.
+    filter still runs, so results never change.  ``prune_max_ranges``
+    is clamped to spatial.PRUNE_MAX_RANGES (the JIT budget); fewer
+    ranges stay a superset of the cover.  The stored zoom comes from the
+    column's ``hilbert_zoom`` stamp, else a probe job; a different
+    ``prune_z`` raises ValueError.
     """
     if bbox is not None:
         xmin, ymin, xmax, ymax = bbox

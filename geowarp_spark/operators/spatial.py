@@ -29,19 +29,30 @@ from ..grid.tiles import X_BITS, cell_sql_expr
 # so its scan predicate would prune almost nothing.
 COVER_GUARD_CELLS = 4_000_000
 
+# Most id ranges one pruned scan may test (the JIT budget): a guarded
+# range costs ~60 bytes of the scan stage's generated method, and
+# HotSpot runs any method over 8,000 bytes interpreted, ~2x slower.
+# 96 ranges (~6 KB) leave room for the operators fused into the stage.
+PRUNE_MAX_RANGES = 96
+
 
 def cell_range_predicate(ranges, cell_col: str = "hcell"):
     """OR-of-closed-intervals predicate over a cell id column, parsed
-    from ONE SQL string ``(col BETWEEN lo AND hi) OR ...`` (building it
-    Column by Column costs two py4j round trips per bound).  On a
-    parquet/Iceberg-backed table the bounds reach the scan as
-    PushedFilters (GreaterThanOrEqual/LessThanOrEqual), so row groups
-    whose min-max stats miss every interval are skipped without
-    decoding — the property Hilbert ids were built for (a spatial disk
-    is a handful of numeric runs)."""
-    terms = [f"(`{cell_col}` BETWEEN {int(lo)}L AND {int(hi)}L)"
-             for lo, hi in ranges]
-    return F.expr(" OR ".join(terms) or "false")
+    from ONE SQL string ``(<col BETWEEN lo AND hi> OR ...) AND col IS
+    NOT NULL`` (building it Column by Column costs two py4j round trips
+    per bound).  On a parquet/Iceberg-backed table the bounds reach the
+    scan as PushedFilters, so row groups whose min-max stats miss every
+    interval are skipped without decoding — the property Hilbert ids
+    were built for (a spatial disk is a handful of numeric runs).
+
+    The null guard changes no row (a NULL id fails every BETWEEN), but
+    FilterExec hoists it and compiles each comparison as non-nullable,
+    halving the bytecode per range (64 ranges: ~10 KB -> ~4.5 KB), so
+    the stage stays JIT-sized (PRUNE_MAX_RANGES).  It comes last, so
+    PushedFilters still starts with ``Or(``."""
+    terms = " OR ".join(f"(`{cell_col}` BETWEEN {int(lo)}L AND {int(hi)}L)"
+                        for lo, hi in ranges)
+    return F.expr(f"({terms}) AND `{cell_col}` IS NOT NULL" if terms else "false")
 
 
 def _stored_zoom(points: DataFrame, col: str):
@@ -59,7 +70,9 @@ def _prune_scan(points: DataFrame, col: str, z: int | None, cover_ids,
                 cover_size, max_ranges: int = 64) -> DataFrame:
     """The one Hilbert scan-pruning step (pip_join_bbox, knn_join_cells,
     pages_pipeline.pixel_counts): filter ``points`` to the coalesced id
-    ranges (<= ``max_ranges``, a superset) of a cover at zoom ``z``.
+    ranges (<= min(``max_ranges``, PRUNE_MAX_RANGES), a superset) of a
+    cover at zoom ``z``, through cell_range_predicate's null-guarded
+    form; the clamp keeps the scan stage's generated method JIT-sized.
     ``cover_ids``/``cover_size`` are zero-argument callables giving the
     sorted cover ids and a cheap upper bound on their count; past
     COVER_GUARD_CELLS ``points`` is returned unpruned.  Ids carry their
@@ -76,7 +89,8 @@ def _prune_scan(points: DataFrame, col: str, z: int | None, cover_ids,
             "pruning with it would silently filter all rows")
     if cover_size() > COVER_GUARD_CELLS:
         return points
-    ranges = coalesce_ranges(cover_ids(), max_ranges=max_ranges)
+    ranges = coalesce_ranges(cover_ids(),
+                             max_ranges=min(max_ranges, PRUNE_MAX_RANGES))
     return points.filter(cell_range_predicate(ranges, col))
 
 
@@ -113,8 +127,10 @@ def pip_join_bbox(points: DataFrame, boxes: DataFrame, lon="lon", lat="lat",
     _prune_scan turns the boxes' tile cover into a scan predicate, so
     parquet min-max stats skip row groups outside every box before the
     exact join condition runs; the cover is a superset, so results are
-    identical.  The stored zoom comes from the column's ``hilbert_zoom``
-    stamp, else a probe job; a different ``prune_z`` raises ValueError."""
+    identical.  ``prune_max_ranges`` is clamped to PRUNE_MAX_RANGES (the
+    JIT budget); fewer ranges stay a superset, so results cannot change.
+    The stored zoom comes from the column's ``hilbert_zoom`` stamp, else
+    a probe job; a different ``prune_z`` raises ValueError."""
     if prune_col is not None:
         bbs = [(r["xmin"], r["ymin"], r["xmax"], r["ymax"])
                for r in boxes.select("xmin", "ymin", "xmax", "ymax")
@@ -403,9 +419,10 @@ def knn_join_cells(points: DataFrame, queries: DataFrame, k: int, z: int = 7,
     at zoom ``z`` (write_hilbert_sorted).  _prune_scan pre-filters the
     points scan to the disk(R) id intervals, so parquet min-max stats
     skip row groups; the equi-join still keys EXACT cell ids, so results
-    never change.  The stored zoom comes from the column's
-    ``hilbert_zoom`` stamp, else a probe job; a different ``z`` raises
-    ValueError.
+    never change.  ``prune_max_ranges`` is clamped to PRUNE_MAX_RANGES
+    (the JIT budget; still a superset).  The stored zoom comes from the
+    column's ``hilbert_zoom`` stamp, else a probe job; a different ``z``
+    raises ValueError.
 
     The result is a plain lazy plan (no checkpoint): every action on it
     recomputes the same rows.
@@ -436,49 +453,32 @@ def knn_join_cells(points: DataFrame, queries: DataFrame, k: int, z: int = 7,
 
 def cell_rollup(points: DataFrame, z_levels, lon="lon", lat="lat",
                 value_col=None, scheme: str = "equirect") -> DataFrame:
-    """Tile-pyramid rollup (hypertable-rollup analog): count (+optional
-    mean) per cell at the finest level, then integer-math parent rollups —
-    each coarser level aggregates the previous one, not the raw points
-    (partial aggregation reuse, minimal shuffle).
-
-    ``scheme='hilbert'``: parents are PURE ID ARITHMETIC (hd >> 2k —
-    no coordinate unpack/repack at all), the property that makes
-    S2-style ids the right sharding key at scale: a parent rollup is a
-    shift, and a parent's children are one contiguous id range."""
-    z0 = max(z_levels)
-    aggs = [F.count(F.lit(1)).alias("n")]
-    if value_col:
-        aggs.append(F.sum(value_col).alias("val_sum"))
-    base = _encode_cells(points, z0, lon, lat, scheme).groupBy(
-        "cell"
-    ).agg(*aggs).withColumn("z", F.lit(z0))
-    levels = [base]
-    prev = base
-    prev_z = z0
-    mask = F.lit((1 << 29) - 1).cast("bigint")
-    d_mask = F.lit((1 << 58) - 1).cast("bigint")
-    for z in sorted([z for z in z_levels if z != z0], reverse=True):
-        d = prev_z - z
-        if scheme == "hilbert":
-            pcell = (F.lit(z).cast("bigint") * F.lit(1 << 58).cast("bigint")
-                     + F.shiftright(F.col("cell").bitwiseAND(d_mask), 2 * d))
-        else:
-            # unpack, shift, repack with pure integer ops
-            x = F.shiftright(F.shiftright(F.col("cell"), 29).bitwiseAND(mask), d)
-            y = F.shiftright(F.col("cell").bitwiseAND(mask), d)
-            pcell = (F.lit(z).cast("bigint") * F.lit(1 << 58).cast("bigint")) + (x * F.lit(1 << 29)) + y
-        rolled_aggs = [F.sum("n").alias("n")]
-        if value_col:
-            rolled_aggs.append(F.sum("val_sum").alias("val_sum"))
-        nxt = prev.withColumn("pcell", pcell).groupBy("pcell").agg(*rolled_aggs)
-        nxt = nxt.withColumnRenamed("pcell", "cell").withColumn("z", F.lit(z))
-        levels.append(nxt)
-        prev = nxt
-        prev_z = z
-    out = levels[0]
-    for lv in levels[1:]:
-        out = out.unionByName(lv)
-    return out
+    """Tile-pyramid rollup in one pass (GeoBlocks, EDBT 2021: every
+    level is one aggregate read at a different zoom): count, plus
+    ``val_sum`` of ``value_col``, per cell at each zoom of ``z_levels``
+    (each distinct zoom once).  One projection encodes the cell at
+    max(z_levels); each level's id is integer arithmetic on it
+    (equirect: shift x and y; hilbert: mask the zoom bits and ``>> 2d``,
+    no coordinate unpack, which is why S2-style ids shard pyramids
+    well); the ids explode into ONE ``groupBy("cell")``, whose shuffle
+    is the only one, and ``z`` is cell >> 58.  Columns: (cell, n[,
+    val_sum], z).  The float addition order of ``val_sum`` is fixed in
+    neither this form nor the former chained per-level rollup."""
+    zs = sorted(set(z_levels), reverse=True)
+    z0, m = zs[0], (1 << X_BITS) - 1
+    if scheme == "hilbert":
+        ids = [f"{z << Z_BITS}L + ((cell & {(1 << Z_BITS) - 1}L) >> {2 * (z0 - z)})"
+               for z in zs]
+    else:
+        ids = [f"{z << Z_BITS}L + ((((cell >> {X_BITS}) & {m}L) >> {z0 - z}) "
+               f"<< {X_BITS}) + ((cell & {m}L) >> {z0 - z})" for z in zs]
+    aggs = [F.count(F.lit(1)).alias("n")] + (
+        [F.sum(value_col).alias("val_sum")] if value_col else [])
+    return (_encode_cells(points, z0, lon, lat, scheme)
+            .select(F.explode(F.array(*map(F.expr, ids))).alias("cell"),
+                    *([value_col] if value_col else []))
+            .groupBy("cell").agg(*aggs)
+            .withColumn("z", F.shiftright("cell", Z_BITS).cast("int")))
 
 
 def salt_cells(df: DataFrame, cell_col="cell", salts=16, id_col="doc_id") -> DataFrame:

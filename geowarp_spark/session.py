@@ -99,3 +99,35 @@ def get_spark(app_name: str = "geowarp-spark", master: str | None = None,
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+# HotSpot never JIT-compiles a method whose bytecode is over this many
+# bytes (DontCompileHugeMethods, on by default): it runs interpreted.
+HUGE_METHOD_BYTES = 8000
+
+
+def max_codegen_method_bytes(df) -> int:
+    """Largest bytecode method of the whole-stage-codegen classes in
+    ``df``'s executed plan, AQE query stages included (run an action on
+    ``df`` first, so the walk sees AQE's final plan); 0 if nothing is
+    code-generated.  A stage whose largest method exceeds
+    HUGE_METHOD_BYTES runs that method interpreted."""
+    cg = df.sparkSession._jvm.org.apache.spark.sql.catalyst.expressions \
+        .codegen.CodeGenerator
+    todo, best = [df._jdf.queryExecution().executedPlan()], 0
+    while todo:
+        p = todo.pop()
+        name = p.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            todo.append(p.executedPlan())
+        elif name.endswith("QueryStageExec"):
+            todo.append(p.plan())
+        elif name == "ReusedExchangeExec":
+            todo.append(p.child())
+        elif name == "WholeStageCodegenExec":
+            stats = cg.compile(p.doCodeGen()._2())._2()
+            best = max(best, int(stats.maxMethodCodeSize()))
+        children = p.children().iterator()
+        while children.hasNext():
+            todo.append(children.next())
+    return best

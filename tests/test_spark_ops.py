@@ -1881,6 +1881,110 @@ def test_cell_range_predicate_pushes_column_built_bounds(spark, tmp_path):
     assert sum(want.values()) == 128 and got == want
 
 
+
+def test_pruned_pip_scan_fits_jit_budget(spark, tmp_path):
+    """The pruned pip scan stage compiles to methods HotSpot will JIT
+    (under 8,000 bytes of bytecode), at the default 64 ranges and at the
+    PRUNE_MAX_RANGES clamp (a larger prune_max_ranges is clamped), and
+    returns the unpruned join's rows either way."""
+    import contextlib
+    import io
+    import re
+
+    from geowarp_spark.grid.hilbert import (bbox_cover_cell_ids,
+                                            coalesce_ranges)
+    from geowarp_spark.operators.spatial import (PRUNE_MAX_RANGES,
+                                                 pip_join_bbox,
+                                                 write_hilbert_sorted)
+    from geowarp_spark.session import (HUGE_METHOD_BYTES,
+                                       max_codegen_method_bytes)
+
+    z = 10
+    pts = spark.range(20_000).select(
+        F.col("id").alias("doc_id"),
+        (F.pmod(F.col("id") * 7919, F.lit(360_000)) / 1000.0 - 180.0).alias("lon"),
+        (F.pmod(F.col("id") * 104729, F.lit(170_000)) / 1000.0 - 85.0).alias("lat"))
+    path = str(tmp_path / "jit.parquet")
+    write_hilbert_sorted(pts, path, z, num_files=2)
+    stored = spark.read.parquet(path)
+    rng = np.random.default_rng(0)
+    bbs = [(float(x), float(y), float(x) + 3.0, float(y) + 3.0)
+           for x, y in zip(rng.uniform(-170, 160, 40), rng.uniform(-80, 70, 40))]
+    assert len(coalesce_ranges(bbox_cover_cell_ids(bbs, z))) > PRUNE_MAX_RANGES
+    boxes = spark.createDataFrame(
+        [(i, *b) for i, b in enumerate(bbs)],
+        "tile_id long, xmin double, ymin double, xmax double, ymax double")
+    want = sorted(map(tuple, pip_join_bbox(stored, boxes).collect()))
+    assert len(want) > 0
+    for max_ranges, n_ranges in ((64, 64), (10_000, PRUNE_MAX_RANGES)):
+        pruned = pip_join_bbox(stored, boxes, prune_col="hcell", prune_z=z,
+                               prune_max_ranges=max_ranges)
+        assert sorted(map(tuple, pruned.collect())) == want
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            pruned.explain("formatted")
+        pushed = re.search(r"PushedFilters: \[(Or\(.*)", buf.getvalue()).group(1)
+        assert pushed.count("GreaterThanOrEqual(hcell") == n_ranges
+        size = max_codegen_method_bytes(pruned)
+        assert 0 < size < HUGE_METHOD_BYTES, (max_ranges, size)
+
+
+def _rollup_oracle(lon, lat, val, z_levels, scheme):
+    """{(cell, n, val_sum, z)} of a pyramid rollup, each level encoded
+    straight from the coordinates in numpy."""
+    from geowarp_spark.grid.hilbert import pack_hilbert, xy_to_d
+
+    rows = set()
+    for z in set(z_levels):
+        n = 1 << z
+        x = np.clip(np.floor((lon + 180.0) / 360.0 * n), 0, n - 1).astype(np.int64)
+        y = np.clip(np.floor((90.0 - lat) / 180.0 * n), 0, n - 1).astype(np.int64)
+        cell = (pack_hilbert(z, xy_to_d(z, x, y)) if scheme == "hilbert"
+                else (np.int64(z) << 58) + (x << 29) + y)
+        ids, inv, cnt = np.unique(cell, return_inverse=True, return_counts=True)
+        sums = np.bincount(inv, weights=val, minlength=len(ids))
+        rows |= {(int(c), int(k), float(v), z) for c, k, v in zip(ids, cnt, sums)}
+    return rows
+
+
+@pytest.mark.parametrize("scheme", ["equirect", "hilbert"])
+def test_cell_rollup_matches_numpy_oracle(spark, scheme):
+    """cell_rollup == a per-level numpy encoding of the raw points, for
+    sorted, unsorted-with-duplicate and single z_levels and an empty
+    table; each level appears once, integer-valued doubles keep val_sum
+    exact.  The plan is one aggregate: no Union, and exactly one
+    exchange, keyed on cell."""
+    import re
+
+    from geowarp_spark.operators.spatial import cell_rollup
+
+    rng = np.random.default_rng(5)
+    lon = np.concatenate([rng.uniform(-30, 30, 3000), [-180.0, 180.0, 0.0]])
+    lat = np.concatenate([rng.uniform(-60, 60, 3000), [90.0, -90.0, 0.0]])
+    val = rng.integers(0, 1000, len(lon)).astype(np.float64)
+    schema = "doc_id long, lon double, lat double, v double"
+    df = spark.createDataFrame(
+        [(i, float(a), float(b), float(v))
+         for i, (a, b, v) in enumerate(zip(lon, lat, val))], schema)
+    for z_levels in ([12, 10, 8], [8, 12, 10, 10], [5]):
+        out = cell_rollup(df, z_levels, value_col="v", scheme=scheme)
+        assert out.columns == ["cell", "n", "val_sum", "z"]
+        got = [tuple(r) for r in out.collect()]
+        assert len(got) == len(set(got))
+        assert set(got) == _rollup_oracle(lon, lat, val, z_levels, scheme)
+        counts = cell_rollup(df, z_levels, scheme=scheme)
+        assert counts.columns == ["cell", "n", "z"]
+        assert sorted(map(tuple, counts.collect())) == sorted(
+            (c, n, z) for c, n, _v, z in got)
+    empty = spark.createDataFrame([], schema)
+    assert cell_rollup(empty, [12, 10], value_col="v", scheme=scheme).count() == 0
+
+    plan = _plan(cell_rollup(df, [12, 10, 8], value_col="v", scheme=scheme))
+    assert "Union" not in plan
+    exchanges = re.findall(r"Exchange (\w+)\(([^,]*)", plan)
+    assert len(exchanges) == 1 and exchanges[0][0] == "hashpartitioning" \
+        and exchanges[0][1].startswith("cell#"), exchanges
+
 def test_centroid_assign_single_centroid(spark):
     """ADVICE r7: greatest() needs >= 2 args, so k=1 centroids (legal
     k-means output for a degenerate sample) must not break assignment."""

@@ -1,7 +1,9 @@
 """Physical-plan audit: capture .explain('formatted') evidence for the
 headline queries and extract the scale-relevant properties — column
 pruning (ReadSchema), filter pushdown (PushedFilters), exchange count,
-broadcast usage, and whole-stage codegen coverage.
+broadcast usage, whole-stage codegen coverage and the JIT report: the
+largest generated method of each plan, flagged when it is over the
+8,000 bytes HotSpot will compile (such a method runs interpreted).
 
 Writes BENCH/PLANS_r{N}.md.  Usage: python tools/audit_plans.py [out_md]
 """
@@ -17,6 +19,19 @@ from contextlib import redirect_stdout
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = "/root/testdata/sf0.01"
+
+
+def _jit(df):
+    """(largest generated-method bytes of ``df``'s final plan, flag):
+    runs the plan once so AQE's query stages exist, then compiles
+    every whole-stage-codegen class; a flagged stage runs interpreted."""
+    from geowarp_spark.session import (HUGE_METHOD_BYTES,
+                                       max_codegen_method_bytes)
+
+    df._jdf.queryExecution().executedPlan().execute().count()
+    size = max_codegen_method_bytes(df)
+    return size, ("OVER 8,000 B: interpreted" if size > HUGE_METHOD_BYTES
+                  else "JIT-sized")
 
 # query -> what the plan must show to be the plan you'd want at 100 TB
 AUDITS = {
@@ -255,6 +270,90 @@ def _audit_rasterize(spark):
     return det
 
 
+def _audit_pip_jit(spark):
+    """The pruned pip scan (pip_join_bbox with prune_col) stays JIT-sized:
+    cell_range_predicate's null guard halves the bytecode per range and
+    _prune_scan clamps the range count to PRUNE_MAX_RANGES, so the scan
+    stage's largest method is under 8,000 bytes at the default 64
+    ranges and at the clamp."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from geowarp_spark.operators.spatial import (PRUNE_MAX_RANGES,
+                                                 pip_join_bbox,
+                                                 write_hilbert_sorted)
+
+    z = 10
+    pts = spark.range(100_000).select(
+        F.col("id").alias("doc_id"),
+        (F.pmod(F.col("id") * 7919, F.lit(360_000)) / 1000.0 - 180.0).alias("lon"),
+        (F.pmod(F.col("id") * 104729, F.lit(170_000)) / 1000.0 - 85.0).alias("lat"))
+    path = "/tmp/plans_audit_pip_jit.parquet"
+    write_hilbert_sorted(pts, path, z, num_files=4)
+    stored = spark.read.parquet(path)
+    rng = np.random.default_rng(0)
+    boxes = spark.createDataFrame(
+        [(i, float(x), float(y), float(x) + 3.0, float(y) + 3.0)
+         for i, (x, y) in enumerate(zip(rng.uniform(-170, 160, 40),
+                                        rng.uniform(-80, 70, 40)))],
+        "tile_id long, xmin double, ymin double, xmax double, ymax double")
+    rows = []
+    for max_ranges in (64, 10_000):
+        size, flag = _jit(pip_join_bbox(stored, boxes, prune_col="hcell",
+                                        prune_z=z, prune_max_ranges=max_ranges))
+        used = min(max_ranges, PRUNE_MAX_RANGES)
+        print(f"pip jit audit: {used} ranges -> largest method {size} B ({flag})")
+        rows.append(f"| {max_ranges} | {used} | {size:,} | {flag} |")
+    return [
+        "## pruned pip scan JIT budget",
+        "",
+        "**Expectation:** the Hilbert prune predicate ends in `AND hcell IS "
+        "NOT NULL`, so FilterExec compiles each BETWEEN as non-nullable, and "
+        f"`_prune_scan` clamps the ranges to PRUNE_MAX_RANGES = "
+        f"{PRUNE_MAX_RANGES}: the scan stage's largest generated method stays "
+        "under the 8,000 bytes HotSpot compiles (pinned in "
+        "test_pruned_pip_scan_fits_jit_budget).",
+        "",
+        "| prune_max_ranges | ranges used | largest method (bytes) | |",
+        "|---|---|---|---|",
+        *rows, "",
+    ]
+
+
+def _audit_rollup(spark):
+    """cell_rollup is one aggregate: every level's id derives from one
+    encoded cell and explodes into a single groupBy(cell), so the plan
+    has no Union and exactly one exchange, keyed on cell."""
+    from pyspark.sql import functions as F
+
+    from geowarp_spark.operators.spatial import cell_rollup
+
+    pts = spark.range(100_000).select(
+        (F.rand(0) * 360.0 - 180.0).alias("lon"),
+        (F.rand(1) * 180.0 - 90.0).alias("lat"))
+    det = ["## cell_rollup one pass", "",
+           "**Expectation:** one projection encodes the cell at the finest "
+           "zoom, each level's id is integer arithmetic on it, and one "
+           "groupBy(cell) aggregates every level: 0 Union, 1 Exchange "
+           "(hashpartitioning on cell).", ""]
+    for scheme in ("equirect", "hilbert"):
+        df = cell_rollup(pts, [12, 10, 8], scheme=scheme)
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            df.explain("formatted")
+        plan = buf.getvalue()
+        n_exchange = len(re.findall(r"\(\d+\) Exchange\b", plan))
+        n_union = len(re.findall(r"\(\d+\) Union\b", plan))
+        size, flag = _jit(df)
+        print(f"rollup audit ({scheme}): {n_exchange} Exchange, {n_union} "
+              f"Union, largest method {size} B ({flag})")
+        det += [f"Measured ({scheme}): **{n_exchange} Exchange**, {n_union} "
+                f"Union (must be 0); largest generated method {size:,} B "
+                f"({flag}).", ""]
+        assert n_union == 0, "cell_rollup fell back to a union of levels"
+    return det + ["```", plan.strip()[:3000], "```", ""]
+
+
 def main():
     out_path = sys.argv[1] if len(sys.argv) > 1 else "BENCH/PLANS_r6.md"
     import __spark_entry__ as em
@@ -292,9 +391,11 @@ def main():
         pushed = sorted(set(re.findall(r"PushedFilters: \[([^\]]*)\]", plan)))
         pushed = [p for p in pushed if p.strip()]
         schemas = re.findall(r"ReadSchema: (struct<[^\n]*)", plan)
+        size, flag = _jit(df)
+        print(f"{name}: largest generated method {size} B ({flag})")
         summary.append(
             f"| `{name}` | {n_exchange} | {n_bcast} | {n_codegen} | "
-            f"{'yes' if pushed else '-'} | {want} |")
+            f"{'yes' if pushed else '-'} | {size:,} ({flag}) | {want} |")
         det = [f"## {name}", "", f"**Expectation:** {want}", ""]
         if schemas:
             det.append("ReadSchema (column pruning at the scan):")
@@ -307,17 +408,20 @@ def main():
         details += det
 
     out.append("| query | shuffle exchanges | broadcast exchanges | "
-               "codegen spans | pushdown | expectation |")
-    out.append("|---|---|---|---|---|---|")
+               "codegen spans | pushdown | largest method (B) | expectation |")
+    out.append("|---|---|---|---|---|---|---|")
     out += summary
     out.append("")
     out += details
     # plan shapes that live outside queries() (stored-table pruning, the
-    # certified kNN pass, the composite operator, the rasterize paint)
+    # certified kNN pass, the composite operator, the rasterize paint,
+    # the pruned pip scan's JIT budget, the one-pass rollup)
     out += _audit_hilbert_pruning(spark)
     out += _audit_knn_certified(spark)
     out += _audit_mosaic_composite(spark)
     out += _audit_rasterize(spark)
+    out += _audit_pip_jit(spark)
+    out += _audit_rollup(spark)
     with open(out_path, "w") as f:
         f.write("\n".join(out))
     print(f"wrote {out_path} ({len(AUDITS)} plans)")
