@@ -1474,7 +1474,7 @@ _FRAME_SAMPLE_ORACLE = """
 """
 
 
-def q_salted_cells(spark, sf_dir):  # skew-safe two-stage agg == plain agg
+def q_salted_cells(spark, sf_dir):  # per-cell count: one partial+final agg
     from geowarp_spark.operators.spatial import salted_cell_counts
 
     pts = _docs_pts(spark, sf_dir)

@@ -17,7 +17,7 @@ The headline set covers the north-rule pipeline stages: geotag + cell
 encode + PIP join (pages_pipeline), kNN join, cell rollup, dedup
 (minhash/simhash), text quality, ANN similarity, box-stat warp of a
 raster to a tile pyramid (broadcast AND chunk-anchored plans), and the
-salted skew-safe aggregation.
+per-cell count over hot cells (salted_cells).
 """
 
 from __future__ import annotations

@@ -80,7 +80,7 @@ def _job_join(spark, sf_dir, replication=None):
 
     stages = {}
     t0 = time.time()
-    # 1. skew-salted per-cell counts (dense cluster cells are hot keys)
+    # 1. per-cell counts (dense cluster cells are hot keys; partial aggs)
     t = time.time()
     counts = salted_cell_counts(pts, z=12).cache()
     n_cells = counts.count()

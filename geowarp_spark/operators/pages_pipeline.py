@@ -10,8 +10,10 @@ same equirect cell math as the join layer, so a tile's raster is exactly
 the z+log2(px) cell grid — rollups and rasters agree by construction.
 
 Plan shape (scale posture):
-  pages ──JVM exprs──> (lon, lat, cell@z)          no UDF, no shuffle
-        ──groupBy(cell, px, py).count()            one shuffle, partial aggs
+  pages ──JVM exprs──> (lon, lat, cell@z+px_bits)  no UDF, no shuffle
+        ──groupBy(cell@z+px_bits).count()          one shuffle, partial aggs
+                                                   (spatial.cell_rollup)
+        ──(cell@z, px, py) from id arithmetic      no shuffle
         ──repartition(n_cores, cell)               second shuffle on tile id
           .sortWithinPartitions(cell)              (small: one row per
                                                     nonzero pixel)
@@ -29,9 +31,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..grid.hilbert import bbox_cover_cell_count, bbox_cover_cell_ids
-from ..grid.tiles import cell_sql_expr
+from ..grid.tiles import X_BITS
 from ..sources.pages import LAT_SQL, LON_SQL
-from .spatial import _prune_scan
+from .spatial import _prune_scan, cell_rollup, coarsen_sql
 
 RASTER_TILE_SCHEMA = (
     "cell bigint, z int, px_size int, n_pages bigint, data binary"
@@ -45,9 +47,11 @@ def pixel_counts(points: DataFrame, z: int, px_bits: int = 6,
     """Per-(tile, pixel) page counts, all JVM-side.
 
     The pixel grid inside a z-tile is the (z + px_bits) cell grid, so
-    pixel coords are pure integer math on the finer cell id:
-    px = fine_x - (tile_x << px_bits), py likewise.  One shuffle
-    (groupBy) with map-side partial aggregation.
+    points are counted once per fine cell (cell_rollup: one shuffle,
+    map-side partial aggregation); tile and pixel are integer math on
+    each aggregated fine id: cell = coarsen_sql(fine), px/py = the low
+    px_bits of its x/y.  Exact: scaling by 2^px_bits is exact in float,
+    and both zooms clamp and map NaN alike.
 
     ``bbox``: optional region of interest ``(xmin, ymin, xmax, ymax)``
     in lon/lat — rasterize only pages inside it (half-open, same
@@ -71,20 +75,12 @@ def pixel_counts(points: DataFrame, z: int, px_bits: int = 6,
         points = points.filter(
             (F.col(lon) >= xmin) & (F.col(lon) < xmax)
             & (F.col(lat) >= ymin) & (F.col(lat) < ymax))
-    fine = cell_sql_expr(lon, lat, z + px_bits)
-    coarse = cell_sql_expr(lon, lat, z)
-    d = points.withColumn("fine", F.expr(fine)).withColumn("cell", F.expr(coarse))
-    mask = F.lit((1 << 29) - 1).cast("bigint")
-    fx = F.shiftright(F.col("fine"), 29).bitwiseAND(mask)
-    fy = F.col("fine").bitwiseAND(mask)
-    cx = F.shiftright(F.col("cell"), 29).bitwiseAND(mask)
-    cy = F.col("cell").bitwiseAND(mask)
-    return (
-        d.withColumn("px", (fx - (cx * F.lit(1 << px_bits))).cast("int"))
-        .withColumn("py", (fy - (cy * F.lit(1 << px_bits))).cast("int"))
-        .groupBy("cell", "px", "py")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+    fine, m = F.col("fine"), (1 << px_bits) - 1
+    return (cell_rollup(points, [z + px_bits], lon, lat)
+            .select(F.col("cell").alias("fine"), "n")
+            .select(F.expr(coarsen_sql("fine", z + px_bits, z)).alias("cell"),
+                    F.shiftright(fine, X_BITS).bitwiseAND(m).cast("int").alias("px"),
+                    fine.bitwiseAND(m).cast("int").alias("py"), "n"))
 
 
 # upper bound on the uint32 grid block behind one yielded paint frame
@@ -105,7 +101,7 @@ def rasterize_tiles(points: DataFrame, z: int, px_bits: int = 6,
     partition, and a mapInPandas paints every tile of an Arrow batch at
     once — tile runs from ``np.unique`` on the sorted cells, one
     fancy-index assignment into an ``(n_tiles, size * size)`` block
-    (exact: ``(cell, px, py)`` is unique after the groupBy) and
+    (exact: ``(cell, px, py)`` is unique, one row per fine cell) and
     ``n_pages`` from one segmented sum.  The last tile of a batch may
     continue in the next, so its rows are held back and painted with
     the batch that closes it.
@@ -174,9 +170,9 @@ def pages_tile_pyramid(spark: SparkSession, sf_dir: str, z: int = 6,
 
         store = CheckpointStore(spark, checkpoint_root)
         # adapt to the tile-store schema: use z/x/y unpacked from cell
-        mask = F.lit((1 << 29) - 1).cast("bigint")
+        mask = F.lit((1 << X_BITS) - 1).cast("bigint")
         enriched = tiles.withColumn(
-            "x", F.shiftright(F.col("cell"), 29).bitwiseAND(mask)
+            "x", F.shiftright(F.col("cell"), X_BITS).bitwiseAND(mask)
         ).withColumn("y", F.col("cell").bitwiseAND(mask)).withColumn(
             "n_chunks", F.lit(1)
         )

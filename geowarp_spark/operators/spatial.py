@@ -6,10 +6,10 @@ joined (point-in-polygon J1, kNN J5) against tile polygons, and rolled up
 the cell pyramid.  Plans are pure DataFrame ops so Catalyst broadcasts
 the (small) polygon/query side and pushes filters into the parquet scan.
 
-Skew: dense page clusters make a few cells huge.  ``salt_cells`` appends
-a deterministic salt to the shuffle key only (aggregation semantics
-unchanged — partial aggregates per (cell, salt) then final per cell),
-SURVEY §4 R-skew; AQE skew-join is the backstop.
+Every per-cell count is one cell_rollup aggregate.  Skew: dense page
+clusters make a few cells huge; a count is decomposable, so map-side
+partial aggregation caps a hot cell at one row per map task (SURVEY §4
+R-skew); AQE skew-join is the backstop for joins.
 """
 
 from __future__ import annotations
@@ -288,16 +288,16 @@ def _knn_candidates(points, queries, z, ring, lon, lat, qlon, qlat,
 
 def _count_grid(points, z, lon, lat):
     """Dense [y, x] point-count grid of the equirect cells at zoom ``z``
-    from one ``groupBy(cell).count()`` (its map-side combine spreads hot
+    from one cell_rollup aggregate (its map-side combine caps hot
     cells).  Only points inside [-180, 180] x [-90, 90] are counted, so
     every counted point lies within its cell's extent."""
     n, mask = 1 << z, (1 << X_BITS) - 1
-    pdf = (points.where(f"{lon} BETWEEN -180 AND 180 AND {lat} BETWEEN -90 AND 90")
-           .groupBy(F.expr(cell_sql_expr(lon, lat, z)).alias("cell")).count()
-           .toPandas())
+    pdf = cell_rollup(
+        points.where(f"{lon} BETWEEN -180 AND 180 AND {lat} BETWEEN -90 AND 90"),
+        [z], lon, lat).toPandas()
     cell = pdf["cell"].to_numpy(np.int64)
     grid = np.zeros((n, n), np.int64)
-    grid[cell & mask, (cell >> X_BITS) & mask] = pdf["count"].to_numpy(np.int64)
+    grid[cell & mask, (cell >> X_BITS) & mask] = pdf["n"].to_numpy(np.int64)
     return grid
 
 
@@ -451,50 +451,43 @@ def knn_join_cells(points: DataFrame, queries: DataFrame, k: int, z: int = 7,
     return _topk_two_phase(cand, k, query_id, point_id)
 
 
+def coarsen_sql(col: str, z0: int, z: int, scheme: str = "equirect") -> str:
+    """SQL id of the zoom-``z`` ancestor of the zoom-``z0`` cell id in
+    ``col`` (z <= z0), by integer arithmetic alone.  Equirect: shift x
+    and y.  Hilbert: mask the zoom bits and ``>> 2d`` (no coordinate
+    unpack, which is why S2-style ids shard pyramids well)."""
+    d = z0 - z
+    if scheme == "hilbert":
+        return f"{z << Z_BITS}L + (({col} & {(1 << Z_BITS) - 1}L) >> {2 * d})"
+    m = (1 << X_BITS) - 1
+    return (f"{z << Z_BITS}L + (((({col} >> {X_BITS}) & {m}L) >> {d}) "
+            f"<< {X_BITS}) + (({col} & {m}L) >> {d})")
+
+
 def cell_rollup(points: DataFrame, z_levels, lon="lon", lat="lat",
                 value_col=None, scheme: str = "equirect") -> DataFrame:
-    """Tile-pyramid rollup in one pass (GeoBlocks, EDBT 2021: every
-    level is one aggregate read at a different zoom): count, plus
-    ``val_sum`` of ``value_col``, per cell at each zoom of ``z_levels``
-    (each distinct zoom once).  One projection encodes the cell at
-    max(z_levels); each level's id is integer arithmetic on it
-    (equirect: shift x and y; hilbert: mask the zoom bits and ``>> 2d``,
-    no coordinate unpack, which is why S2-style ids shard pyramids
-    well); the ids explode into ONE ``groupBy("cell")``, whose shuffle
-    is the only one, and ``z`` is cell >> 58.  Columns: (cell, n[,
-    val_sum], z).  The float addition order of ``val_sum`` is fixed in
-    neither this form nor the former chained per-level rollup."""
+    """The one per-cell aggregate (GeoBlocks, EDBT 2021: every level is
+    one aggregate read at a different zoom): count, plus ``val_sum`` of
+    ``value_col``, per cell at each zoom of ``z_levels`` (each distinct
+    zoom once).  One projection encodes the cell at max(z_levels); each
+    coarser level's id is coarsen_sql on it; with several levels the ids
+    explode into ONE ``groupBy("cell")``, whose shuffle is the only one,
+    and a single level groups the encoded id directly (no Generate).
+    ``z`` is cell >> 58.  Columns: (cell, n[, val_sum], z).  The float
+    addition order of ``val_sum`` is not fixed."""
     zs = sorted(set(z_levels), reverse=True)
-    z0, m = zs[0], (1 << X_BITS) - 1
-    if scheme == "hilbert":
-        ids = [f"{z << Z_BITS}L + ((cell & {(1 << Z_BITS) - 1}L) >> {2 * (z0 - z)})"
-               for z in zs]
-    else:
-        ids = [f"{z << Z_BITS}L + ((((cell >> {X_BITS}) & {m}L) >> {z0 - z}) "
-               f"<< {X_BITS}) + ((cell & {m}L) >> {z0 - z})" for z in zs]
+    cell = (F.col("cell") if len(zs) == 1 else F.explode(F.array(
+        *(F.expr(coarsen_sql("cell", zs[0], z, scheme)) for z in zs))))
     aggs = [F.count(F.lit(1)).alias("n")] + (
         [F.sum(value_col).alias("val_sum")] if value_col else [])
-    return (_encode_cells(points, z0, lon, lat, scheme)
-            .select(F.explode(F.array(*map(F.expr, ids))).alias("cell"),
-                    *([value_col] if value_col else []))
+    return (_encode_cells(points, zs[0], lon, lat, scheme)
+            .select(cell.alias("cell"), *([value_col] if value_col else []))
             .groupBy("cell").agg(*aggs)
             .withColumn("z", F.shiftright("cell", Z_BITS).cast("int")))
 
 
-def salt_cells(df: DataFrame, cell_col="cell", salts=16, id_col="doc_id") -> DataFrame:
-    """Deterministic salt for skewed cell keys: shuffle key becomes
-    (cell, salt) — aggregate per salted key first, then merge per cell.
-    Salt derives from a stable id hash, never from randomness, so results
-    are reproducible across cluster sizes (north-rule determinism)."""
-    return df.withColumn("cell_salt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(salts)))
-
-
-def salted_cell_counts(points: DataFrame, z: int, lon="lon", lat="lat",
-                       id_col="doc_id", salts=16) -> DataFrame:
-    """Two-stage skew-safe per-cell count: partial agg on (cell, salt),
-    final agg on cell.  Same result as a direct groupBy(cell).count()
-    but the first shuffle spreads hot cells over `salts` reducers."""
-    withcell = points.withColumn("cell", F.expr(cell_sql_expr(lon, lat, z)))
-    salted = salt_cells(withcell, salts=salts, id_col=id_col)
-    partial = salted.groupBy("cell", "cell_salt").agg(F.count(F.lit(1)).alias("pn"))
-    return partial.groupBy("cell").agg(F.sum("pn").alias("n"))
+def salted_cell_counts(points: DataFrame, z: int, lon="lon", lat="lat") -> DataFrame:
+    """Per-cell point count ``(cell, n)`` at zoom ``z``: cell_rollup at one
+    level.  Unsalted: map-side partial aggregation already caps a hot
+    cell at one row per map task, and a salt would only add a shuffle."""
+    return cell_rollup(points, [z], lon, lat).select("cell", "n")

@@ -1,7 +1,7 @@
 """SparkSession builder tuned for the warp+tile workload.
 
 Scale posture (SURVEY §4 "Our physical design"): AQE on with skew-join
-handling (dense web-page clusters salt + re-split at runtime), Arrow
+handling (skewed join partitions re-split at runtime), Arrow
 enabled for every pandas UDF hop, shuffle partitions sized to cores for
 local runs (a 1000-executor cluster would set this to 2-3x total cores
 via spark-submit conf, not code).

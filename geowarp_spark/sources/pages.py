@@ -7,7 +7,7 @@ lang:string).  Pages are synthesized deterministically from the driver's
 arithmetic function of doc_id (integer modular arithmetic only, so the
 same derivation is expressible in both Spark SQL and the DuckDB oracle;
 see geowarp_spark.operators.spatial.LON_SQL/LAT_SQL).  ~70% of points
-land in a dense cluster box to exercise the skew/salting path the north
+land in a dense cluster box to exercise the hot-cell skew the north
 rule requires.
 """
 

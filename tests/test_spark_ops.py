@@ -454,16 +454,52 @@ def test_hilbert_range_pruning_pushdown_and_knn(spark, tmp_path):
 
 
 def test_salted_counts_equal_plain(spark, sf_dir):
+    """salted_cell_counts equals a plain groupBy count, also with a hot
+    cell (10k identical points) on top of the sparse pages points."""
     from geowarp_spark.operators.spatial import salted_cell_counts
     import __spark_entry__ as em
 
-    pts = em._docs_pts(spark, sf_dir)
+    hot = spark.range(10_000).select((F.col("id") + 10**9).alias("doc_id"),
+                                     F.lit(12.5).alias("lon"),
+                                     F.lit(45.0).alias("lat"))
+    pts = em._docs_pts(spark, sf_dir).select("doc_id", "lon", "lat").unionByName(hot)
     salted = {(r["cell"], r["n"]) for r in salted_cell_counts(pts, z=10).collect()}
     from geowarp_spark.grid.tiles import cell_sql_expr
     plain = {(r["cell"], r["n"]) for r in
              pts.withColumn("cell", F.expr(cell_sql_expr("lon", "lat", 10)))
              .groupBy("cell").agg(F.count(F.lit(1)).alias("n")).collect()}
     assert salted == plain
+    assert max(n for _c, n in salted) >= 10_000
+
+
+def test_cell_counts_run_one_shuffle(spark, monkeypatch):
+    """Every per-cell count is cell_rollup's one aggregate: one exchange
+    keyed on cell and, at a single zoom, no Generate (explode)."""
+    import re
+
+    from geowarp_spark.operators import spatial
+
+    pts = spark.createDataFrame([(0, 1.0, 2.0), (1, 1.0, 2.0), (2, -70.0, 40.0)],
+                                "doc_id long, lon double, lat double")
+    plan = _plan(spatial.salted_cell_counts(pts, z=12))
+    exchanges = re.findall(r"Exchange (\w+)\(([^,]*)", plan)
+    assert len(exchanges) == 1 and exchanges[0][0] == "hashpartitioning" \
+        and exchanges[0][1].startswith("cell#"), exchanges
+    assert "Generate" not in plan
+    for scheme in ("equirect", "hilbert"):
+        assert "Generate" not in _plan(spatial.cell_rollup(pts, [12], scheme=scheme))
+
+    plans, cell_rollup = [], spatial.cell_rollup
+
+    def recorded(*args, **kwargs):
+        df = cell_rollup(*args, **kwargs)
+        plans.append(_plan(df))   # before the action re-plans it
+        return df
+
+    monkeypatch.setattr(spatial, "cell_rollup", recorded)
+    grid = spatial._count_grid(pts, 6, "lon", "lat")
+    assert grid.sum() == 3 and len(plans) == 1
+    assert len(re.findall(r"\bExchange\b", plans[0])) == 1, plans[0]
 
 
 def test_pip_polygon_halfplane(spark):
@@ -2217,8 +2253,8 @@ def test_rasterize_tiles_px_bits_8_over_frame_limit(spark):
 def test_rasterize_tiles_plan_streams_one_paint(spark):
     """The paint is one mapInPandas over a cell-repartitioned, sorted
     stream — no grouped pandas UDF — and the plan has exactly two
-    shuffles: the (cell, px, py) count aggregate and the explicit-width
-    repartition on cell."""
+    shuffles: the count aggregate keyed on the fine (z + px_bits) cell
+    id and the explicit-width repartition on the tile cell."""
     import re
 
     from geowarp_spark.operators.pages_pipeline import rasterize_tiles
@@ -2228,11 +2264,52 @@ def test_rasterize_tiles_plan_streams_one_paint(spark):
     assert "FlatMapGroupsInPandas" not in plan
     assert len(re.findall(r"\bMapInPandas\b", plan)) == 1
     exchanges = re.findall(r"Exchange (hashpartitioning\([^)]*\)), (\w+)", plan)
-    assert [(re.sub(r"#\d+L?", "", p), kind) for p, kind in exchanges] == [
+    # the aggregate's key is also named cell: name it by the id the
+    # z + px_bits = 7 encoding assigns, before the ids are stripped
+    fine = re.search(rf"\+ {7 << 58}\) AS (cell#\d+L?)\]", plan).group(1)
+    assert [(re.sub(r"#\d+L?", "", p.replace(fine, "fine")), kind)
+             for p, kind in exchanges] == [
         (f"hashpartitioning(cell, {spark.sparkContext.defaultParallelism})",
          "REPARTITION_BY_NUM"),
-        ("hashpartitioning(cell, px, py, 8)", "ENSURE_REQUIREMENTS"),
+        ("hashpartitioning(fine, 8)", "ENSURE_REQUIREMENTS"),
     ]
+
+
+def test_pixel_counts_edge_inputs_match_two_encodings(spark):
+    """pixel_counts, which derives tile and pixel from one fine cell id,
+    equals the per-point reference that encodes the tile and the fine
+    cell separately (cell_sql_expr at z and z + px_bits) and groups on
+    (cell, px, py) — on the grid edges, out-of-range coordinates that
+    clamp, NaN and NULL."""
+    from geowarp_spark.grid.tiles import cell_sql_expr
+    from geowarp_spark.operators.pages_pipeline import pixel_counts
+
+    nan = float("nan")
+    rng = np.random.default_rng(3)
+    rows = [(-180.0, 0.0), (180.0, 0.0), (0.0, 90.0), (0.0, -90.0),
+            (180.0, -90.0), (-180.0, 90.0), (200.0, 10.0), (10.0, -95.0),
+            (200.0, -95.0), (-200.0, 95.0), (nan, 10.0), (10.0, nan),
+            (nan, nan), (None, 10.0), (10.0, None), (180.0, 90.0)]
+    rows += [(float(a), float(b)) for a, b in
+             zip(rng.uniform(-180, 180, 300), rng.uniform(-90, 90, 300))]
+    pts = spark.createDataFrame(rows * 2, "lon double, lat double")
+    for z, px_bits in ((3, 4), (2, 6)):
+        size = 1 << px_bits
+        d = pts.select(F.expr(cell_sql_expr("lon", "lat", z + px_bits)).alias("fine"),
+                       F.expr(cell_sql_expr("lon", "lat", z)).alias("cell"))
+        mask = (1 << 29) - 1
+        ref = d.select(
+            "cell",
+            (F.shiftright("fine", 29).bitwiseAND(mask)
+             - F.shiftright("cell", 29).bitwiseAND(mask) * size).cast("int").alias("px"),
+            (F.col("fine").bitwiseAND(mask)
+             - F.col("cell").bitwiseAND(mask) * size).cast("int").alias("py"),
+        ).groupBy("cell", "px", "py").agg(F.count(F.lit(1)).alias("n"))
+        got = pixel_counts(pts, z, px_bits)
+        assert got.columns == ["cell", "px", "py", "n"]
+        got = sorted(map(tuple, got.collect()), key=repr)
+        assert got == sorted(map(tuple, ref.collect()), key=repr)
+        assert len(got) > 300 and sum(r[3] for r in got) == len(rows) * 2
 
 
 def test_pages_tile_pyramid_snapshot_matches_rasterize(spark, sf_dir, tmp_path):

@@ -46,7 +46,8 @@ AUDITS = {
                       "BROADCAST (F.broadcast hint); starved-query "
                       "fallback in the same DAG",
     "skip_nodata": "predicate pushed to the parquet scan (PushedFilters)",
-    "salted_cells": "two-stage agg: partial on (cell, salt), final on cell",
+    "salted_cells": "cell_rollup at one zoom: one partial+final agg on "
+                    "cell, no salt, no Generate",
     "dedup_exact": "md5 groupBy with partial aggregation (combiner) before "
                    "the exchange",
     "cell_encode": "one scan of documents; BOTH cell encoders (packed XYZ "
@@ -233,8 +234,8 @@ def _audit_mosaic_composite(spark):
 
 def _audit_rasterize(spark):
     """rasterize_tiles paints in ONE streamed mapInPandas over a
-    cell-repartitioned, sorted stream: two shuffles (the (cell, px, py)
-    count aggregate and the explicit-width repartition on cell) and no
+    cell-repartitioned, sorted stream: two shuffles (the count aggregate
+    on the fine cell and the explicit-width repartition on cell) and no
     grouped pandas UDF, i.e. no Python call per tile."""
     from pyspark.sql import functions as F
 
@@ -258,7 +259,7 @@ def _audit_rasterize(spark):
         "partitions; every tile of an Arrow batch is painted in one numpy "
         "pass, so the plan holds no grouped pandas UDF.",
         "",
-        f"Measured: **{n_exchange} Exchange** ((cell, px, py) partial+final "
+        f"Measured: **{n_exchange} Exchange** (fine-cell partial+final "
         f"count; cell repartition), {n_map} MapInPandas, {n_grouped} "
         "FlatMapGroupsInPandas (must be 0).",
         "",
@@ -320,38 +321,69 @@ def _audit_pip_jit(spark):
     ]
 
 
-def _audit_rollup(spark):
-    """cell_rollup is one aggregate: every level's id derives from one
-    encoded cell and explodes into a single groupBy(cell), so the plan
-    has no Union and exactly one exchange, keyed on cell."""
+def _audit_count_core(spark):
+    """Every per-cell count is cell_rollup's one aggregate: the encoded
+    cell (or, for a multi-level rollup, its exploded coarsened ids)
+    feeds a single groupBy(cell).  Each caller's plan must show exactly
+    one exchange, and only the multi-level rollup a Generate."""
     from pyspark.sql import functions as F
 
-    from geowarp_spark.operators.spatial import cell_rollup
+    from geowarp_spark.operators import spatial
+    from geowarp_spark.operators.pages_pipeline import pixel_counts
 
     pts = spark.range(100_000).select(
+        F.col("id").alias("doc_id"),
         (F.rand(0) * 360.0 - 180.0).alias("lon"),
         (F.rand(1) * 180.0 - 90.0).alias("lat"))
-    det = ["## cell_rollup one pass", "",
-           "**Expectation:** one projection encodes the cell at the finest "
-           "zoom, each level's id is integer arithmetic on it, and one "
-           "groupBy(cell) aggregates every level: 0 Union, 1 Exchange "
-           "(hashpartitioning on cell).", ""]
-    for scheme in ("equirect", "hilbert"):
-        df = cell_rollup(pts, [12, 10, 8], scheme=scheme)
+    calls, cell_rollup = [], spatial.cell_rollup
+
+    def count_grid():
+        # rebuild the aggregate _count_grid collects from its one call
+        # (a collected plan would print AQE's final and initial plans)
+        spatial.cell_rollup = lambda *a, **kw: (calls.append((a, kw))
+                                                or cell_rollup(*a, **kw))
+        try:
+            spatial._count_grid(pts, 10, "lon", "lat")
+        finally:
+            spatial.cell_rollup = cell_rollup
+        (args, kwargs), = calls
+        return cell_rollup(*args, **kwargs)
+
+    # caller -> (plan builder, whether it explodes several levels)
+    callers = {
+        "salted_cell_counts(z12)":
+            (lambda: spatial.salted_cell_counts(pts, 12), False),
+        "cell_rollup([12, 10, 8])":
+            (lambda: cell_rollup(pts, [12, 10, 8]), True),
+        "cell_rollup([12, 10, 8], hilbert)":
+            (lambda: cell_rollup(pts, [12, 10, 8], scheme="hilbert"), True),
+        "cell_rollup([12])": (lambda: cell_rollup(pts, [12]), False),
+        "pixel_counts(z4, px_bits 6)": (lambda: pixel_counts(pts, 4, 6), False),
+        "_count_grid(z10)": (count_grid, False),
+    }
+    det = ["## cell-count core", "",
+           "**Expectation:** `salted_cell_counts`, `cell_rollup` (both "
+           "schemes), `pixel_counts` and kNN's `_count_grid` all run "
+           "cell_rollup's one aggregate: 1 Exchange (hashpartitioning on "
+           "cell) each, a Generate only in the multi-level rollup.", "",
+           "| caller | exchanges | Generate | largest method (B) |",
+           "|---|---|---|---|"]
+    for name, (build, multi) in callers.items():
+        df = build()
         buf = io.StringIO()
         with redirect_stdout(buf):
             df.explain("formatted")
         plan = buf.getvalue()
         n_exchange = len(re.findall(r"\(\d+\) Exchange\b", plan))
-        n_union = len(re.findall(r"\(\d+\) Union\b", plan))
+        n_generate = len(re.findall(r"\(\d+\) Generate\b", plan))
         size, flag = _jit(df)
-        print(f"rollup audit ({scheme}): {n_exchange} Exchange, {n_union} "
-              f"Union, largest method {size} B ({flag})")
-        det += [f"Measured ({scheme}): **{n_exchange} Exchange**, {n_union} "
-                f"Union (must be 0); largest generated method {size:,} B "
-                f"({flag}).", ""]
-        assert n_union == 0, "cell_rollup fell back to a union of levels"
-    return det + ["```", plan.strip()[:3000], "```", ""]
+        print(f"count core audit ({name}): {n_exchange} Exchange, "
+              f"{n_generate} Generate, largest method {size} B ({flag})")
+        det.append(f"| `{name}` | {n_exchange} | {n_generate} | "
+                   f"{size:,} ({flag}) |")
+        assert n_exchange == 1, f"{name}: {n_exchange} exchanges"
+        assert (n_generate > 0) == multi, f"{name}: {n_generate} Generate"
+    return det + [""]
 
 
 def main():
@@ -415,13 +447,13 @@ def main():
     out += details
     # plan shapes that live outside queries() (stored-table pruning, the
     # certified kNN pass, the composite operator, the rasterize paint,
-    # the pruned pip scan's JIT budget, the one-pass rollup)
+    # the pruned pip scan's JIT budget, the cell-count core)
     out += _audit_hilbert_pruning(spark)
     out += _audit_knn_certified(spark)
     out += _audit_mosaic_composite(spark)
     out += _audit_rasterize(spark)
     out += _audit_pip_jit(spark)
-    out += _audit_rollup(spark)
+    out += _audit_count_core(spark)
     with open(out_path, "w") as f:
         f.write("\n".join(out))
     print(f"wrote {out_path} ({len(AUDITS)} plans)")
