@@ -9,7 +9,8 @@ idiomatic Spark engine:
   mode-tie-smallest, bilinear invalid-corner fallbacks, degenerate-window
   expansion) — see ``geowarp_spark.kernels.warp``;
 - a relational shell: tile pyramid + raster-chunk DataFrames, broadcast
-  overlap joins, ``applyInPandas`` group-warps — see
+  overlap joins, chunk-anchored warps whose per-tile merge is one sorted
+  ``mapInPandas`` stream (``operators.groups.stream_groups``) — see
   ``geowarp_spark.operators.warp_tiles``;
 - web-scale graft: Common-Crawl-style pages table, H3/S2-style cell
   encoding (pure-integer XYZ quadkey cells — no native deps), PIP + kNN

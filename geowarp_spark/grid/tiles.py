@@ -63,17 +63,6 @@ def point_to_tile(lon, lat, z):
     return xt, yt
 
 
-def bbox_to_tiles(bbox_4326, z):
-    """All (x, y) mercator tiles intersecting a lon/lat bbox."""
-    w, s, e, n = bbox_4326
-    x0, y0 = point_to_tile(np.array([w]), np.array([n]), z)
-    x1, y1 = point_to_tile(np.array([e]), np.array([s]), z)
-    xs = np.arange(int(x0[0]), int(x1[0]) + 1)
-    ys = np.arange(int(y0[0]), int(y1[0]) + 1)
-    mx, my = np.meshgrid(xs, ys)
-    return mx.reshape(-1), my.reshape(-1)
-
-
 # ------------------------------------------------------------- cell ids
 
 
@@ -110,16 +99,6 @@ def cell_parent(cell, steps=1):
     return pack_cell(z - steps, x >> steps, y >> steps)
 
 
-def cell_children(cell):
-    z, x, y = unpack_cell(np.atleast_1d(cell))
-    zz = z + 1
-    kids = []
-    for dx in (0, 1):
-        for dy in (0, 1):
-            kids.append(pack_cell(zz, (x << 1) + dx, (y << 1) + dy))
-    return np.stack(kids, axis=-1)
-
-
 def grid_disk(cell, k):
     """k-ring of cells (Chebyshev disk, x wraps around the antimeridian,
     y clamps at the poles) — the candidate-expansion primitive for the
@@ -135,19 +114,6 @@ def grid_disk(cell, k):
     valid = (ys >= 0) & (ys < n[:, None])
     cells = pack_cell(np.broadcast_to(z[:, None], xs.shape), xs, np.clip(ys, 0, None))
     return np.where(valid, cells, -1)
-
-
-def cell_bbox(cell, scheme="equirect"):
-    """Cell id -> lon/lat bbox [w, s, e, n]."""
-    z, x, y = unpack_cell(cell)
-    n = np.float64(2.0) ** z
-    if scheme == "mercator":
-        return tile_to_bbox_4326(int(x), int(y), int(z))
-    w = x / n * 360.0 - 180.0
-    e = (x + 1) / n * 360.0 - 180.0
-    north = 90.0 - y / n * 180.0
-    south = 90.0 - (y + 1) / n * 180.0
-    return [w, south, e, north]
 
 
 # ------------------------------------------------------------- Spark exprs

@@ -2,8 +2,8 @@
 
 Re-creates the entire pipeline of geowarp(options) (geowarp.js:113-1002)
 as vectorized numpy.  One call warps one (source window, output grid)
-pair; the Spark engine parallelizes calls per tile partition inside
-``applyInPandas`` (see geowarp_spark.operators.warp_tiles).
+pair; the Spark engine parallelizes calls per partition inside
+``mapInPandas`` stages (see geowarp_spark.operators.warp_tiles).
 
 Pipeline stages mirror the reference lifecycle (SURVEY.md §3):
   1. validate/normalize   geowarp.js:167-251

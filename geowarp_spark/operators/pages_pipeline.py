@@ -14,10 +14,10 @@ Plan shape (scale posture):
         ──groupBy(cell@z+px_bits).count()          one shuffle, partial aggs
                                                    (spatial.cell_rollup)
         ──(cell@z, px, py) from id arithmetic      no shuffle
-        ──repartition(n_cores, cell)               second shuffle on tile id
-          .sortWithinPartitions(cell)              (small: one row per
+        ──stream_groups(cell): repartition(n_cores, second shuffle on tile id
+          cell).sortWithinPartitions(cell)         (small: one row per
                                                     nonzero pixel)
-        ──mapInPandas(paint)                       streamed: every tile of
+          .mapInPandas(paint)                      streamed: every tile of
                                                    an Arrow batch in one
                                                    numpy pass
   -> tile rows (binary uint32 count grids) -> CheckpointStore.commit
@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from ..grid.hilbert import bbox_cover_cell_count, bbox_cover_cell_ids
 from ..grid.tiles import X_BITS
 from ..sources.pages import LAT_SQL, LON_SQL
+from .groups import stream_groups
 from .spatial import _prune_scan, cell_rollup, coarsen_sql
 
 RASTER_TILE_SCHEMA = (
@@ -95,30 +96,27 @@ def rasterize_tiles(points: DataFrame, z: int, px_bits: int = 6,
     pixel), so the Arrow exchange carries counts, not points — the heavy
     reduction happened JVM-side with partial aggregation.
 
-    The paint is one streamed pass, not a Python call per tile: the
-    counts are hash-partitioned on ``cell`` to ``defaultParallelism``
-    partitions (explicit width, as in warp_tiles), sorted within each
-    partition, and a mapInPandas paints every tile of an Arrow batch at
-    once — tile runs from ``np.unique`` on the sorted cells, one
-    fancy-index assignment into an ``(n_tiles, size * size)`` block
-    (exact: ``(cell, px, py)`` is unique, one row per fine cell) and
-    ``n_pages`` from one segmented sum.  The last tile of a batch may
-    continue in the next, so its rows are held back and painted with
-    the batch that closes it.
+    The paint is one streamed pass, not a Python call per tile:
+    groups.stream_groups hash-partitions the counts on ``cell``, sorts
+    them and hands whole tiles to one mapInPandas, which paints every
+    tile of an Arrow batch at once — tile runs from ``np.unique`` on the
+    sorted cells, one fancy-index assignment into an
+    ``(n_tiles, size * size)`` block (exact: ``(cell, px, py)`` is
+    unique, one row per fine cell) and ``n_pages`` from one segmented
+    sum.
 
-    Memory: at most one tile's rows (``size**2``) are held across a
-    batch boundary, and each yielded frame holds at most
+    Memory: at most one tile's rows (``size**2``) carry across a batch
+    boundary, and each yielded frame holds at most
     ``_PAINT_FRAME_BYTES`` (64 MB) of grids — or one tile when a single
     grid is larger.
     """
     size = 1 << px_bits
     npix = size * size
     per_frame = max(1, _PAINT_FRAME_BYTES // (4 * npix))
-    counts = pixel_counts(points, z, px_bits, lon, lat)
-    n_cores = points.sparkSession.sparkContext.defaultParallelism
 
-    def tiles(cell, px, py, n):
+    def tiles(pdf):
         # rows of whole tiles, sorted by cell -> frames of <= per_frame tiles
+        cell, px, py, n = (pdf[c].to_numpy() for c in ("cell", "px", "py", "n"))
         ids, start, inv = np.unique(cell, return_index=True, return_inverse=True)
         bounds = np.r_[start, len(cell)]
         for a in range(0, len(ids), per_frame):
@@ -134,24 +132,8 @@ def rasterize_tiles(points: DataFrame, z: int, px_bits: int = 6,
                 "data": [g.tobytes() for g in grid],
             })
 
-    def paint(batches):
-        held = None   # columns of the tile the last batch left open
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cols = [pdf[c].to_numpy() for c in ("cell", "px", "py", "n")]
-            if held is not None:
-                cols = [np.concatenate(pair) for pair in zip(held, cols)]
-            cut = int(np.searchsorted(cols[0], cols[0][-1]))
-            if cut:
-                yield from tiles(*(c[:cut] for c in cols))
-            held = [c[cut:] for c in cols]
-        if held is not None:
-            yield from tiles(*held)
-
-    return (counts.repartition(n_cores, "cell")
-            .sortWithinPartitions("cell")
-            .mapInPandas(paint, schema=RASTER_TILE_SCHEMA))
+    return stream_groups(pixel_counts(points, z, px_bits, lon, lat),
+                         ["cell"], [], tiles, RASTER_TILE_SCHEMA)
 
 
 def pages_tile_pyramid(spark: SparkSession, sf_dir: str, z: int = 6,

@@ -39,6 +39,7 @@ from ..kernels.affine import Geotransform
 from ..kernels.bbox import reproject_bbox
 from ..kernels.proj import transformer
 from ..kernels.warp import warp
+from .groups import stream_groups
 
 CHUNK_SCHEMA = StructType([
     StructField("raster_id", StringType()),
@@ -275,10 +276,11 @@ def mosaic_chunks(chunks: DataFrame, *, chunk=256, halo=8,
 
     Scale: piece emission is a narrow mapInPandas (each input chunk
     crops to the few virtual chunks its haloed windows intersect); the
-    composite groupBy is the plan's one payload shuffle, proportional to
-    mosaic area like any regrid, with explicit width (the same AQE
-    small-partial coalescing gotcha as the merge stage).  Precedence
-    needs no global sort — each virtual chunk orders its own pieces.
+    composite is a groups.stream_groups pass keyed on the virtual chunk,
+    the plan's one payload shuffle, proportional to mosaic area like any
+    regrid.  Precedence needs no global sort: the stream's within-
+    partition sort orders each virtual chunk's pieces by
+    (raster_id, pr0, pc0).
 
     ``meta`` (r8): optional pre-known per-raster metadata — a list of
     dicts/Rows with keys (raster_id, srs, geotransform, bands, dtype,
@@ -357,10 +359,9 @@ def mosaic_chunks(chunks: DataFrame, *, chunk=256, halo=8,
         wc0 = max(0, kc * chunk - halo)
         wc1 = min(vw, (kc + 1) * chunk + halo)
         canvas = np.full((bands, wr1 - wr0, wc1 - wc0), np.nan)
-        # ascending raster_id: later pieces (higher id) overwrite where
-        # valid; within one raster overlapping halo pieces are identical
-        # pixels, so tie order is value-neutral (sorted for determinism)
-        pdf = pdf.sort_values(["raster_id", "pr0", "pc0"], kind="mergesort")
+        # pieces arrive in ascending raster_id: later pieces (higher id)
+        # overwrite where valid; within one raster overlapping halo pieces
+        # are identical pixels, so tie order is value-neutral
         for p in pdf.itertuples(index=False):
             block = np.frombuffer(p.data, dtype=np.dtype(p.dtype)).reshape(
                 bands, int(p.ph), int(p.pw)).astype(np.float64)
@@ -391,13 +392,12 @@ def mosaic_chunks(chunks: DataFrame, *, chunk=256, halo=8,
             "data": data.tobytes(),
         }])
 
-    n_parts = spark.sparkContext.defaultParallelism
-    pieces = chunks.mapInPandas(gen_pieces, schema=PIECE_SCHEMA)
-    # explicit-width exchange: composite partials are small per piece, so
-    # AQE's advisory target would coalesce the shuffle to a few tasks
-    pieces = pieces.repartition(n_parts, "vkr", "vkc")
-    return pieces.groupBy("vkr", "vkc").applyInPandas(
-        composite, schema=CHUNK_SCHEMA)
+    keys = ["vkr", "vkc"]
+    return stream_groups(
+        chunks.mapInPandas(gen_pieces, schema=PIECE_SCHEMA), keys,
+        ["raster_id", "pr0", "pc0"],
+        lambda pdf: (composite(g) for _, g in pdf.groupby(keys, sort=False)),
+        CHUNK_SCHEMA)
 
 
 def tiles_df(spark: SparkSession, zooms, bbox_4326=None,
@@ -730,13 +730,6 @@ def warp_tiles(tiles: DataFrame, chunks: DataFrame, *, method="near",
                     f"bands={sorted(pdf['bands'].unique().tolist())} "
                     f"dtypes={sorted(pdf['tgt_dtype'].unique().tolist())} "
                     "— pass out_dtype= to cast, or mosaic per-dtype groups")
-            # deterministic cross-raster precedence: apply partials in
-            # ascending raster_id (ties broken by rect origin), so the
-            # highest raster_id wins where sources overlap.  Within one
-            # raster owned rects are disjoint, so this only orders the
-            # cross-raster case.
-            pdf = pdf.sort_values(["raster_id", "r0", "c0"],
-                                  kind="mergesort")
         first = pdf.iloc[0]
         bands = int(first["bands"])
         dt = np.dtype(first["tgt_dtype"])
@@ -758,7 +751,8 @@ def warp_tiles(tiles: DataFrame, chunks: DataFrame, *, method="near",
                 # box-window edge semantics), so at source seams two
                 # rasters both claim boundary pixels — one holding fill,
                 # which must never clobber the other's real value.
-                # Among valid overlaps, the raster_id sort above decides.
+                # Among valid overlaps, the stream's raster_id order
+                # decides.
                 bm = block[:, mask].astype(np.float64)
                 validm = np.isfinite(bm)
                 if out_no_data is not None:
@@ -783,17 +777,18 @@ def warp_tiles(tiles: DataFrame, chunks: DataFrame, *, method="near",
             "valid_px": int(np.isfinite(data.astype(np.float64)).sum()),
         }])
 
-    # explicit-width exchange for the merge: partial rects are ~64 KB
-    # each, so AQE's 64 MB advisory target coalesces the merge shuffle
-    # to a handful of tasks regardless of cores (measured: the merge ran
-    # 3-way at local[8]).  repartition(n, cols) is user-specified — AQE
-    # keeps its width — and it satisfies the groupBy's clustered
-    # distribution, so Catalyst adds NO second exchange: the payload
-    # still crosses exactly once.
+    # one payload exchange: stream_groups' explicit width keeps the
+    # ~64 KB partial rects from being coalesced to a few merge tasks
+    # (measured: the merge ran 3-way at local[8] under AQE's advisory
+    # size).  Its sort applies partials in ascending raster_id (ties by
+    # rect origin), so in mosaic mode the highest raster_id wins where
+    # sources overlap; within one raster owned rects are disjoint, so
+    # the order only matters across rasters.
     merge_keys = ["z", "x", "y"] if mosaic else ["raster_id", "z", "x", "y"]
-    partials = partials.repartition(n_parts, *merge_keys)
-    return partials.groupBy(*merge_keys).applyInPandas(
-        merge, schema=TILE_OUT_SCHEMA)
+    return stream_groups(
+        partials, merge_keys, ["raster_id", "r0", "c0"],
+        lambda pdf: (merge(g) for _, g in pdf.groupby(merge_keys, sort=False)),
+        TILE_OUT_SCHEMA)
 
 
 def _chunk_partials(rec, method, out_size, out_srs, out_dtype, turbo,

@@ -46,10 +46,11 @@ def get_spark(app_name: str = "geowarp-spark", master: str | None = None,
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
-        # 3x cores: grouped-UDF stages (applyInPandas warps) have skewed
-        # per-group cost (z9 tiles cost ~4x z10), so over-partitioning
-        # lets the scheduler load-balance the tail — measured 3.5x faster
-        # than partitions == cores at local[32]
+        # 3x cores, for JVM shuffles (aggregates, joins) over skewed
+        # keys: over-partitioning lets the scheduler load-balance the
+        # tail.  Python stages do not take this width: each repartitions
+        # to defaultParallelism itself (groups.stream_groups, the warp
+        # pair discovery).
         try:
             n = int(master.split("[")[1].rstrip("]")) if "[" in master else int(cpus)
         except ValueError:

@@ -90,14 +90,3 @@ def pages_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("text"),
         F.col("lang"),
     )
-
-
-def geotagged_pages(spark: SparkSession, sf_dir: str, cell_z: int = 12) -> DataFrame:
-    """pages + (lon, lat, cell) — the geotag is exact integer arithmetic,
-    cells use the equirect scheme (grid.tiles.cell_sql_expr)."""
-    from ..grid.tiles import cell_sql_expr
-
-    pages = pages_df(spark, sf_dir)
-    return pages.withColumn("lon", F.expr(LON_SQL)).withColumn(
-        "lat", F.expr(LAT_SQL)
-    ).withColumn("cell", F.expr(cell_sql_expr("lon", "lat", cell_z)))

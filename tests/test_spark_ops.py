@@ -2333,3 +2333,117 @@ def test_pages_tile_pyramid_snapshot_matches_rasterize(spark, sf_dir, tmp_path):
     assert len(want) > 0 and digest(snap) == want
     lin = CheckpointStore(spark, str(tmp_path)).read_lineage().collect()
     assert sum(r["tiles_emitted"] for r in lin) == len(want)
+
+
+def _overlapping_rasters(spark):
+    """Two same-extent constant rasters (50 under 200) chunked at 256:
+    every covered tile merges one partial per raster, so the mosaic
+    precedence decides its pixels."""
+    from geowarp_spark.kernels.bbox import reproject_bbox
+    from geowarp_spark.kernels.proj import transformer
+    from geowarp_spark.operators.warp_tiles import chunks_to_df, tiles_df
+    from geowarp_spark.sources.fixtures import build_fixture
+
+    base = build_fixture("rgba_webmerc")
+    ch = chunks_to_df(spark, dict(base, raster_id="a_lo",
+                                  data=np.full_like(base["data"], 50)),
+                      chunk=256, halo=8).unionByName(
+        chunks_to_df(spark, dict(base, raster_id="b_hi",
+                                 data=np.full_like(base["data"], 200)),
+                     chunk=256, halo=8))
+    bb = reproject_bbox(base["bbox"], transformer(base["srs"], 4326).transform,
+                        density=16, nan_strategy="skip")
+    return ch, tiles_df(spark, [9], bbox_4326=bb)
+
+
+def test_grouped_warp_stages_stream_one_map_in_pandas(spark):
+    """The warp merge (both modes) and the mosaic_chunks composite
+    regroup through groups.stream_groups: no grouped pandas UDF; each
+    grouped stage is one MapInPandas over a sort on its keys then its
+    precedence order, fed by a REPARTITION_BY_NUM exchange on the keys
+    at defaultParallelism; and the plans hold as many exchanges as the
+    grouped-UDF plans did (4, 4 and 1), so the payload crosses once."""
+    import re
+
+    from geowarp_spark.operators.warp_tiles import mosaic_chunks, warp_tiles
+
+    ch, tiles = _overlapping_rasters(spark)
+    kw = dict(out_size=32, join_strategy="chunks", chunk=256, halo=8)
+    rect = ["raster_id", "r0", "c0"]
+    cases = [
+        (warp_tiles(tiles, ch, **kw), ["raster_id", "z", "x", "y"], rect, 4),
+        (warp_tiles(tiles, ch, mosaic=True, **kw), ["z", "x", "y"], rect, 4),
+        (mosaic_chunks(ch, chunk=256, halo=8, hole_no_data=0),
+         ["vkr", "vkc"], ["raster_id", "pr0", "pc0"], 1),
+    ]
+    stream = re.compile(
+        r"MapInPandas \w+\([^\n]*\n\s*\+- Sort \[([^\]]*)\][^\n]*\n"
+        r"\s*\+- Exchange hashpartitioning\(([^)]*)\), (\w+)")
+    n = spark.sparkContext.defaultParallelism
+    for df, keys, order, n_exchanges in cases:
+        plan = re.sub(r"#\d+L?", "", _plan(df))
+        assert "FlatMapGroupsInPandas" not in plan, keys
+        assert len(re.findall(r"\bMapInPandas\b", plan)) == 2, keys
+        assert stream.findall(plan) == [(
+            ", ".join(f"{c} ASC NULLS FIRST" for c in keys + order),
+            ", ".join(keys + [str(n)]), "REPARTITION_BY_NUM")], keys
+        assert len(re.findall(r"Exchange ", plan)) == n_exchanges, keys
+
+
+def test_grouped_warp_stages_identical_across_batches(spark):
+    """stream_groups carries a group that straddles an Arrow batch into
+    the next batch.  At maxRecordsPerBatch 1 and 7 every multi-row
+    group crosses a boundary, and the merged tiles (non-mosaic warp,
+    mosaic precedence over overlapping rasters) and the mosaic_chunks
+    composite -> bilinear warp keep the CRCs of the default batch size."""
+    from geowarp_spark.kernels.affine import Geotransform
+    from geowarp_spark.kernels.bbox import reproject_bbox
+    from geowarp_spark.kernels.proj import transformer
+    from geowarp_spark.operators.warp_tiles import (
+        chunks_to_df, mosaic_chunks, tiles_df, warp_tiles)
+    from geowarp_spark.sources.fixtures import build_fixture
+
+    fx = build_fixture("rgb_smallscale")
+    g = fx["geotransform"] or Geotransform.from_bbox(
+        fx["bbox"], fx["width"], fx["height"]).gt
+
+    def half(rid, c0, c1):
+        d = np.ascontiguousarray(fx["data"][:, :, c0:c1])
+        return dict(fx, raster_id=rid, data=d, width=c1 - c0,
+                    geotransform=[g[0] + c0 * g[1], g[1], g[2],
+                                  g[3] + c0 * g[4], g[4], g[5]])
+
+    over, over_tiles = _overlapping_rasters(spark)
+    whole = chunks_to_df(spark, fx, chunk=128, halo=8)
+    halves = chunks_to_df(spark, half("a_left", 0, 165), chunk=128, halo=8) \
+        .unionByName(chunks_to_df(spark, half("b_right", 165, fx["width"]),
+                                  chunk=128, halo=8))
+    bb = reproject_bbox(fx["bbox"], transformer(fx["srs"], 4326).transform,
+                        density=16, nan_strategy="skip")
+    tiles = tiles_df(spark, [9], bbox_4326=bb)
+    kw = dict(out_size=32, join_strategy="chunks", halo=8)
+
+    def crcs(df):
+        return sorted(tuple(r) for r in df.select(
+            "raster_id", "z", "x", "y", "n_chunks", F.crc32("data")).collect())
+
+    def runs():
+        return [
+            crcs(warp_tiles(tiles, whole, chunk=128, **kw)),
+            crcs(warp_tiles(over_tiles, over, chunk=256, mosaic=True, **kw)),
+            crcs(warp_tiles(tiles, mosaic_chunks(halves, chunk=128, halo=8),
+                            method="bilinear", chunk=128, **kw)),
+        ]
+
+    want = runs()
+    for rows in want:
+        # every stage merges multi-row groups
+        assert rows and max(r[4] for r in rows) > 1
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    try:
+        for batch in ("1", "7"):
+            spark.conf.set(key, batch)
+            assert runs() == want, batch
+    finally:
+        spark.conf.set(key, old)

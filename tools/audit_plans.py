@@ -174,101 +174,77 @@ def _audit_knn_certified(spark):
     return det
 
 
-def _audit_mosaic_composite(spark):
-    """Round-6 custom audit: mosaic_chunks must be ONE payload shuffle
-    (piece emission mapInPandas -> explicit-width repartition ->
-    composite applyInPandas), not a per-raster collect or a global
-    sort."""
+def _audit_streams(spark):
+    """Every per-key pandas stage is one groups.stream_groups pass: an
+    explicit-width repartition on the group keys, a sort within
+    partitions and ONE mapInPandas that serves every group of an Arrow
+    batch, never a grouped pandas UDF (one Python call per group).
+    Covers the rasterize paint, the mosaic_chunks composite and the
+    warp_tiles merge in both modes."""
     import numpy as np
+    from pyspark.sql import functions as F
 
     from geowarp_spark.kernels.affine import Geotransform
-    from geowarp_spark.operators.warp_tiles import chunks_to_df, mosaic_chunks
+    from geowarp_spark.kernels.bbox import reproject_bbox
+    from geowarp_spark.kernels.proj import transformer
+    from geowarp_spark.operators.pages_pipeline import rasterize_tiles
+    from geowarp_spark.operators.warp_tiles import (
+        chunks_to_df, mosaic_chunks, tiles_df, warp_tiles)
     from geowarp_spark.sources.fixtures import build_fixture
 
     fx = build_fixture("rgb_smallscale")
     g = fx["geotransform"] or Geotransform.from_bbox(
         fx["bbox"], fx["width"], fx["height"]).gt
-    split = 165
 
     def half(rid, c0, c1):
         d = np.ascontiguousarray(fx["data"][:, :, c0:c1])
-        gt = [g[0] + c0 * g[1], g[1], g[2], g[3] + c0 * g[4], g[4], g[5]]
-        w, h = int(d.shape[2]), int(d.shape[1])
-        cs = np.array([0.0, w, 0.0, w])
-        rs = np.array([0.0, 0.0, h, h])
-        xs = gt[0] + cs * gt[1] + rs * gt[2]
-        ys = gt[3] + cs * gt[4] + rs * gt[5]
-        return dict(fx, raster_id=rid, data=d, width=w, height=h,
-                    geotransform=gt,
-                    bbox=[float(xs.min()), float(ys.min()),
-                          float(xs.max()), float(ys.max())])
+        return dict(fx, raster_id=rid, data=d, width=c1 - c0,
+                    geotransform=[g[0] + c0 * g[1], g[1], g[2],
+                                  g[3] + c0 * g[4], g[4], g[5]])
 
-    ch = chunks_to_df(spark, half("a_left", 0, split), chunk=128, halo=8) \
+    ch = chunks_to_df(spark, half("a_left", 0, 165), chunk=128, halo=8) \
         .unionByName(chunks_to_df(
-            spark, half("b_right", split, fx["width"]), chunk=128, halo=8))
-    comp = mosaic_chunks(ch, chunk=128, halo=8)
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        comp.explain("formatted")
-    plan = buf.getvalue()
-    n_exchange = len(re.findall(r"\(\d+\) Exchange\b", plan))
-    n_sort = len(re.findall(r"\(\d+\) Sort\b", plan))
-    det = [
-        "## mosaic_chunks composite (round 6)",
-        "",
-        "**Expectation:** piece emission is a narrow mapInPandas; the "
-        "composite groupBy is the plan's ONE payload shuffle (explicit "
-        "width — the AQE small-partial coalescing gotcha); precedence is "
-        "resolved per virtual chunk, so no global Sort node.",
-        "",
-        f"Measured: **{n_exchange} Exchange** (the repartition feeding the "
-        f"composite; its groupBy reuses that partitioning), {n_sort} Sort "
-        "nodes.",
-        "",
-        "```",
-        plan.strip()[:3000],
-        "```", "",
-    ]
-    return det
-
-
-def _audit_rasterize(spark):
-    """rasterize_tiles paints in ONE streamed mapInPandas over a
-    cell-repartitioned, sorted stream: two shuffles (the count aggregate
-    on the fine cell and the explicit-width repartition on cell) and no
-    grouped pandas UDF, i.e. no Python call per tile."""
-    from pyspark.sql import functions as F
-
-    from geowarp_spark.operators.pages_pipeline import rasterize_tiles
-
+            spark, half("b_right", 165, fx["width"]), chunk=128, halo=8))
+    bb = reproject_bbox(fx["bbox"], transformer(fx["srs"], 4326).transform,
+                        density=16, nan_strategy="skip")
+    tiles = tiles_df(spark, [9], bbox_4326=bb)
+    kw = dict(out_size=64, join_strategy="chunks", chunk=128, halo=8)
     pts = spark.range(10_000).select(
         (F.rand(0) * 360.0 - 180.0).alias("lon"),
         (F.rand(1) * 180.0 - 90.0).alias("lat"))
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        rasterize_tiles(pts, z=4, px_bits=6).explain("formatted")
-    plan = buf.getvalue()
-    n_exchange = len(re.findall(r"\(\d+\) Exchange\b", plan))
-    n_grouped = len(re.findall(r"\(\d+\) FlatMapGroupsInPandas\b", plan))
-    n_map = len(re.findall(r"\(\d+\) MapInPandas\b", plan))
+    stages = {
+        "rasterize_tiles paint": rasterize_tiles(pts, z=4, px_bits=6),
+        "mosaic_chunks composite": mosaic_chunks(ch, chunk=128, halo=8),
+        "warp_tiles merge": warp_tiles(tiles, ch, **kw),
+        "warp_tiles merge (mosaic=True)": warp_tiles(tiles, ch, mosaic=True,
+                                                     **kw),
+    }
     det = [
-        "## rasterize_tiles streamed paint",
+        "## grouped stages: one stream_groups pass each",
         "",
-        "**Expectation:** the paint is one mapInPandas over a stream "
-        "repartitioned on cell to defaultParallelism and sorted within "
-        "partitions; every tile of an Arrow batch is painted in one numpy "
-        "pass, so the plan holds no grouped pandas UDF.",
+        "**Expectation:** each per-key pandas stage is one mapInPandas over "
+        "a stream repartitioned on its group keys to defaultParallelism "
+        "and sorted within partitions (keys, then the precedence order); "
+        "the plan holds no grouped pandas UDF.",
         "",
-        f"Measured: **{n_exchange} Exchange** (fine-cell partial+final "
-        f"count; cell repartition), {n_map} MapInPandas, {n_grouped} "
-        "FlatMapGroupsInPandas (must be 0).",
-        "",
-        "```",
-        plan.strip()[:3000],
-        "```", "",
+        "| stage | Exchange | MapInPandas | FlatMapGroupsInPandas (must be 0) |",
+        "|---|---|---|---|",
     ]
-    assert n_grouped == 0, "rasterize paint fell back to a grouped pandas UDF"
-    return det
+    plans = []
+    for name, df in stages.items():
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            df.explain("formatted")
+        plan = buf.getvalue()
+        n_exchange = len(re.findall(r"\(\d+\) Exchange\b", plan))
+        n_map = len(re.findall(r"\(\d+\) MapInPandas\b", plan))
+        n_grouped = len(re.findall(r"\(\d+\) FlatMapGroupsInPandas\b", plan))
+        print(f"{name}: {n_exchange} Exchange, {n_map} MapInPandas, "
+              f"{n_grouped} FlatMapGroupsInPandas")
+        det.append(f"| {name} | {n_exchange} | {n_map} | {n_grouped} |")
+        plans += [f"### {name}", "", "```", plan.strip()[:3000], "```", ""]
+        assert n_grouped == 0, f"{name} fell back to a grouped pandas UDF"
+    return det + [""] + plans
 
 
 def _audit_pip_jit(spark):
@@ -446,12 +422,11 @@ def main():
     out.append("")
     out += details
     # plan shapes that live outside queries() (stored-table pruning, the
-    # certified kNN pass, the composite operator, the rasterize paint,
-    # the pruned pip scan's JIT budget, the cell-count core)
+    # certified kNN pass, the grouped pandas stages, the pruned pip
+    # scan's JIT budget, the cell-count core)
     out += _audit_hilbert_pruning(spark)
     out += _audit_knn_certified(spark)
-    out += _audit_mosaic_composite(spark)
-    out += _audit_rasterize(spark)
+    out += _audit_streams(spark)
     out += _audit_pip_jit(spark)
     out += _audit_count_core(spark)
     with open(out_path, "w") as f:
