@@ -74,41 +74,95 @@ TILE_OUT_SCHEMA = StructType([
 ])
 
 
+class _Lattice:
+    """The chunk lattice every chunk table is cut on (SURVEY §7 hard-part
+    2: overlap-duplicate halos at ingest, tag owner).  On an n-px axis
+    chunk k owns the core [k*chunk, (k+1)*chunk) and carries the haloed
+    window [max(0, k*chunk - halo), min(n, (k+1)*chunk + halo)).  Ingest,
+    the mosaic composite, its analytic metadata and the partials' owner
+    recovery all read windows, cores and bboxes from here.  ``halo`` must
+    lie in [0, chunk): a wider halo gives two chunks the same offset, so
+    an offset would no longer name one core."""
+
+    def __init__(self, chunk, halo):
+        if not 0 <= halo < chunk:
+            raise ValueError(
+                f"chunk lattice needs 0 <= halo < chunk; got chunk={chunk}, "
+                f"halo={halo}")
+        self.chunk, self.halo = chunk, halo
+
+    def window(self, k, n):
+        """Haloed window [w0, w1) of chunk k on an n-px axis."""
+        return (max(0, k * self.chunk - self.halo),
+                min(n, (k + 1) * self.chunk + self.halo))
+
+    def windows(self, n, lo=0, hi=None):
+        """(k, a, b) for every chunk whose window meets [lo, hi) (default:
+        the whole axis) on an n-px axis; [a, b) is the overlap."""
+        c, h = self.chunk, self.halo
+        hi = n if hi is None else hi
+        for k in range(max(0, (lo - h) // c),
+                       min((n + c - 1) // c, (hi + h + c - 1) // c)):
+            w0, w1 = self.window(k, n)
+            if max(w0, lo) < min(w1, hi):
+                yield k, max(w0, lo), min(w1, hi)
+
+    def core(self, off, size, n, lo, hi):
+        """Owned core of the chunk whose window is [off, off + size) on an
+        n-px axis; the first and last cores reach out to lo and hi.
+        Raises when that window is not one of this lattice's."""
+        c = self.chunk
+        k = 0 if off == 0 else (off + self.halo) // c
+        w0, w1 = self.window(k, n)
+        if (w0, w1) != (off, off + size):
+            raise ValueError(
+                f"chunk table window [{off}, {off + size}) of a {n}-px axis "
+                f"is off the chunk={c}, halo={self.halo} lattice (its chunk "
+                f"{k} window is [{w0}, {w1})): cut the chunk table with the "
+                "chunk= and halo= given to warp_tiles")
+        return (lo if k == 0 else k * c, hi if (k + 1) * c >= n else (k + 1) * c)
+
+    @staticmethod
+    def bbox_4326(g, to4326, r0, r1, c0, c1):
+        """EPSG:4326 bbox of the window rows [r0, r1) x cols [c0, c1) of a
+        raster with Geotransform ``g``."""
+        xs, ys = g.forward([c0, c1, c0, c1], [r0, r0, r1, r1])
+        bb = reproject_bbox(
+            [float(xs.min()), float(ys.min()), float(xs.max()), float(ys.max())],
+            to4326.transform, density=8, nan_strategy="skip")
+        return [float(v) for v in bb]
+
+
 def fixture_chunk_records(fixture, chunk=256, halo=8):
     """Fixture dict -> list of chunk record dicts (CHUNK_SCHEMA fields,
     data as raw bytes).  Halo rows/cols are duplicated at ingest (SURVEY
     §7 hard-part 2) so any window reaching <= halo px past a chunk edge
     sees true values."""
-    from ..sources.fixtures import chunk_fixture
-
-    rows = []
-    full_gt = fixture["geotransform"] or Geotransform.from_bbox(
-        fixture["bbox"], fixture["width"], fixture["height"]
-    ).gt
-    inv = transformer(fixture["srs"], 4326)
-    for ch in chunk_fixture(fixture, chunk=chunk, halo=halo):
-        bb = ch["bbox"]
-        bb4326 = reproject_bbox(bb, inv.transform, density=8, nan_strategy="skip")
-        g = Geotransform(full_gt)
-        # recover the halo-adjusted offsets from the chunk geotransform
-        c0, r0 = g.inverse(ch["geotransform"][0], ch["geotransform"][3])
-        rows.append({
-            "raster_id": ch["raster_id"],
-            "srs": int(ch["srs"]),
-            "geotransform": [float(v) for v in full_gt],
-            "row_off": int(round(float(r0))),
-            "col_off": int(round(float(c0))),
-            "height": ch["height"],
-            "width": ch["width"],
-            "bands": ch["bands"],
-            "dtype": ch["dtype"],
-            "no_data": None if ch["no_data"] is None else float(ch["no_data"]),
-            "bbox_4326": [float(v) for v in bb4326],
-            "raster_height": int(fixture["height"]),
-            "raster_width": int(fixture["width"]),
-            "data": ch["data"].tobytes(),
-        })
-    return rows
+    lat = _Lattice(chunk, halo)
+    data = fixture["data"]
+    b, h, w = data.shape
+    full_gt = [float(v) for v in fixture["geotransform"]
+               or Geotransform.from_bbox(fixture["bbox"], w, h).gt]
+    g = Geotransform(full_gt)
+    to4326 = transformer(fixture["srs"], 4326)
+    nd = fixture["no_data"]
+    return [{
+        "raster_id": fixture["raster_id"],
+        "srs": int(fixture["srs"]),
+        "geotransform": list(full_gt),
+        "row_off": r0,
+        "col_off": c0,
+        "height": r1 - r0,
+        "width": c1 - c0,
+        "bands": b,
+        "dtype": fixture["dtype"],
+        "no_data": None if nd is None else float(nd),
+        "bbox_4326": lat.bbox_4326(g, to4326, r0, r1, c0, c1),
+        "raster_height": h,
+        "raster_width": w,
+        # tobytes() of a strided crop is ~6x slower than of a C-order copy
+        "data": np.ascontiguousarray(data[:, r0:r1, c0:c1]).tobytes(),
+    } for _, r0, r1 in lat.windows(h) for _, c0, c1 in lat.windows(w)]
 
 
 def chunks_to_df(spark: SparkSession, fixture, chunk=256, halo=8) -> DataFrame:
@@ -131,11 +185,12 @@ PIECE_SCHEMA = StructType([
 ])
 
 
-def _mosaic_lattice(meta, chunk, halo, hole_no_data):
-    """Geometry of the virtual mosaic lattice, shared by mosaic_chunks
-    (the composite) and mosaic_meta_df (the analytic pair-discovery
-    metadata) so the two can never drift: validates the per-raster
-    metadata and returns the lattice parameters."""
+def _mosaic_frame(meta, hole_no_data):
+    """The virtual raster a mosaic composites onto, shared by
+    mosaic_chunks (the composite) and mosaic_meta_df (the analytic
+    pair-discovery metadata) so the two can never drift: validates the
+    per-raster metadata and returns the virtual extent, geotransform and
+    hole fill."""
     if len({m["srs"] for m in meta}) != 1 \
             or len({m["bands"] for m in meta}) != 1 \
             or len({m["dtype"] for m in meta}) != 1:
@@ -189,9 +244,7 @@ def _mosaic_lattice(meta, chunk, halo, hole_no_data):
 
     return {"srs": srs, "bands": bands, "dt": dt, "doffs": doffs,
             "vh": vh, "vw": vw, "vgt": vgt,
-            "hole_fill": hole_fill, "out_nd": out_nd,
-            "nkr": (vh + chunk - 1) // chunk,
-            "nkc": (vw + chunk - 1) // chunk}
+            "hole_fill": hole_fill, "out_nd": out_nd}
 
 
 def mosaic_meta_df(spark: SparkSession, meta, *, chunk=256, halo=8,
@@ -201,11 +254,11 @@ def mosaic_meta_df(spark: SparkSession, meta, *, chunk=256, halo=8,
     (raster_id, row_off, col_off, bbox_4326) the composite's rows would
     carry — computed from the lattice geometry alone, WITHOUT executing
     the composite.  Pass as ``warp_tiles(..., chunks_meta=...)`` so the
-    composite has exactly ONE consumer (the payload join): the r8 plan
-    audit found the composite applyInPandas executed twice per action
-    (metadata + payload), and checkpoint-based fixes either force a
-    build-time job (AQE materializes the piece shuffle when the RDD is
-    taken) or cache payload.
+    composite has exactly ONE consumer (the payload join): without it
+    the composite runs twice per action (metadata + payload), and
+    checkpoint-based fixes either force a build-time job (AQE
+    materializes the piece shuffle when the RDD is taken) or cache
+    payload.
 
     The row set is a SUPERSET of the composite's (positions no piece
     covers emit a meta row but no composite row): superset pairs are
@@ -215,28 +268,13 @@ def mosaic_meta_df(spark: SparkSession, meta, *, chunk=256, halo=8,
     bench fixture, a few thousand chunks); at corpus scale derive the
     metadata distributed or let the operator read it from the composite.
     """
-    lat = _mosaic_lattice(meta, chunk, halo, hole_no_data)
-    vh, vw, vgt = lat["vh"], lat["vw"], lat["vgt"]
-    inv4326 = transformer(lat["srs"], 4326)
-    vgtG = Geotransform(vgt)
-    rows = []
-    for kr in range(lat["nkr"]):
-        wr0 = max(0, kr * chunk - halo)
-        wr1 = min(vh, (kr + 1) * chunk + halo)
-        for kc in range(lat["nkc"]):
-            wc0 = max(0, kc * chunk - halo)
-            wc1 = min(vw, (kc + 1) * chunk + halo)
-            # identical corner/bbox math to mosaic_chunks' composite()
-            cs = np.array([wc0, wc1, wc0, wc1], dtype=np.float64)
-            rs = np.array([wr0, wr0, wr1, wr1], dtype=np.float64)
-            xs, ys = vgtG.forward(cs, rs)
-            bb = [float(xs.min()), float(ys.min()),
-                  float(xs.max()), float(ys.max())]
-            bb4326 = reproject_bbox(bb, inv4326.transform, density=8,
-                                    nan_strategy="skip")
-            rows.append({"raster_id": raster_id, "row_off": wr0,
-                         "col_off": wc0,
-                         "bbox_4326": [float(v) for v in bb4326]})
+    lat = _Lattice(chunk, halo)
+    fr = _mosaic_frame(meta, hole_no_data)
+    g, to4326 = Geotransform(fr["vgt"]), transformer(fr["srs"], 4326)
+    rows = [{"raster_id": raster_id, "row_off": r0, "col_off": c0,
+             "bbox_4326": lat.bbox_4326(g, to4326, r0, r1, c0, c1)}
+            for _, r0, r1 in lat.windows(fr["vh"])
+            for _, c0, c1 in lat.windows(fr["vw"])]
     return spark.createDataFrame(
         pd.DataFrame(rows),
         schema="raster_id string, row_off int, col_off int, "
@@ -297,16 +335,16 @@ def mosaic_chunks(chunks: DataFrame, *, chunk=256, halo=8,
     ``chunks_meta=mosaic_meta_df(...)``, which leaves the composite one
     consumer and keeps it fully lazy.
     """
+    lat = _Lattice(chunk, halo)
     spark = chunks.sparkSession
     if meta is None:
         meta = chunks.select(
             "raster_id", "srs", "geotransform", "bands", "dtype", "no_data",
             "raster_height", "raster_width").distinct().collect()
-    lat = _mosaic_lattice(meta, chunk, halo, hole_no_data)
-    srs, bands, dt = lat["srs"], lat["bands"], lat["dt"]
-    doffs, vh, vw, vgt = lat["doffs"], lat["vh"], lat["vw"], lat["vgt"]
-    hole_fill, out_nd = lat["hole_fill"], lat["out_nd"]
-    nkr, nkc = lat["nkr"], lat["nkc"]
+    fr = _mosaic_frame(meta, hole_no_data)
+    srs, bands, dt = fr["srs"], fr["bands"], fr["dt"]
+    doffs, vh, vw, vgt = fr["doffs"], fr["vh"], fr["vw"], fr["vgt"]
+    hole_fill, out_nd = fr["hole_fill"], fr["out_nd"]
     doffs_b = spark.sparkContext.broadcast(doffs)
 
     def gen_pieces(batches):
@@ -321,20 +359,8 @@ def mosaic_chunks(chunks: DataFrame, *, chunk=256, halo=8,
                 vr0 = int(rec["row_off"]) + dr
                 vc0 = int(rec["col_off"]) + dc
                 vr1, vc1 = vr0 + arr.shape[1], vc0 + arr.shape[2]
-                for kr in range(max(0, (vr0 - halo) // chunk),
-                                min(nkr, (vr1 + halo + chunk - 1) // chunk)):
-                    wr0 = max(0, kr * chunk - halo)
-                    wr1 = min(vh, (kr + 1) * chunk + halo)
-                    ir0, ir1 = max(wr0, vr0), min(wr1, vr1)
-                    if ir0 >= ir1:
-                        continue
-                    for kc in range(max(0, (vc0 - halo) // chunk),
-                                    min(nkc, (vc1 + halo + chunk - 1) // chunk)):
-                        wc0 = max(0, kc * chunk - halo)
-                        wc1 = min(vw, (kc + 1) * chunk + halo)
-                        ic0, ic1 = max(wc0, vc0), min(wc1, vc1)
-                        if ic0 >= ic1:
-                            continue
+                for kr, ir0, ir1 in lat.windows(vh, vr0, vr1):
+                    for kc, ic0, ic1 in lat.windows(vw, vc0, vc1):
                         piece = np.ascontiguousarray(
                             arr[:, ir0 - vr0:ir1 - vr0, ic0 - vc0:ic1 - vc0])
                         rows.append({
@@ -349,15 +375,11 @@ def mosaic_chunks(chunks: DataFrame, *, chunk=256, halo=8,
             if rows:
                 yield pd.DataFrame(rows)
 
-    inv4326 = transformer(srs, 4326)
-    vgtG = Geotransform(vgt)
+    g, to4326 = Geotransform(vgt), transformer(srs, 4326)
 
     def composite(pdf: pd.DataFrame) -> pd.DataFrame:
-        kr, kc = int(pdf["vkr"].iloc[0]), int(pdf["vkc"].iloc[0])
-        wr0 = max(0, kr * chunk - halo)
-        wr1 = min(vh, (kr + 1) * chunk + halo)
-        wc0 = max(0, kc * chunk - halo)
-        wc1 = min(vw, (kc + 1) * chunk + halo)
+        wr0, wr1 = lat.window(int(pdf["vkr"].iloc[0]), vh)
+        wc0, wc1 = lat.window(int(pdf["vkc"].iloc[0]), vw)
         canvas = np.full((bands, wr1 - wr0, wc1 - wc0), np.nan)
         # pieces arrive in ascending raster_id: later pieces (higher id)
         # overwrite where valid; within one raster overlapping halo pieces
@@ -372,12 +394,6 @@ def mosaic_chunks(chunks: DataFrame, *, chunk=256, halo=8,
                           int(p.pc0) - wc0:int(p.pc0) - wc0 + int(p.pw)]
             view[...] = np.where(valid, block, view)
         data = np.where(np.isnan(canvas), hole_fill, canvas).astype(dt)
-        cs = np.array([wc0, wc1, wc0, wc1], dtype=np.float64)
-        rs = np.array([wr0, wr0, wr1, wr1], dtype=np.float64)
-        xs, ys = vgtG.forward(cs, rs)
-        bb = [float(xs.min()), float(ys.min()), float(xs.max()), float(ys.max())]
-        bb4326 = reproject_bbox(bb, inv4326.transform, density=8,
-                                nan_strategy="skip")
         return pd.DataFrame([{
             "raster_id": raster_id,
             "srs": srs,
@@ -387,7 +403,7 @@ def mosaic_chunks(chunks: DataFrame, *, chunk=256, halo=8,
             "bands": bands,
             "dtype": str(dt),
             "no_data": out_nd,
-            "bbox_4326": [float(v) for v in bb4326],
+            "bbox_4326": lat.bbox_4326(g, to4326, wr0, wr1, wc0, wc1),
             "raster_height": vh, "raster_width": vw,
             "data": data.tobytes(),
         }])
@@ -642,6 +658,7 @@ def warp_tiles(tiles: DataFrame, chunks: DataFrame, *, method="near",
         raise ValueError(
             f"warp_tiles: unknown join_strategy {join_strategy!r}; the only "
             "plan is 'chunks' (use warp_tiles_broadcast for small sources)")
+    lat = _Lattice(chunk, halo)
     # ``chunks_meta`` (r8): an alternative source for the pair-discovery
     # columns, e.g. mosaic_meta_df's analytic lattice rows.  Must hold a
     # SUPERSET of the chunk table's (raster_id, row_off, col_off) keys
@@ -711,7 +728,7 @@ def warp_tiles(tiles: DataFrame, chunks: DataFrame, *, method="near",
             for rec in pdf.to_dict("records"):
                 rows.extend(_chunk_partials(
                     rec, method, out_size, out_srs, out_dtype, turbo,
-                    chunk, halo, out_no_data, warp_kwargs, mosaic=mosaic))
+                    lat, out_no_data, warp_kwargs, mosaic=mosaic))
             if rows:
                 yield pd.DataFrame(rows)
 
@@ -792,16 +809,17 @@ def warp_tiles(tiles: DataFrame, chunks: DataFrame, *, method="near",
 
 
 def _chunk_partials(rec, method, out_size, out_srs, out_dtype, turbo,
-                    chunk, halo, out_no_data, warp_kwargs, mosaic=False):
+                    lat, out_no_data, warp_kwargs, mosaic=False):
     """Warp every matched tile from ONE chunk's window; emit owned rects.
 
     Ownership: out SAMPLE centers (the scaled out_resolution grid the
     kernel actually computes on, then replicates — geowarp.js:506-521)
     are inverse-projected to global source image coords with the
     full-raster geotransform; the chunk owns samples landing in its
-    halo-free core [k*chunk, (k+1)*chunk) (recovered from
-    row_off/col_off: offsets are k*chunk - halo clipped at 0, and
-    halo < chunk makes k unambiguous).  The sample-grid owned mask is
+    halo-free core [k*chunk, (k+1)*chunk), which ``lat`` (the _Lattice
+    warp_tiles was given) recovers from row_off/col_off: it enforces
+    halo < chunk, so each offset names one k, and raises when the
+    record's window is not on that lattice.  The sample-grid owned mask is
     expanded to the full out_size grid with the SAME js_round edge maps
     _materialize uses, so every pixel of a replicated sample block has
     exactly one owner.  cutline / row-range masking needs no ownership
@@ -811,9 +829,6 @@ def _chunk_partials(rec, method, out_size, out_srs, out_dtype, turbo,
     from ..kernels.warp import _scale_integer
 
     method_name = method if isinstance(method, str) else "custom"
-    row_off, col_off = int(rec["row_off"]), int(rec["col_off"])
-    kr = 0 if row_off == 0 else (row_off + halo) // chunk
-    kc = 0 if col_off == 0 else (col_off + halo) // chunk
     rh_full, rw_full = int(rec["raster_height"]), int(rec["raster_width"])
     # single-raster: edge chunks own the outside halfplane too (box-stat
     # windows of out pixels whose CENTER lies just past the raster edge
@@ -824,10 +839,10 @@ def _chunk_partials(rec, method, out_size, out_srs, out_dtype, turbo,
     # real pixels at the seam.
     lo_r, hi_r = (0, rh_full) if mosaic else (-np.inf, np.inf)
     lo_c, hi_c = (0, rw_full) if mosaic else (-np.inf, np.inf)
-    own_r0 = lo_r if kr == 0 else kr * chunk
-    own_r1 = hi_r if (kr + 1) * chunk >= rh_full else (kr + 1) * chunk
-    own_c0 = lo_c if kc == 0 else kc * chunk
-    own_c1 = hi_c if (kc + 1) * chunk >= rw_full else (kc + 1) * chunk
+    own_r0, own_r1 = lat.core(int(rec["row_off"]), int(rec["height"]),
+                              rh_full, lo_r, hi_r)
+    own_c0, own_c1 = lat.core(int(rec["col_off"]), int(rec["width"]),
+                              rw_full, lo_c, hi_c)
 
     g = Geotransform(list(rec["geotransform"]))
     srs = int(rec["srs"])

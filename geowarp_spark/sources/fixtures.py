@@ -138,46 +138,3 @@ def _fx(rid, srs, bbox, data, no_data=None, geotransform=None):
         "data": data,
     }
 
-
-def chunk_fixture(fx, chunk=256, halo=0):
-    """Split a fixture raster into tile-aligned chunks (+optional halo rows/
-    cols duplicated so box-stat windows never cross chunk owners — SURVEY
-    §7 'halo correctness').  Yields chunk dicts with adjusted bbox/geo."""
-    from ..kernels.affine import Geotransform
-
-    data = fx["data"]
-    b, h, w = data.shape
-    gt = fx["geotransform"] or Geotransform.from_bbox(fx["bbox"], w, h).gt
-    g = Geotransform(gt)
-    out = []
-    for r0 in range(0, h, chunk):
-        for c0 in range(0, w, chunk):
-            r1 = min(r0 + chunk, h)
-            c1 = min(c0 + chunk, w)
-            hr0 = max(0, r0 - halo)
-            hc0 = max(0, c0 - halo)
-            hr1 = min(h, r1 + halo)
-            hc1 = min(w, c1 + halo)
-            sub = np.ascontiguousarray(data[:, hr0:hr1, hc0:hc1])
-            cs = np.array([hc0, hc1, hc0, hc1], dtype=float)
-            rs = np.array([hr0, hr0, hr1, hr1], dtype=float)
-            xs, ys = g.forward(cs, rs)
-            sub_gt = [
-                float(g.forward(hc0, hr0)[0]), gt[1], gt[2],
-                float(g.forward(hc0, hr0)[1]), gt[4], gt[5],
-            ]
-            out.append({
-                "raster_id": fx["raster_id"],
-                "chunk_row": r0 // chunk,
-                "chunk_col": c0 // chunk,
-                "srs": fx["srs"],
-                "bbox": [float(xs.min()), float(ys.min()), float(xs.max()), float(ys.max())],
-                "geotransform": sub_gt,
-                "width": int(hc1 - hc0),
-                "height": int(hr1 - hr0),
-                "bands": b,
-                "dtype": fx["dtype"],
-                "no_data": fx["no_data"],
-                "data": sub,
-            })
-    return out

@@ -421,7 +421,7 @@ def read_tiff(buf: bytes, raster_id: str = "tiff", level: int = 0,
               window=None) -> dict:
     """Decode a baseline (Geo)TIFF byte string into the engine's fixture
     dict (same shape as sources.fixtures.build_fixture, so
-    fixture_chunk_records / chunk_fixture work unchanged).
+    fixture_chunk_records works unchanged).
 
     ``level``: IFD index — 0 = full resolution, 1+ = overview levels
     (the pyramid real GeoTIFFs carry so low-zoom reads touch KBs, not

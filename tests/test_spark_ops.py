@@ -1704,11 +1704,23 @@ def test_mosaic_meta_df_matches_composite_metadata(spark):
     executes once per action) must carry EXACTLY the (raster_id,
     row_off, col_off, bbox_4326) the composite's rows carry — any drift
     silently changes the matched tile set.  Meta rows for hole positions
-    (no composite row) are allowed: the payload inner join drops them."""
+    (no composite row) are allowed: the payload inner join drops them.
+
+    Single rasters add the ingest records as a third side: for H and W
+    in {chunk-1, chunk, chunk+1, 2*chunk+halo+3} and halo in
+    {0, 1, chunk-1}, fixture_chunk_records, the composite of their chunk
+    table and mosaic_meta_df cut bit-equal windows and bboxes, the
+    composite gives the ingest payload back, and the owner cores
+    partition [0, H) x [0, W)."""
+    import zlib
+    from functools import reduce
+
     import numpy as np
 
     from geowarp_spark.kernels.affine import Geotransform
-    from geowarp_spark.operators.warp_tiles import (chunks_to_df,
+    from geowarp_spark.operators.warp_tiles import (CHUNK_SCHEMA, _Lattice,
+                                                    chunks_to_df,
+                                                    fixture_chunk_records,
                                                     mosaic_chunks,
                                                     mosaic_meta_df)
     from geowarp_spark.sources.fixtures import build_fixture
@@ -1749,6 +1761,93 @@ def test_mosaic_meta_df_matches_composite_metadata(spark):
     assert set(comp) <= set(ana), set(comp) - set(ana)
     for k in comp:
         assert comp[k] == ana[k], (k, comp[k], ana[k])
+
+    # each size meets every other once per axis, so 4 rasters per halo
+    # cover both axes; one chunk table holds them all
+    c = 8
+    ingest, cases, recs = {}, [], []
+    for halo in (0, 1, c - 1):
+        lat = _Lattice(c, halo)
+        sizes = (c - 1, c, c + 1, 2 * c + halo + 3)
+        for hh, ww in zip(sizes, sizes[1:] + sizes[:1]):
+            rid = f"halo{halo}_{hh}x{ww}"
+            one = fixture_chunk_records(
+                dict(fx, raster_id=rid, data=fx["data"][:, :hh, :ww],
+                     height=hh, width=ww, geotransform=g), chunk=c, halo=halo)
+            owners = np.zeros((hh, ww), dtype=int)
+            for r in one:
+                ingest[(rid, r["row_off"], r["col_off"])] = (
+                    r["height"], r["width"], tuple(r["bbox_4326"]),
+                    zlib.crc32(r["data"]))
+                r0, r1 = lat.core(r["row_off"], r["height"], hh, 0, hh)
+                c0, c1 = lat.core(r["col_off"], r["width"], ww, 0, ww)
+                owners[r0:r1, c0:c1] += 1
+            assert (owners == 1).all(), (rid, owners)
+            cases.append((rid, halo, [{k: one[0][k] for k in (
+                "raster_id", "srs", "geotransform", "bands", "dtype",
+                "no_data", "raster_height", "raster_width")}]))
+            recs += one
+    table = spark.createDataFrame(pd.DataFrame(recs), CHUNK_SCHEMA)
+    comps = [mosaic_chunks(table.filter(F.col("raster_id") == rid), chunk=c,
+                           halo=halo, raster_id=rid, meta=m)
+             for rid, halo, m in cases]
+    metas = [mosaic_meta_df(spark, m, chunk=c, halo=halo, raster_id=rid)
+             for rid, halo, m in cases]
+    comp = {(r["raster_id"], r["row_off"], r["col_off"]):
+            (r["height"], r["width"], tuple(r["bbox_4326"]), r["crc"])
+            for r in reduce(lambda a, b: a.unionByName(b), comps).select(
+                "raster_id", "row_off", "col_off", "height", "width",
+                "bbox_4326", F.crc32("data").alias("crc")).collect()}
+    ana = {(r["raster_id"], r["row_off"], r["col_off"]): tuple(r["bbox_4326"])
+           for r in reduce(lambda a, b: a.unionByName(b), metas).collect()}
+    assert comp == ingest
+    assert ana == {k: v[2] for k, v in ingest.items()}
+
+
+def test_chunk_lattice_rejects_halo_outside_chunk(spark):
+    """A halo outside [0, chunk) gives two chunks the same offset, so one
+    core gets two owners and another none: every lattice entry point
+    must refuse it before building a plan."""
+    from geowarp_spark.operators.warp_tiles import (chunks_to_df,
+                                                    fixture_chunk_records,
+                                                    mosaic_chunks,
+                                                    mosaic_meta_df, tiles_df,
+                                                    warp_tiles)
+    from geowarp_spark.sources.fixtures import build_fixture
+
+    fx = build_fixture("tiny_4326")
+    chunks = chunks_to_df(spark, fx, chunk=32, halo=8)
+    tiles = tiles_df(spark, [10], bbox_4326=[10.0, 45.0, 11.0, 46.0])
+    meta = [{"raster_id": fx["raster_id"], "srs": fx["srs"],
+             "geotransform": [10.0, 1 / 64, 0.0, 46.0, 0.0, -1 / 64],
+             "bands": 3, "dtype": "uint8", "no_data": None,
+             "raster_height": 64, "raster_width": 64}]
+    for chunk, halo in ((16, 16), (16, 20), (16, -1)):
+        with pytest.raises(ValueError, match="halo < chunk"):
+            fixture_chunk_records(fx, chunk=chunk, halo=halo)
+        with pytest.raises(ValueError, match="halo < chunk"):
+            mosaic_meta_df(spark, meta, chunk=chunk, halo=halo,
+                           hole_no_data=0)
+        with pytest.raises(ValueError, match="halo < chunk"):
+            mosaic_chunks(chunks, chunk=chunk, halo=halo, hole_no_data=0)
+        with pytest.raises(ValueError, match="halo < chunk"):
+            warp_tiles(tiles, chunks, chunk=chunk, halo=halo)
+
+
+def test_warp_tiles_rejects_chunk_table_on_other_lattice(spark):
+    """A chunk table cut on one (chunk, halo) lattice and warped with
+    another used to return wrong tiles silently (owner cores recovered
+    on the wrong lattice); the partials must raise instead."""
+    from geowarp_spark.operators.warp_tiles import (chunks_to_df, tiles_df,
+                                                    warp_tiles)
+    from geowarp_spark.sources.fixtures import build_fixture
+
+    chunks = chunks_to_df(spark, build_fixture("tiny_4326"), chunk=16,
+                          halo=4)
+    tiles = tiles_df(spark, [10], bbox_4326=[10.0, 45.0, 11.0, 46.0])
+    with pytest.raises(Exception, match=r"ValueError: chunk table window "
+                       r"\[\d+, \d+\) .* chunk=256, halo=8 lattice"):
+        warp_tiles(tiles, chunks, method="near", out_size=32).collect()
 
 
 def test_pip_prune_z_mismatch_raises(spark, tmp_path):
