@@ -23,6 +23,7 @@ from __future__ import annotations
 import numpy as np
 
 from ..kernels.proj import WEB_MERCATOR_EXTENT
+from .hilbert import _grid_xy, pack_hilbert, xy_to_d
 
 Z_BITS = 58
 X_BITS = 29
@@ -99,21 +100,28 @@ def cell_parent(cell, steps=1):
     return pack_cell(z - steps, x >> steps, y >> steps)
 
 
-def grid_disk(cell, k):
-    """k-ring of cells (Chebyshev disk, x wraps around the antimeridian,
-    y clamps at the poles) — the candidate-expansion primitive for the
-    kNN join (SURVEY J5)."""
-    z, x, y = unpack_cell(np.atleast_1d(cell))
-    n = np.int64(1) << z
-    offs = np.arange(-k, k + 1, dtype=np.int64)
-    dx, dy = np.meshgrid(offs, offs)
-    dx = dx.reshape(-1)
-    dy = dy.reshape(-1)
-    xs = (x[:, None] + dx[None, :]) % n[:, None]
-    ys = y[:, None] + dy[None, :]
-    valid = (ys >= 0) & (ys < n[:, None])
-    cells = pack_cell(np.broadcast_to(z[:, None], xs.shape), xs, np.clip(ys, 0, None))
-    return np.where(valid, cells, -1)
+def disk_cells(lon, lat, z, rings, scheme="equirect"):
+    """The kNN cell disk (SURVEY J5): every cell within Chebyshev
+    distance ``rings[i]`` of query i's equirect cell at zoom ``z``, as
+    (query row index, cell id) arrays.  Columns wrap around the
+    antimeridian, rows clamp at the poles, and each query lists each
+    cell once: min(2R+1, 2^z) distinct columns times the clamped row
+    span.  ``scheme`` packs the ids: 'equirect' (pack_cell) or 'hilbert'
+    (pack_hilbert of the curve distance)."""
+    n = 1 << z
+    qx, qy = _grid_xy(lon, lat, z)
+    r = np.asarray(rings, dtype=np.int64)
+    nx = np.minimum(2 * r + 1, n)
+    x0 = np.where(2 * r + 1 >= n, 0, qx - r)
+    y0 = np.maximum(qy - r, 0)
+    size = nx * (np.minimum(qy + r, n - 1) - y0 + 1)
+    q = np.repeat(np.arange(len(r)), size)
+    j = np.arange(size.sum()) - np.repeat(np.cumsum(size) - size, size)
+    xs = (x0[q] + j % nx[q]) % n
+    ys = y0[q] + j // nx[q]
+    if scheme == "hilbert":
+        return q, pack_hilbert(z, xy_to_d(z, xs, ys))
+    return q, pack_cell(z, xs, ys)
 
 
 # ------------------------------------------------------------- Spark exprs

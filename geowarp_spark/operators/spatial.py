@@ -20,9 +20,8 @@ from pyspark.sql import functions as F
 
 from ..grid.hilbert import (Z_BITS, bbox_cover_cell_count,
                             bbox_cover_cell_ids, coalesce_ranges,
-                            disk_cell_ids, hilbert_walk, hilbert_xy_sql,
                             with_hilbert_cell)
-from ..grid.tiles import X_BITS, cell_sql_expr
+from ..grid.tiles import X_BITS, cell_sql_expr, disk_cells
 
 # Driver-side guard for _prune_scan's cover enumeration: at most ~4M
 # ids (~32 MB of int64).  A larger cover spans most of the grid anyway,
@@ -227,20 +226,6 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int,
     return _topk_two_phase(cand, k, query_id, point_id)
 
 
-def _disk_cells_sql(qlon, qlat, z, ring):
-    """Cell ids of the Chebyshev disk of radius ``ring`` around the
-    query's cell, as a Spark SQL array expression.  Lon wraps (pmod),
-    lat clamps to the poles — matching cell_sql_expr's point encoding."""
-    n = 1 << z
-    qx, qy = hilbert_xy_sql(qlon, qlat, z)
-    return (
-        f"array_distinct(flatten(transform(sequence(-{ring}, {ring}), dx -> "
-        f"transform(sequence(-{ring}, {ring}), dy -> "
-        f"{z << 58}L + pmod({qx} + dx, {n}) * {1 << 29}L + "
-        f"least(greatest({qy} + dy, 0), {n - 1})))))"
-    )
-
-
 def _encode_cells(points, z, lon, lat, scheme):
     """Point -> cell id column per grid scheme (both pure JVM exprs)."""
     if scheme == "hilbert":
@@ -248,42 +233,19 @@ def _encode_cells(points, z, lon, lat, scheme):
     return points.withColumn("cell", F.expr(cell_sql_expr(lon, lat, z)))
 
 
-def _hilbert_disk(queries, z, ring, qlon, qlat):
-    """Chebyshev disk(ring) of HILBERT cell ids around each query (the
-    grid_disk under the S2-style encoder); ``ring`` is an int or a
-    per-query ring column.  Explodes (dx, dy) offsets on the
-    contractually small query side, wraps x / clamps y exactly like
-    _disk_cells_sql, encodes each neighbor through the same unrolled
-    Hilbert walk, and drops clamp-collapsed polar duplicates by cell id."""
-    n = 1 << z
-    x0, y0 = hilbert_xy_sql(qlon, qlat, z)
-    d = (queries
-         .withColumn("dx", F.explode(F.expr(f"sequence(-{ring}, {ring})")))
-         .withColumn("dy", F.explode(F.expr(f"sequence(-{ring}, {ring})")))
-         .withColumns({"hx0": F.expr(f"pmod({x0} + dx, {n})"),
-                       "hy0": F.expr(f"least(greatest({y0} + dy, 0), {n - 1})")})
-         .drop("dx", "dy"))
-    return hilbert_walk(d, z, "cell").dropDuplicates([*queries.columns, "cell"])
-
-
-def _knn_candidates(points, queries, z, ring, lon, lat, qlon, qlat,
-                    point_id, query_id, scheme="equirect"):
-    """(query, point, dist2) for every point in its query's cell disk of
-    radius ``ring`` (an int or a per-query ring column): the disk cells
-    explode on the broadcast query side and equi-join the points on cell
-    id.  A point lives in exactly one cell and the disk cells are
-    distinct, so each (query, point) pair appears at most once."""
-    pts = _encode_cells(points, z, lon, lat, scheme)
-    if scheme == "hilbert":
-        q = _hilbert_disk(queries, z, ring, qlon, qlat)
-    else:
-        q = queries.withColumn(
-            "cell", F.explode(F.expr(_disk_cells_sql(qlon, qlat, z, ring))))
+def _knn_candidates(points, queries, z, lon, lat, qlon, qlat, point_id,
+                    query_id, scheme="equirect"):
+    """(query, point, dist2) for every point in its query's cell disk:
+    ``queries`` holds one row per (query, disk cell) in its ``cell``
+    column (disk_cells), broadcast and equi-joined to the points on cell
+    id.  A point lives in exactly one cell and each query lists its disk
+    cells once, so each (query, point) pair appears at most once."""
     d2 = (
         (F.col(lon) - F.col(qlon)) * (F.col(lon) - F.col(qlon))
         + (F.col(lat) - F.col(qlat)) * (F.col(lat) - F.col(qlat))
     ).alias("dist2")
-    return pts.join(F.broadcast(q), "cell").select(query_id, point_id, d2)
+    return (_encode_cells(points, z, lon, lat, scheme)
+            .join(F.broadcast(queries), "cell").select(query_id, point_id, d2))
 
 
 def _count_grid(points, z, lon, lat):
@@ -360,6 +322,24 @@ def _certified_rings(grid, qlon, qlat, k, z, ring):
     return np.minimum(nz - 1, np.maximum(ring, np.floor(b * nz / 180.0) + 1)).astype(np.int32)
 
 
+def _arrow_rdd_frame(spark, pdf, schema) -> DataFrame:
+    """``spark.createDataFrame(pdf, schema)`` on Arrow's RDD path.  Below
+    ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB) Spark
+    builds a LocalRelation instead, and broadcasting one ships every row
+    inside the task closures by Java serialization.  A 1.55M-row table
+    (10k queries' disks, local[4], 4 GB driver heap): createDataFrame
+    4.3 s and a broadcast join 8.3 s, with the second broadcast out of
+    driver memory; on the RDD path 0.3 s and 1.3-1.8 s.  The threshold
+    is a session conf, so it is lowered for this one call and restored."""
+    key = "spark.sql.execution.arrow.localRelationThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "0")
+    try:
+        return spark.createDataFrame(pdf, schema)
+    finally:
+        spark.conf.set(key, old)
+
+
 def knn_join_cells(points: DataFrame, queries: DataFrame, k: int, z: int = 7,
                    ring: int = 1, lon="lon", lat="lat", qlon="qlon", qlat="qlat",
                    point_id="doc_id", query_id="query_id",
@@ -376,8 +356,8 @@ def knn_join_cells(points: DataFrame, queries: DataFrame, k: int, z: int = 7,
 
     Driver-side state: the count grid — one ``groupBy(cell).count()`` of
     the equirect cells at zoom zc = min(z, 10), dense at most 1024^2
-    int64 (8 MB) — and the query coordinates (the contractually small
-    query side, collected once).  Per query, in numpy:
+    int64 (8 MB) — the query rows (the contractually small query side,
+    collected once) and their cell disks.  Per query, in numpy:
 
     - r*, the smallest ring from 0 whose zc disk holds >= k points;
     - B: walk disk(r*)'s cells in order of their farthest-corner distance
@@ -388,7 +368,10 @@ def knn_join_cells(points: DataFrame, queries: DataFrame, k: int, z: int = 7,
     - R = min(2^z - 1, max(ring, floor(B * 2^z / 180) + 1)), or full
       cover R = 2^z - 1 when the table counts fewer than k points.
 
-    The candidates are then disk(R) at zoom z, gathered once.
+    The candidates are then disk(R) at zoom z, listed once on the
+    driver by grid.tiles.disk_cells: one (query, cell) row per disk
+    cell is the broadcast side of the gather's cell equi-join, and the
+    same ids are the Hilbert prune cover.
 
     Exactness.  (1) The cells walked to reach B hold >= k points, each
     inside its cell's extent (only points within [-180, 180] x [-90, 90]
@@ -413,16 +396,16 @@ def knn_join_cells(points: DataFrame, queries: DataFrame, k: int, z: int = 7,
     ``scheme``: 'equirect' (packed XYZ ids) or 'hilbert' (S2-style
     space-filling-curve ids, grid/hilbert.py).  Both index the SAME grid
     squares, so the count grid is always equirect and the proof is
-    encoding-independent; only the gather's id packing differs.
+    encoding-independent; only disk_cells' id packing differs.
 
     ``prune_col`` (hilbert scheme only): a STORED Hilbert cell column
     at zoom ``z`` (write_hilbert_sorted).  _prune_scan pre-filters the
-    points scan to the disk(R) id intervals, so parquet min-max stats
-    skip row groups; the equi-join still keys EXACT cell ids, so results
-    never change.  ``prune_max_ranges`` is clamped to PRUNE_MAX_RANGES
-    (the JIT budget; still a superset).  The stored zoom comes from the
-    column's ``hilbert_zoom`` stamp, else a probe job; a different ``z``
-    raises ValueError.
+    points scan to the id intervals of the gather's disk cells, so
+    parquet min-max stats skip row groups; the equi-join still keys
+    EXACT cell ids, so results never change.  ``prune_max_ranges`` is
+    clamped to PRUNE_MAX_RANGES (the JIT budget; still a superset).  The
+    stored zoom comes from the column's ``hilbert_zoom`` stamp, else a
+    probe job; a different ``z`` raises ValueError.
 
     The result is a plain lazy plan (no checkpoint): every action on it
     recomputes the same rows.
@@ -436,18 +419,15 @@ def knn_join_cells(points: DataFrame, queries: DataFrame, k: int, z: int = 7,
                     for c in (qlon, qlat))
     rings = _certified_rings(_count_grid(points, min(z, 10), lon, lat),
                              qlons, qlats, k, z, ring)
-    q = queries.sparkSession.createDataFrame(
-        qpdf.assign(_ring=rings), qcols.schema.add("_ring", "integer"))
+    row, cells = disk_cells(qlons, qlats, z, rings, scheme)
+    q = _arrow_rdd_frame(queries.sparkSession,
+                         qpdf.take(row).assign(cell=cells),
+                         qcols.schema.add("cell", "long"))
     if prune_col is not None:
-        points = _prune_scan(
-            points, prune_col, z,
-            lambda: np.unique(np.concatenate(
-                [disk_cell_ids(qlats[rings == r], qlons[rings == r], z, int(r))
-                 for r in np.unique(rings)] or [np.empty(0, np.int64)])),
-            lambda: int(((2 * rings.astype(np.int64) + 1) ** 2).sum()),
-            prune_max_ranges)
-    cand = _knn_candidates(points, q, z, "_ring", lon, lat, qlon, qlat,
-                           point_id, query_id, scheme)
+        points = _prune_scan(points, prune_col, z, lambda: np.unique(cells),
+                             lambda: len(cells), prune_max_ranges)
+    cand = _knn_candidates(points, q, z, lon, lat, qlon, qlat, point_id,
+                           query_id, scheme)
     return _topk_two_phase(cand, k, query_id, point_id)
 
 

@@ -662,10 +662,12 @@ def warp_tiles(tiles: DataFrame, chunks: DataFrame, *, method="near",
     # ``chunks_meta`` (r8): an alternative source for the pair-discovery
     # columns, e.g. mosaic_meta_df's analytic lattice rows.  Must hold a
     # SUPERSET of the chunk table's (raster_id, row_off, col_off) keys
-    # with the same bbox_4326 values — superset pairs drop out of the
-    # payload inner join below, so results are identical, and the chunk
-    # table itself gains a single consumer (one execution per action
-    # even for computed chunk sources like mosaic_chunks composites).
+    # with the same bbox_4326 values (_chunk_partials raises when a
+    # matched key's bbox differs: metadata cut on another lattice).
+    # Superset pairs drop out of the payload inner join below, so
+    # results are identical, and the chunk table itself gains a single
+    # consumer (one execution per action even for computed chunk
+    # sources like mosaic_chunks composites).
     # Discovery is built as batched selectExpr/expr strings (r8): the
     # Column-by-Column form cost ~10 py4j round trips per plan, and the
     # frozen bench constructs these plans per mode per trial.
@@ -683,7 +685,8 @@ def warp_tiles(tiles: DataFrame, chunks: DataFrame, *, method="near",
         "bbox_4326[3] >= chunk_bbox_4326[1]")
     pairs = (
         t.join(c, "cell").filter(overlap)
-        .select("raster_id", "row_off", "col_off", "z", "x", "y")
+        .select("raster_id", "row_off", "col_off", "z", "x", "y",
+                "chunk_bbox_4326")
     )
     # collect_SET dedupes the pairs that shared several cover cells AND
     # groups them in the SAME shuffle — the old distinct() + groupBy +
@@ -717,7 +720,8 @@ def warp_tiles(tiles: DataFrame, chunks: DataFrame, *, method="near",
     n_parts = spark.sparkContext.defaultParallelism
     grouped = pairs.repartition(n_parts, "raster_id", "row_off", "col_off") \
         .groupBy("raster_id", "row_off", "col_off").agg(
-            F.collect_set(F.struct("z", "x", "y")).alias("tile_keys"))
+            F.collect_set(F.struct("z", "x", "y")).alias("tile_keys"),
+            F.collect_set("chunk_bbox_4326").alias("meta_bboxes"))
     withtiles = chunks.join(grouped, ["raster_id", "row_off", "col_off"])
 
     method_name = method if isinstance(method, str) else "custom"
@@ -819,16 +823,27 @@ def _chunk_partials(rec, method, out_size, out_srs, out_dtype, turbo,
     halo-free core [k*chunk, (k+1)*chunk), which ``lat`` (the _Lattice
     warp_tiles was given) recovers from row_off/col_off: it enforces
     halo < chunk, so each offset names one k, and raises when the
-    record's window is not on that lattice.  The sample-grid owned mask is
-    expanded to the full out_size grid with the SAME js_round edge maps
-    _materialize uses, so every pixel of a replicated sample block has
-    exactly one owner.  cutline / row-range masking needs no ownership
-    handling: masked pixels hold the fill value in every partial, owner
-    included, which equals the full-raster path's fill."""
+    record's window is not on that lattice.  A ``chunks_meta`` bbox
+    matched to the record (``meta_bboxes``) that differs from its own
+    raises too: that metadata was cut on another lattice.  The
+    sample-grid owned mask is expanded to the full out_size grid with
+    the SAME js_round edge maps _materialize uses, so every pixel of a
+    replicated sample block has exactly one owner.  cutline / row-range
+    masking needs no ownership handling: masked pixels hold the fill
+    value in every partial, owner included, which equals the
+    full-raster path's fill."""
     from ..kernels.stats import js_round
     from ..kernels.warp import _scale_integer
 
     method_name = method if isinstance(method, str) else "custom"
+    bbox = list(rec["bbox_4326"])
+    for meta in rec["meta_bboxes"]:
+        if list(meta) != bbox:
+            raise ValueError(
+                f"chunks_meta bbox {list(meta)} of chunk (raster "
+                f"{rec['raster_id']!r}, row_off {rec['row_off']}, col_off "
+                f"{rec['col_off']}) differs from the chunk table's {bbox}: "
+                "cut chunks_meta on the chunk table's chunk=/halo= lattice")
     rh_full, rw_full = int(rec["raster_height"]), int(rec["raster_width"])
     # single-raster: edge chunks own the outside halfplane too (box-stat
     # windows of out pixels whose CENTER lies just past the raster edge

@@ -10,7 +10,6 @@ production sink is ``save_tiles`` -> parquet/snapshot store
 
 from __future__ import annotations
 
-import os
 import struct
 import zlib
 
@@ -119,36 +118,3 @@ def write_ppm(path, block):
         f.write(f"P6 {w} {h} 255\n".encode())
         f.write(np.transpose(block, (1, 2, 0)).tobytes())
     return path
-
-
-def save_tiles_png(tiles_df, out_dir, limit=64):
-    """Debug sink: collect up to `limit` tile rows and write z/x/y.png.
-    Driver-side by design (small debug sets only) — the production path
-    is plans.lineage.CheckpointStore.commit_tiles."""
-    os.makedirs(out_dir, exist_ok=True)
-    rows = tiles_df.limit(limit).collect()
-    paths = []
-    for r in rows:
-        block = np.frombuffer(r["data"], dtype=r["dtype"]).reshape(
-            r["bands"], r["height"], r["width"])
-        if block.shape[0] not in (1, 3, 4):
-            block = block[:3] if block.shape[0] > 4 else block[:1]
-        p = os.path.join(out_dir, f"{r['z']}_{r['x']}_{r['y']}.png")
-        write_png(p, block)
-        paths.append(p)
-    return paths
-
-
-def read_window(chunks_df, bbox_4326):
-    """Windowed scan (S2, readBoundingBox test.js:172-196): prune the
-    chunk table to chunks overlapping a lon/lat bbox.  The predicate is a
-    plain column comparison on the bbox_4326 array, so Catalyst pushes
-    min/max pruning into the scan when the table is stored with bbox
-    component columns (at Iceberg scale: partition by cover cell)."""
-    from pyspark.sql import functions as F
-
-    w, s, e, n = (float(v) for v in bbox_4326)
-    return chunks_df.filter(
-        (F.col("bbox_4326")[0] <= e) & (F.col("bbox_4326")[2] >= w)
-        & (F.col("bbox_4326")[1] <= n) & (F.col("bbox_4326")[3] >= s)
-    )

@@ -282,9 +282,13 @@ def _knn_edge_tables(rng):
 
 def test_certified_rings_cover_the_true_kth_neighbour():
     """Property of the certified radius, on the driver alone: for random
-    tables (wrap, poles, duplicates, k above the row count) every point
-    at or inside the brute-force k-th distance lies in the query's
-    disk(R) under the same cell arithmetic the gather uses."""
+    tables (wrap, poles, duplicates, k above the row count) the cell of
+    every point at or inside the brute-force k-th distance is among the
+    query's cells that disk_cells lists for the gather.  Full cover
+    (R = 2^z - 1) lists the whole grid, which
+    test_disk_cells_matches_brute_force_set pins, so it is not
+    enumerated here."""
+    from geowarp_spark.grid.tiles import disk_cells, latlng_to_cell
     from geowarp_spark.operators.spatial import _certified_rings
 
     def cells(lon, lat, z):
@@ -308,18 +312,59 @@ def test_certified_rings_cover_the_true_kth_neighbour():
         np.add.at(grid, (gy, gx), 1)
         rings = _certified_rings(grid, qlon, qlat, k, z, 1)
         n = 1 << z
-        px, py = cells(lon, lat, z)
-        qx, qy = cells(qlon, qlat, z)
+        pid = latlng_to_cell(lat, lon, z)
+        part = np.flatnonzero(rings < n - 1)
+        row, disk = disk_cells(qlon[part], qlat[part], z, rings[part])
+        bounds = np.searchsorted(row, np.arange(len(part) + 1))
         for i in range(len(qlon)):
             d2 = (lon - qlon[i]) ** 2 + (lat - qlat[i]) ** 2
             if len(d2) < k:
                 assert rings[i] == n - 1, (seed, i)
                 continue
+            assert rings[i] >= 1, (seed, i)
+            j = np.searchsorted(part, i)
+            if j == len(part) or part[j] != i:
+                continue
             need = d2 <= np.sort(d2)[k - 1]
-            dx = np.abs(px[need] - qx[i])
-            dx = np.minimum(dx, n - dx)
-            dy = np.abs(py[need] - qy[i])
-            assert rings[i] >= 1 and max(dx.max(), dy.max()) <= rings[i], (seed, i, z, k)
+            assert np.isin(pid[need], disk[bounds[j]:bounds[j + 1]]).all(), \
+                (seed, i, z, k)
+
+
+def test_disk_cells_matches_brute_force_set():
+    """disk_cells lists, per query, exactly the set
+    {((x + dx) mod 2^z, clip(y + dy, 0, 2^z - 1)) : |dx|, |dy| <= R}
+    around the query's cell, each (query, cell) pair once, in both id
+    schemes: queries on the antimeridian and both poles, ring 0, rings
+    with 2R + 1 >= 2^z, and an empty query set."""
+    from geowarp_spark.grid.hilbert import d_to_xy, unpack_hilbert
+    from geowarp_spark.grid.tiles import disk_cells, unpack_cell
+
+    rng = np.random.default_rng(11)
+    qlon = np.r_[-180.0, 180.0, 179.99, -179.99, 0.0, 37.5, rng.uniform(-180, 180, 6)]
+    qlat = np.r_[0.0, 90.0, -90.0, 89.99, -89.99, 12.0, rng.uniform(-90, 90, 6)]
+    for z in (0, 1, 2, 3, 5):
+        n = 1 << z
+        qx = np.clip(np.floor((qlon + 180.0) / 360.0 * n), 0, n - 1).astype(int)
+        qy = np.clip(np.floor((90.0 - qlat) / 180.0 * n), 0, n - 1).astype(int)
+        for rings in (np.zeros(len(qlon), int), np.full(len(qlon), n),
+                      rng.integers(0, n + 2, len(qlon))):
+            for scheme in ("equirect", "hilbert"):
+                row, cell = disk_cells(qlon, qlat, z, rings, scheme)
+                if scheme == "hilbert":
+                    zs, d = unpack_hilbert(cell)
+                    x, y = d_to_xy(z, d)
+                else:
+                    zs, x, y = unpack_cell(cell)
+                assert (zs == z).all()
+                got = list(zip(row.tolist(), x.tolist(), y.tolist()))
+                assert len(got) == len(set(got)), (z, scheme)
+                want = {(i, (qx[i] + dx) % n, min(max(qy[i] + dy, 0), n - 1))
+                        for i, r in enumerate(rings)
+                        for dx in range(-r, r + 1) for dy in range(-r, r + 1)}
+                assert set(got) == want, (z, scheme)
+    for scheme in ("equirect", "hilbert"):
+        row, cell = disk_cells(np.empty(0), np.empty(0), 4, np.empty(0, int), scheme)
+        assert row.size == 0 and cell.size == 0
 
 
 @pytest.mark.parametrize("scheme", ["equirect", "hilbert"])
@@ -402,7 +447,8 @@ def test_hilbert_range_pruning_pushdown_and_knn(spark, tmp_path):
     equi-join stays exact."""
     from pyspark.sql import functions as F
 
-    from geowarp_spark.grid.hilbert import coalesce_ranges, disk_cell_ids
+    from geowarp_spark.grid.hilbert import coalesce_ranges
+    from geowarp_spark.grid.tiles import disk_cells
     from geowarp_spark.operators.spatial import (
         cell_range_predicate, knn_join, knn_join_cells,
         write_hilbert_sorted)
@@ -418,7 +464,8 @@ def test_hilbert_range_pruning_pushdown_and_knn(spark, tmp_path):
     stored = spark.read.parquet(path)
 
     qlats, qlons = [10.0, 40.0, -30.0], [10.0, -70.0, 140.0]
-    ids = disk_cell_ids(qlats, qlons, z, ring=2)
+    _, ids = disk_cells(np.array(qlons), np.array(qlats), z, np.full(3, 2),
+                        "hilbert")
     ranges = coalesce_ranges(ids, max_ranges=32)
     flt = stored.filter(cell_range_predicate(ranges, "hcell"))
 
@@ -518,13 +565,13 @@ def test_pip_polygon_halfplane(spark):
 
 
 def test_grid_disk_and_rollup():
-    from geowarp_spark.grid.tiles import cell_parent, grid_disk, latlng_to_cell, unpack_cell
+    from geowarp_spark.grid.tiles import cell_parent, disk_cells, latlng_to_cell, unpack_cell
 
     c = latlng_to_cell(np.array([40.0]), np.array([0.0]), 10)
     z, x, y = unpack_cell(c)
     assert z[0] == 10
-    disk = grid_disk(c, 1)
-    assert disk.shape == (1, 9) and (disk >= 0).all()
+    _, disk = disk_cells(np.array([0.0]), np.array([40.0]), 10, [1])
+    assert disk.shape == (9,) and (disk >= 0).all() and c[0] in disk
     p = cell_parent(c, 2)
     pz, px, py = unpack_cell(p)
     assert pz[0] == 8 and px[0] == x[0] >> 2 and py[0] == y[0] >> 2
@@ -869,17 +916,60 @@ def _plan(df):
 
 def test_knn_cells_candidates_broadcast_no_cartesian(spark, sf_dir):
     """The candidate gather is a cell-id equi-join against the broadcast
-    query disks (a per-query ring column), never a cartesian product."""
+    query disks (one row per query and disk cell), never a cartesian
+    product."""
+    from geowarp_spark.grid.tiles import disk_cells
     from geowarp_spark.operators.spatial import _knn_candidates
     import __spark_entry__ as em
 
     pts = em._docs_pts(spark, sf_dir)
-    q = em._knn_queries(spark).withColumn("_ring", F.lit(2))
+    qpdf = em._knn_queries(spark).toPandas()
     for scheme in ("equirect", "hilbert"):
-        plan = _plan(_knn_candidates(pts, q, 4, "_ring", "lon", "lat", "qlon",
+        row, cell = disk_cells(qpdf["qlon"].to_numpy(np.float64),
+                               qpdf["qlat"].to_numpy(np.float64), 4,
+                               np.full(len(qpdf), 2), scheme)
+        q = spark.createDataFrame(qpdf.take(row).assign(cell=cell))
+        plan = _plan(_knn_candidates(pts, q, 4, "lon", "lat", "qlon",
                                      "qlat", "doc_id", "query_id", scheme))
         assert "BroadcastHashJoin" in plan, scheme
         assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
+
+
+def _broadcast_sides(df):
+    """Node names of the subtree under each BroadcastExchange of df's
+    physical plan (AQE's initial plan when adaptive execution is on)."""
+    def kids(node):
+        ch = node.children()
+        return [ch.apply(i) for i in range(ch.size())]
+
+    def names(node):
+        return [node.nodeName()] + [n for c in kids(node) for n in names(c)]
+
+    def find(node):
+        if node.nodeName() == "BroadcastExchange":
+            return [names(kids(node)[0])]
+        return [s for c in kids(node) for s in find(c)]
+
+    ep = df._jdf.queryExecution().executedPlan()
+    if ep.nodeName() == "AdaptiveSparkPlan":
+        ep = ep.executedPlan()
+    return find(ep)
+
+
+@pytest.mark.parametrize("scheme", ["equirect", "hilbert"])
+def test_knn_cells_broadcast_side_is_driver_listed(spark, scheme):
+    """knn_join_cells' broadcast query side is the (query, disk cell)
+    table disk_cells listed on the driver: a scan with no Generate (no
+    disk explode) and no Exchange (no Hilbert dropDuplicates) under the
+    broadcast."""
+    from geowarp_spark.operators.spatial import knn_join_cells
+
+    pts_rows, q_rows = _knn_edge_tables(np.random.default_rng(5))
+    pts = spark.createDataFrame(pts_rows, "doc_id long, lon double, lat double")
+    q = spark.createDataFrame(q_rows, "query_id long, qlon double, qlat double")
+    sides = _broadcast_sides(knn_join_cells(pts, q, k=5, z=6, scheme=scheme))
+    assert len(sides) == 1, sides
+    assert not [n for n in sides[0] if "Generate" in n or "Exchange" in n], sides
 
 
 def test_lsh_topk_no_cartesian_for_candidates(spark, sf_dir):
@@ -1185,73 +1275,6 @@ def test_lsh_pairs_accept_precomputed_signatures(spark):
     fp = simhash(docs)
     v2 = {tuple(r) for r in simhash_near_dups(docs, fingerprints=fp).collect()}
     assert d2 == v2
-
-
-def test_connected_components_star_matches_minlabel_and_handles_chains(spark):
-    """large-star/small-star == min-label propagation on clumpy graphs,
-    AND converges on the adversarial long-chain graph in O(log^2 n)
-    rounds where min-label needs O(diameter) (its documented escape
-    hatch)."""
-    import random
-
-    from geowarp_spark.operators.dedup import (
-        connected_components, connected_components_star)
-
-    rnd = random.Random(42)
-    # clumpy graph: 3 dense clusters + isolated nodes
-    edges = []
-    for base in (0, 100, 200):
-        members = [base + i for i in range(12)]
-        for _ in range(25):
-            a, b = rnd.sample(members, 2)
-            edges.append((min(a, b), max(a, b)))
-    pairs = spark.createDataFrame(sorted(set(edges)), ["id_a", "id_b"])
-    nodes = spark.createDataFrame([(i,) for i in range(0, 300, 7)], ["doc_id"])
-    ml = {(r["doc_id"], r["component"]) for r in
-          connected_components(pairs, all_nodes=nodes).collect()}
-    st = {(r["doc_id"], r["component"]) for r in
-          connected_components_star(pairs, all_nodes=nodes).collect()}
-    assert st == ml
-
-    # 200-node path: diameter 199.  min-label moves the label one hop per
-    # round, so a 12-round budget MUST raise; star converges well inside
-    # its 30-round default (O(log^2 n)).
-    chain = spark.createDataFrame([(i, i + 1) for i in range(199)],
-                                  ["id_a", "id_b"])
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(chain, max_iter=12)
-    got = {(r["doc_id"], r["component"]) for r in
-           connected_components_star(chain).collect()}
-    assert got == {(i, 0) for i in range(200)}
-
-
-def test_star_cc_single_action_per_round(spark):
-    """VERDICT r4 'wrong' #2: the per-round convergence probe must be ONE
-    driver action (a full-outer symmetric-difference witness), not
-    count + count + anti-join-count.  Measured via the status tracker:
-    with AQE off, each round is exactly 2 jobs — the eager
-    localCheckpoint materialization plus the single probe."""
-    from geowarp_spark.operators.dedup import connected_components_star
-
-    aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        chain = spark.createDataFrame([(i, i + 1) for i in range(30)],
-                                      ["id_a", "id_b"])
-        tracker = spark.sparkContext.statusTracker()
-        before = len(tracker.getJobIdsForGroup(None))
-        dbg: dict = {}
-        out = connected_components_star(chain, debug=dbg)
-        mid = len(tracker.getJobIdsForGroup(None))
-        rounds = dbg["rounds"]
-        loop_jobs = mid - before
-        # createDataFrame/collect outside the loop contribute 0 jobs here;
-        # allow +1 slack for runtime-version job accounting
-        assert loop_jobs <= 2 * rounds + 1, (loop_jobs, rounds)
-        got = {(r["doc_id"], r["component"]) for r in out.collect()}
-        assert got == {(i, 0) for i in range(31)}
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe)
 
 
 def test_warp_mosaic_of_halves_equals_whole(spark):
@@ -1698,31 +1721,12 @@ def test_ivf_kmeans_quantizer_recall_and_determinism(spark):
     assert r_ivf >= 0.6, r_ivf
 
 
-def test_mosaic_meta_df_matches_composite_metadata(spark):
-    """r8 drift guard: the analytic lattice metadata (mosaic_meta_df,
-    used as warp_tiles' pair-discovery side so the composite
-    executes once per action) must carry EXACTLY the (raster_id,
-    row_off, col_off, bbox_4326) the composite's rows carry — any drift
-    silently changes the matched tile set.  Meta rows for hole positions
-    (no composite row) are allowed: the payload inner join drops them.
-
-    Single rasters add the ingest records as a third side: for H and W
-    in {chunk-1, chunk, chunk+1, 2*chunk+halo+3} and halo in
-    {0, 1, chunk-1}, fixture_chunk_records, the composite of their chunk
-    table and mosaic_meta_df cut bit-equal windows and bboxes, the
-    composite gives the ingest payload back, and the owner cores
-    partition [0, H) x [0, W)."""
-    import zlib
-    from functools import reduce
-
-    import numpy as np
-
+def _rgb_halves(spark):
+    """``rgb_smallscale`` split at column 165 (not a chunk multiple) into
+    rasters a_left and b_right: (fixture, geotransform, their 128/8
+    chunk table, their mosaic_chunks metadata)."""
     from geowarp_spark.kernels.affine import Geotransform
-    from geowarp_spark.operators.warp_tiles import (CHUNK_SCHEMA, _Lattice,
-                                                    chunks_to_df,
-                                                    fixture_chunk_records,
-                                                    mosaic_chunks,
-                                                    mosaic_meta_df)
+    from geowarp_spark.operators.warp_tiles import chunks_to_df
     from geowarp_spark.sources.fixtures import build_fixture
 
     fx = build_fixture("rgb_smallscale")
@@ -1750,6 +1754,34 @@ def test_mosaic_meta_df_matches_composite_metadata(spark):
              "no_data": None if h["no_data"] is None else float(h["no_data"]),
              "raster_height": int(h["height"]),
              "raster_width": int(h["width"])} for h in halves]
+    return fx, g, ch, meta
+
+
+def test_mosaic_meta_df_matches_composite_metadata(spark):
+    """r8 drift guard: the analytic lattice metadata (mosaic_meta_df,
+    used as warp_tiles' pair-discovery side so the composite
+    executes once per action) must carry EXACTLY the (raster_id,
+    row_off, col_off, bbox_4326) the composite's rows carry — any drift
+    silently changes the matched tile set.  Meta rows for hole positions
+    (no composite row) are allowed: the payload inner join drops them.
+
+    Single rasters add the ingest records as a third side: for H and W
+    in {chunk-1, chunk, chunk+1, 2*chunk+halo+3} and halo in
+    {0, 1, chunk-1}, fixture_chunk_records, the composite of their chunk
+    table and mosaic_meta_df cut bit-equal windows and bboxes, the
+    composite gives the ingest payload back, and the owner cores
+    partition [0, H) x [0, W)."""
+    import zlib
+    from functools import reduce
+
+    import numpy as np
+
+    from geowarp_spark.operators.warp_tiles import (CHUNK_SCHEMA, _Lattice,
+                                                    fixture_chunk_records,
+                                                    mosaic_chunks,
+                                                    mosaic_meta_df)
+
+    fx, g, ch, meta = _rgb_halves(spark)
     comp_rows = mosaic_chunks(ch, chunk=128, halo=8).select(
         "raster_id", "row_off", "col_off", "bbox_4326").collect()
     meta_rows = mosaic_meta_df(spark, meta, chunk=128, halo=8).collect()
@@ -1848,6 +1880,39 @@ def test_warp_tiles_rejects_chunk_table_on_other_lattice(spark):
     with pytest.raises(Exception, match=r"ValueError: chunk table window "
                        r"\[\d+, \d+\) .* chunk=256, halo=8 lattice"):
         warp_tiles(tiles, chunks, method="near", out_size=32).collect()
+
+
+def test_warp_tiles_rejects_chunks_meta_on_other_lattice(spark):
+    """chunks_meta cut on another lattice than the chunk table still
+    joins wherever the two lattices share a (row_off, col_off), and used
+    to drop or corrupt tiles silently.  A 128/8 composite warped with
+    64/8, 256/8 or 128/0 metadata must raise from the partials; its own
+    128/8 metadata gives the tiles of the plan without chunks_meta."""
+    from geowarp_spark.kernels.bbox import reproject_bbox
+    from geowarp_spark.kernels.proj import transformer
+    from geowarp_spark.operators.warp_tiles import (mosaic_chunks,
+                                                    mosaic_meta_df, tiles_df,
+                                                    warp_tiles)
+
+    fx, _, ch, meta = _rgb_halves(spark)
+    comp = mosaic_chunks(ch, chunk=128, halo=8, meta=meta)
+    bb = reproject_bbox(fx["bbox"], transformer(fx["srs"], 4326).transform,
+                        density=16, nan_strategy="skip")
+    tiles = tiles_df(spark, [10], bbox_4326=bb)
+
+    def crcs(chunks_meta):
+        out = warp_tiles(tiles, comp, method="near", out_size=64, chunk=128,
+                         halo=8, chunks_meta=chunks_meta)
+        return {(r["z"], r["x"], r["y"]): r["crc"] for r in out.select(
+            "z", "x", "y", F.crc32("data").alias("crc")).collect()}
+
+    plain = crcs(None)
+    assert len(plain) > 50
+    assert crcs(mosaic_meta_df(spark, meta, chunk=128, halo=8)) == plain
+    for chunk, halo in ((64, 8), (256, 8), (128, 0)):
+        with pytest.raises(Exception, match=r"ValueError: chunks_meta bbox "
+                           r".* cut chunks_meta on the chunk table's"):
+            crcs(mosaic_meta_df(spark, meta, chunk=chunk, halo=halo))
 
 
 def test_pip_prune_z_mismatch_raises(spark, tmp_path):

@@ -65,9 +65,11 @@ def _audit_hilbert_pruning(spark):
     and (b) the measured row-group pruning from the executed plan's own
     scan metrics, plus (c) where the pruning operators read the stored
     zoom from: the column's hilbert_zoom stamp, or a probe job."""
+    import numpy as np
     from pyspark.sql import functions as F
 
-    from geowarp_spark.grid.hilbert import coalesce_ranges, disk_cell_ids
+    from geowarp_spark.grid.hilbert import coalesce_ranges
+    from geowarp_spark.grid.tiles import disk_cells
     from geowarp_spark.operators.spatial import (_stored_zoom,
                                                  cell_range_predicate,
                                                  write_hilbert_sorted)
@@ -82,7 +84,9 @@ def _audit_hilbert_pruning(spark):
     stored = spark.read.parquet(path)
     zoom, source = _stored_zoom(stored, "hcell")
     print(f"hilbert audit: stored zoom z{zoom} read from the {source}")
-    ids = disk_cell_ids([10.0, 40.0, -30.0], [10.0, -70.0, 140.0], z, ring=2)
+    _, ids = disk_cells(np.array([10.0, -70.0, 140.0]),
+                        np.array([10.0, 40.0, -30.0]), z, np.full(3, 2),
+                        "hilbert")
     ranges = coalesce_ranges(ids, max_ranges=32)
     flt = stored.filter(cell_range_predicate(ranges, "hcell"))
 
@@ -123,12 +127,28 @@ def _audit_hilbert_pruning(spark):
     return det
 
 
+def _broadcast_side_nodes(df):
+    """Node names under the BroadcastExchange nodes of df's physical plan
+    (AQE's initial plan when adaptive execution is on)."""
+    def names(node, under=False):
+        ch = node.children()
+        here = [node.nodeName()] if under else []
+        under = under or node.nodeName() == "BroadcastExchange"
+        return here + [n for i in range(ch.size())
+                       for n in names(ch.apply(i), under)]
+
+    ep = df._jdf.queryExecution().executedPlan()
+    return names(ep.executedPlan() if ep.nodeName() == "AdaptiveSparkPlan"
+                 else ep)
+
+
 def _audit_knn_certified(spark):
-    """knn_join_cells is one certified pass: the per-query ring arrives
-    as a column of the broadcast query side, so the plan carries NO
-    literal IN-list over query ids, and one call costs a fixed number of
-    Spark jobs (the count table and the query collect) however far the
-    queries must reach."""
+    """knn_join_cells is one certified pass: the driver lists each
+    query's disk cells (grid.tiles.disk_cells) as the broadcast query
+    side, so the plan carries NO literal IN-list over query ids and no
+    Generate or Exchange under the broadcast, and one call costs a fixed
+    number of Spark jobs (the count table and the query collect) however
+    far the queries must reach."""
     from pyspark.sql import functions as F
 
     from geowarp_spark.operators.spatial import knn_join_cells
@@ -153,11 +173,21 @@ def _audit_knn_certified(spark):
         out.explain("formatted")
     plan = buf.getvalue()
     n_in = plan.count(" IN (") + plan.upper().count("INSET")
+    side = {}
+    for scheme in ("equirect", "hilbert"):
+        nodes = _broadcast_side_nodes(
+            knn_join_cells(pts, q, k=3, z=6, ring=1, scheme=scheme))
+        side[scheme] = (sum("Generate" in n for n in nodes),
+                        sum("Exchange" in n for n in nodes))
+        print(f"knn audit: {scheme} broadcast query side: "
+              f"{side[scheme][0]} Generate, {side[scheme][1]} Exchange")
     det = [
         "## knn_join_cells certified single pass",
         "",
-        "**Expectation:** the per-query ring is a column of the broadcast "
-        "query side, so the plan carries NO literal IN-list over query ids "
+        "**Expectation:** the driver lists each query's disk cells as the "
+        "broadcast query side, so the plan carries NO literal IN-list over "
+        "query ids and no Generate or Exchange under the broadcast "
+        "(test_knn_cells_broadcast_side_is_driver_listed) "
         "(10k-query bound pinned in test_knn_cells_many_queries_bounded_plan), "
         "and the call runs a fixed number of Spark jobs (pinned in "
         "test_knn_round_trips_independent_of_ring).",
@@ -166,11 +196,16 @@ def _audit_knn_certified(spark):
         f"query_id** (must be 0); **{n_jobs} Spark jobs** inside the call "
         "(count table + query collect; the action runs the rest).",
         "",
+        "Broadcast query side, (Generate, Exchange) nodes per scheme "
+        "(must be 0: the disk is listed on the driver): "
+        + ", ".join(f"{k} {v}" for k, v in side.items()) + ".",
+        "",
         "```",
         plan.strip()[:3000],
         "```", "",
     ]
     assert n_in == 0, "IN-list leaked back into the kNN plan"
+    assert all(v == (0, 0) for v in side.values()), side
     return det
 
 
