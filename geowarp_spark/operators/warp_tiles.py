@@ -38,7 +38,7 @@ from ..grid.tiles import tile_to_bbox_3857, tile_to_bbox_4326
 from ..kernels.affine import Geotransform
 from ..kernels.bbox import reproject_bbox
 from ..kernels.proj import transformer
-from ..kernels.warp import warp
+from ..kernels.warp import _cast_band, warp
 from .groups import stream_groups
 
 CHUNK_SCHEMA = StructType([
@@ -107,9 +107,11 @@ class _Lattice:
             if max(w0, lo) < min(w1, hi):
                 yield k, max(w0, lo), min(w1, hi)
 
-    def core(self, off, size, n, lo, hi):
+    def core(self, off, size, n):
         """Owned core of the chunk whose window is [off, off + size) on an
-        n-px axis; the first and last cores reach out to lo and hi.
+        n-px axis; the first and last cores reach out to -inf and +inf
+        (box windows of out pixels centred just past the raster edge still
+        clip into it, geowarp.js:929, and that value needs one owner).
         Raises when that window is not one of this lattice's."""
         c = self.chunk
         k = 0 if off == 0 else (off + self.halo) // c
@@ -120,7 +122,8 @@ class _Lattice:
                 f"is off the chunk={c}, halo={self.halo} lattice (its chunk "
                 f"{k} window is [{w0}, {w1})): cut the chunk table with the "
                 "chunk= and halo= given to warp_tiles")
-        return (lo if k == 0 else k * c, hi if (k + 1) * c >= n else (k + 1) * c)
+        return (-np.inf if k == 0 else k * c,
+                np.inf if (k + 1) * c >= n else (k + 1) * c)
 
     @staticmethod
     def bbox_4326(g, to4326, r0, r1, c0, c1):
@@ -287,19 +290,17 @@ def mosaic_chunks(chunks: DataFrame, *, chunk=256, halo=8,
     """Distributed pixel-level composite of grid-aligned rasters onto one
     virtual raster lattice -> a standard single-raster chunk table.
 
-    ``warp_tiles(..., mosaic=True)`` resolves cross-raster precedence on
-    OUT pixels, which is exact for uniform-support methods (near,
-    vectorize) but lets box/bilinear windows straddling a raster seam
-    gather from one raster only (the r5 documented deviation).  This
-    operator composites FIRST, on the shared source grid — the GDAL
-    mosaic rule: valid pixels win over fill, ties go to the highest
-    raster_id (pieces applied in ascending raster_id order) — so the
-    downstream chunks plan sees ONE raster and every resampling method
-    treats source seams exactly like chunk seams (halos are rebuilt on
-    the virtual lattice).  mosaic-of-halves == whole-raster is bit-exact
-    for near, bilinear AND median (test_warp_mosaic_composite_all_methods);
-    reference seam semantics: bilinear edge tree geowarp.js:793-833, box
-    windows geowarp.js:893-950.
+    This is the one way several rasters merge: composite on the shared
+    source grid, then ``warp_tiles`` the result.  The GDAL mosaic rule
+    decides each pixel: valid pixels win over fill, ties go to the
+    highest raster_id (pieces applied in ascending raster_id order).
+    The downstream chunks plan sees ONE raster, so every resampling
+    method treats source seams exactly like chunk seams (halos are
+    rebuilt on the virtual lattice).  mosaic-of-halves == whole-raster
+    is bit-exact for near, bilinear AND median
+    (test_warp_mosaic_composite_all_methods); reference seam semantics:
+    bilinear edge tree geowarp.js:793-833, box windows
+    geowarp.js:893-950.
 
     Requirements (asserted from per-raster metadata — #rasters rows, no
     pixel data on the driver): all rasters share srs, bands, dtype, and
@@ -508,12 +509,13 @@ def _cover_cells_sql(bbox_col, z):
     )
 
 
-def _stitch_and_warp(recs, z, x, y, method, method_name, out_size, out_srs,
-                     out_dtype, turbo, warp_kwargs):
-    """Stitch chunk records into one grid-aligned source window and run
-    the numpy kernel once.  Both plans warp through here: the broadcast
-    plan passes every chunk a tile overlaps, the chunk-anchored plan one
-    chunk at a time (then keeps only the pixels that chunk owns)."""
+def _stitch_and_warp(recs, z, x, y, method, out_size, out_srs, out_dtype,
+                     turbo, warp_kwargs):
+    """Stitch chunk records into one grid-aligned source window, run the
+    numpy kernel once and return its (B, out_size, out_size) block.  Both
+    plans warp through here: the broadcast plan passes every chunk a tile
+    overlaps, the chunk-anchored plan one chunk at a time (then keeps
+    only the pixels that chunk owns)."""
     first = recs[0]
     srs = int(first["srs"])
     full_gt = list(first["geotransform"])
@@ -565,20 +567,28 @@ def _stitch_and_warp(recs, z, x, y, method, method_name, out_size, out_srs,
         turbo=turbo,
         **warp_kwargs,
     )
-    block = res["block"]
+    return res["block"]
+
+
+def _tile_row(raster_id, z, x, y, method_name, block, n_chunks):
+    """The TILE_OUT_SCHEMA row of one warped (B, H, W) tile block."""
     return {
-        "raster_id": first["raster_id"],
-        "z": z, "x": x, "y": y,
+        "raster_id": raster_id,
+        "z": int(z), "x": int(x), "y": int(y),
         "method": method_name,
         "bands": int(block.shape[0]),
         "height": int(block.shape[1]),
         "width": int(block.shape[2]),
         "dtype": str(block.dtype),
         "data": block.tobytes(),
-        "n_chunks": int(len(recs)),
+        "n_chunks": int(n_chunks),
         "valid_px": int(np.isfinite(block.astype(np.float64)).sum()),
     }
 
+
+# equirect zoom of the cover cells pair discovery equi-joins tiles and
+# chunks on
+BIN_Z = 6
 
 PARTIAL_SCHEMA = StructType([
     StructField("raster_id", StringType()),
@@ -586,8 +596,7 @@ PARTIAL_SCHEMA = StructType([
     StructField("x", LongType()),
     StructField("y", LongType()),
     StructField("bands", IntegerType()),
-    StructField("dtype", StringType()),      # payload dtype of `data`
-    StructField("tgt_dtype", StringType()),  # dtype the merged tile materializes to
+    StructField("dtype", StringType()),
     StructField("r0", IntegerType()),   # owned-rect offset within the tile
     StructField("c0", IntegerType()),
     StructField("rh", IntegerType()),   # owned-rect height / width
@@ -598,10 +607,9 @@ PARTIAL_SCHEMA = StructType([
 
 
 def warp_tiles(tiles: DataFrame, chunks: DataFrame, *, method="near",
-               out_size=256, out_srs=3857, join_strategy="chunks", bin_z=6,
+               out_size=256, out_srs=3857, join_strategy="chunks",
                out_dtype=None, turbo=False, chunk=256, halo=8,
-               out_no_data=None, mosaic=False,
-               chunks_meta: DataFrame | None = None,
+               out_no_data=None, chunks_meta: DataFrame | None = None,
                **warp_kwargs) -> DataFrame:
     """tiles x chunks -> warped tile rows (TILE_OUT_SCHEMA) through the
     chunk-anchored plan, the one that is safe at ANY source size: the
@@ -639,17 +647,9 @@ def warp_tiles(tiles: DataFrame, chunks: DataFrame, *, method="near",
     the SAMPLE centers and expanded with the same rounded edge maps
     _materialize uses (see _chunk_partials).
 
-    ``mosaic=True``: merge partials from ALL rasters into ONE tile per
-    (z, x, y) — the multi-source form (a corpus of GeoTIFFs -> one
-    pyramid) the reference's single-raster API cannot express.  Each
-    raster's chunk cores partition only that raster, so out pixels
-    covered by several rasters get one owned partial PER raster;
-    overlaps resolve deterministically by ascending raster_id (later id
-    wins — a fixed, engine-independent precedence).  Where sources
-    don't overlap and tile seams need no cross-source resampling
-    support (always true for 'near'), the mosaic of raster PIECES is
-    bit-identical to warping the undivided raster
-    (test_warp_mosaic_of_halves_equals_whole).
+    Each raster_id warps to its own tiles.  Several rasters merge into
+    one pyramid through ``mosaic_chunks`` first, which composites them
+    on the shared source grid.
 
     Proven bit-identical to the broadcast plan by
     test_warp_tiles_all_strategies_identical and
@@ -673,11 +673,11 @@ def warp_tiles(tiles: DataFrame, chunks: DataFrame, *, method="near",
     # frozen bench constructs these plans per mode per trial.
     t = tiles.selectExpr(
         "z", "x", "y", "bbox_4326",
-        f"explode({_cover_cells_sql('bbox_4326', bin_z)}) AS cell")
+        f"explode({_cover_cells_sql('bbox_4326', BIN_Z)}) AS cell")
     c = (chunks_meta if chunks_meta is not None else chunks).selectExpr(
         "raster_id", "row_off", "col_off",
         "bbox_4326 AS chunk_bbox_4326",
-        f"explode({_cover_cells_sql('bbox_4326', bin_z)}) AS cell")
+        f"explode({_cover_cells_sql('bbox_4326', BIN_Z)}) AS cell")
     overlap = F.expr(
         "bbox_4326[0] <= chunk_bbox_4326[2] AND "
         "bbox_4326[2] >= chunk_bbox_4326[0] AND "
@@ -693,8 +693,7 @@ def warp_tiles(tiles: DataFrame, chunks: DataFrame, *, method="near",
     # collect_list chain paid two metadata exchanges for one (round-6
     # fixed-cost profile: each extra tiny-stage shuffle costs ~0.2-0.5 s
     # of pure scheduling at 32 cores).  Key-set order is nondeterministic
-    # but output-neutral: owned rects are disjoint per tile, and the
-    # mosaic merge sorts explicitly.
+    # but output-neutral: owned rects are disjoint per tile.
     #
     # EXPLICIT fixed-width exchange for the METADATA side (r8: the r6
     # round-robin repartition AFTER the aggregate paid a second exchange;
@@ -732,7 +731,7 @@ def warp_tiles(tiles: DataFrame, chunks: DataFrame, *, method="near",
             for rec in pdf.to_dict("records"):
                 rows.extend(_chunk_partials(
                     rec, method, out_size, out_srs, out_dtype, turbo,
-                    lat, out_no_data, warp_kwargs, mosaic=mosaic))
+                    lat, out_no_data, warp_kwargs))
             if rows:
                 yield pd.DataFrame(rows)
 
@@ -741,71 +740,29 @@ def warp_tiles(tiles: DataFrame, chunks: DataFrame, *, method="near",
     fill_out = np.nan if out_no_data is None else float(out_no_data)
 
     def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        if mosaic:
-            # a mosaic group spans multiple rasters: mixed band counts or
-            # target dtypes cannot merge onto one canvas — fail loudly
-            # instead of reinterpreting another raster's payload bytes
-            if pdf["bands"].nunique() != 1 or pdf["tgt_dtype"].nunique() != 1:
-                raise ValueError(
-                    "mosaic requires uniform bands/dtype across rasters; got "
-                    f"bands={sorted(pdf['bands'].unique().tolist())} "
-                    f"dtypes={sorted(pdf['tgt_dtype'].unique().tolist())} "
-                    "— pass out_dtype= to cast, or mosaic per-dtype groups")
         first = pdf.iloc[0]
         bands = int(first["bands"])
-        dt = np.dtype(first["tgt_dtype"])
+        dt = np.dtype(first["dtype"])
         canvas = np.full((bands, out_size, out_size), fill_out)
         for p in pdf.itertuples(index=False):
             rh, rw = int(p.rh), int(p.rw)
             mask = np.unpackbits(
                 np.frombuffer(p.mask, dtype=np.uint8), count=rh * rw
             ).astype(bool).reshape(rh, rw)
-            # decode with the partial's OWN payload dtype: in mosaic mode
-            # integer targets ship float64 partials so nodata survives to
-            # the precedence merge (see _chunk_partials)
-            block = np.frombuffer(p.data, dtype=np.dtype(p.dtype)).reshape(
-                bands, rh, rw)
+            block = np.frombuffer(p.data, dtype=dt).reshape(bands, rh, rw)
             view = canvas[:, int(p.r0):int(p.r0) + rh, int(p.c0):int(p.c0) + rw]
-            if mosaic:
-                # GDAL mosaic rule: VALID pixels win over fill.  Edge
-                # chunks own the outside halfplane of their raster (the
-                # box-window edge semantics), so at source seams two
-                # rasters both claim boundary pixels — one holding fill,
-                # which must never clobber the other's real value.
-                # Among valid overlaps, the stream's raster_id order
-                # decides.
-                bm = block[:, mask].astype(np.float64)
-                validm = np.isfinite(bm)
-                if out_no_data is not None:
-                    validm &= bm != fill_out
-                view[:, mask] = np.where(validm, bm, view[:, mask])
-            else:
-                view[:, mask] = block[:, mask].astype(np.float64)
-        # same dtype materialization as kernels.warp._materialize
-        data = canvas
-        if np.issubdtype(dt, np.integer):
-            data = np.nan_to_num(data, nan=0.0, posinf=0.0, neginf=0.0)
-        data = data.astype(dt)
-        return pd.DataFrame([{
-            "raster_id": "mosaic" if mosaic else first["raster_id"],
-            "z": int(first["z"]), "x": int(first["x"]), "y": int(first["y"]),
-            "method": method_name,
-            "bands": bands,
-            "height": out_size, "width": out_size,
-            "dtype": str(dt),
-            "data": data.tobytes(),
-            "n_chunks": int(len(pdf)),
-            "valid_px": int(np.isfinite(data.astype(np.float64)).sum()),
-        }])
+            view[:, mask] = block[:, mask].astype(np.float64)
+        # the dtype materialization kernels.warp._materialize uses
+        return pd.DataFrame([_tile_row(
+            first["raster_id"], first["z"], first["x"], first["y"],
+            method_name, _cast_band(canvas, dt), len(pdf))])
 
     # one payload exchange: stream_groups' explicit width keeps the
     # ~64 KB partial rects from being coalesced to a few merge tasks
     # (measured: the merge ran 3-way at local[8] under AQE's advisory
-    # size).  Its sort applies partials in ascending raster_id (ties by
-    # rect origin), so in mosaic mode the highest raster_id wins where
-    # sources overlap; within one raster owned rects are disjoint, so
-    # the order only matters across rasters.
-    merge_keys = ["z", "x", "y"] if mosaic else ["raster_id", "z", "x", "y"]
+    # size).  Owned rects are disjoint per tile, so the sort's rect
+    # order only fixes the merge's input order.
+    merge_keys = ["raster_id", "z", "x", "y"]
     return stream_groups(
         partials, merge_keys, ["raster_id", "r0", "c0"],
         lambda pdf: (merge(g) for _, g in pdf.groupby(merge_keys, sort=False)),
@@ -813,7 +770,7 @@ def warp_tiles(tiles: DataFrame, chunks: DataFrame, *, method="near",
 
 
 def _chunk_partials(rec, method, out_size, out_srs, out_dtype, turbo,
-                    lat, out_no_data, warp_kwargs, mosaic=False):
+                    lat, out_no_data, warp_kwargs):
     """Warp every matched tile from ONE chunk's window; emit owned rects.
 
     Ownership: out SAMPLE centers (the scaled out_resolution grid the
@@ -835,7 +792,6 @@ def _chunk_partials(rec, method, out_size, out_srs, out_dtype, turbo,
     from ..kernels.stats import js_round
     from ..kernels.warp import _scale_integer
 
-    method_name = method if isinstance(method, str) else "custom"
     bbox = list(rec["bbox_4326"])
     for meta in rec["meta_bboxes"]:
         if list(meta) != bbox:
@@ -844,20 +800,10 @@ def _chunk_partials(rec, method, out_size, out_srs, out_dtype, turbo,
                 f"{rec['raster_id']!r}, row_off {rec['row_off']}, col_off "
                 f"{rec['col_off']}) differs from the chunk table's {bbox}: "
                 "cut chunks_meta on the chunk table's chunk=/halo= lattice")
-    rh_full, rw_full = int(rec["raster_height"]), int(rec["raster_width"])
-    # single-raster: edge chunks own the outside halfplane too (box-stat
-    # windows of out pixels whose CENTER lies just past the raster edge
-    # still clip into the raster — geowarp.js:929 — and that value must
-    # come from exactly one partial).  mosaic: "outside my raster"
-    # belongs to OTHER rasters, so ownership clamps to this raster's
-    # extent — otherwise an edge chunk's fill claims a neighbor source's
-    # real pixels at the seam.
-    lo_r, hi_r = (0, rh_full) if mosaic else (-np.inf, np.inf)
-    lo_c, hi_c = (0, rw_full) if mosaic else (-np.inf, np.inf)
     own_r0, own_r1 = lat.core(int(rec["row_off"]), int(rec["height"]),
-                              rh_full, lo_r, hi_r)
+                              int(rec["raster_height"]))
     own_c0, own_c1 = lat.core(int(rec["col_off"]), int(rec["width"]),
-                              rw_full, lo_c, hi_c)
+                              int(rec["raster_width"]))
 
     g = Geotransform(list(rec["geotransform"]))
     srs = int(rec["srs"])
@@ -868,18 +814,6 @@ def _chunk_partials(rec, method, out_size, out_srs, out_dtype, turbo,
     xr, yr = warp_kwargs.get("out_resolution", (1.0, 1.0))
     ws_s, _, x_scale = _scale_integer(out_size, xr)
     hs_s, _, y_scale = _scale_integer(out_size, yr)
-
-    tgt_dtype = str(np.dtype(out_dtype)) if out_dtype else str(np.dtype(rec["dtype"]))
-    kernel_dtype = out_dtype
-    if (mosaic and out_no_data is None
-            and np.issubdtype(np.dtype(tgt_dtype), np.integer)):
-        # integer fill materializes NaN to 0, indistinguishable from real
-        # data in the merge's valid-over-fill precedence — warp in
-        # float64 so nodata stays NaN until after precedence; the merge
-        # casts to tgt_dtype with the same nan_to_num _materialize uses,
-        # so the result is bit-identical to the whole-raster path (which
-        # also materializes from a float64 canvas at the end)
-        kernel_dtype = "float64"
 
     out = []
     for tk in rec["tile_keys"]:
@@ -938,12 +872,8 @@ def _chunk_partials(rec, method, out_size, out_srs, out_dtype, turbo,
                            col_end=int(scols.max()) + 1)
         if method in ("vectorize", "near-vectorize", "nearest-vectorize"):
             pair_kwargs = dict(warp_kwargs, out_no_data=out_no_data)
-        row = _stitch_and_warp(
-            [rec], z, x, y, method, method_name, out_size, out_srs,
-            kernel_dtype, turbo, pair_kwargs,
-        )
-        block = np.frombuffer(row["data"], dtype=row["dtype"]).reshape(
-            row["bands"], out_size, out_size)
+        block = _stitch_and_warp([rec], z, x, y, method, out_size, out_srs,
+                                 out_dtype, turbo, pair_kwargs)
         rr, cc = np.nonzero(owned)
         r0, r1 = int(rr.min()), int(rr.max()) + 1
         c0, c1 = int(cc.min()), int(cc.max()) + 1
@@ -951,9 +881,8 @@ def _chunk_partials(rec, method, out_size, out_srs, out_dtype, turbo,
         out.append({
             "raster_id": rec["raster_id"],
             "z": z, "x": x, "y": y,
-            "bands": int(row["bands"]),
-            "dtype": row["dtype"],
-            "tgt_dtype": tgt_dtype,
+            "bands": int(block.shape[0]),
+            "dtype": str(block.dtype),
             "r0": r0, "c0": c0, "rh": r1 - r0, "rw": c1 - c0,
             "data": np.ascontiguousarray(block[:, r0:r1, c0:c1]).tobytes(),
             "mask": np.packbits(sub_mask).tobytes(),
@@ -1013,9 +942,11 @@ def warp_tiles_broadcast(tiles: DataFrame, chunk_records, variants=None, *,
                     continue
                 matched = [recs[i] for i in idx]
                 for tag, m, mname, tb_v, kw in vs:
-                    row = _stitch_and_warp(
-                        matched, int(z), int(x), int(y), m, mname,
-                        out_size, out_srs, out_dtype, tb_v, kw)
+                    block = _stitch_and_warp(
+                        matched, int(z), int(x), int(y), m, out_size,
+                        out_srs, out_dtype, tb_v, kw)
+                    row = _tile_row(matched[0]["raster_id"], z, x, y, mname,
+                                    block, len(matched))
                     if tagged:
                         row["config"] = tag
                     rows.append(row)

@@ -215,7 +215,7 @@ def _audit_streams(spark):
     partitions and ONE mapInPandas that serves every group of an Arrow
     batch, never a grouped pandas UDF (one Python call per group).
     Covers the rasterize paint, the mosaic_chunks composite and the
-    warp_tiles merge in both modes."""
+    warp_tiles merge."""
     import numpy as np
     from pyspark.sql import functions as F
 
@@ -251,8 +251,6 @@ def _audit_streams(spark):
         "rasterize_tiles paint": rasterize_tiles(pts, z=4, px_bits=6),
         "mosaic_chunks composite": mosaic_chunks(ch, chunk=128, halo=8),
         "warp_tiles merge": warp_tiles(tiles, ch, **kw),
-        "warp_tiles merge (mosaic=True)": warp_tiles(tiles, ch, mosaic=True,
-                                                     **kw),
     }
     det = [
         "## grouped stages: one stream_groups pass each",
