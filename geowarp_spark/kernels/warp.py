@@ -47,6 +47,14 @@ def _scale_integer(n, r):
     return n2, n2 / n, n / n2
 
 
+def _sample_map(n, ns, scale):
+    """Out pixel -> the sample it replicates, on an n-px axis of ns
+    samples: pixel C copies sample c iff round(c * scale) <= C <
+    round((c + 1) * scale) (geowarp.js:506-521)."""
+    edges = js_round(np.arange(ns + 1, dtype=np.float64) * scale).astype(np.int64)
+    return np.clip(np.searchsorted(edges, np.arange(n), side="right") - 1, 0, ns - 1)
+
+
 def _uniq_desc(arr):
     """uniq = distinct + sort DESC (geowarp.js:37)."""
     return sorted(set(arr), reverse=True)
@@ -918,13 +926,8 @@ def _materialize(out_block, written, hs, ws, x_scale, y_scale, out_width, out_he
         full = out_block
         wfull = written
     else:
-        # column C is covered by sample c iff round(c*xs) <= C < round((c+1)*xs)
-        col_edges = js_round(np.arange(ws + 1, dtype=np.float64) * x_scale).astype(np.int64)
-        row_edges = js_round(np.arange(hs + 1, dtype=np.float64) * y_scale).astype(np.int64)
-        col_map = np.searchsorted(col_edges, np.arange(out_width), side="right") - 1
-        row_map = np.searchsorted(row_edges, np.arange(out_height), side="right") - 1
-        col_map = np.clip(col_map, 0, ws - 1)
-        row_map = np.clip(row_map, 0, hs - 1)
+        col_map = _sample_map(out_width, ws, x_scale)
+        row_map = _sample_map(out_height, hs, y_scale)
         full = out_block[:, row_map][:, :, col_map]
         wfull = written[row_map][:, col_map]
 

@@ -17,9 +17,9 @@ Plan shape (scale posture):
         ──stream_groups(cell): repartition(n_cores, second shuffle on tile id
           cell).sortWithinPartitions(cell)         (small: one row per
                                                     nonzero pixel)
-          .mapInPandas(paint)                      streamed: every tile of
-                                                   an Arrow batch in one
-                                                   numpy pass
+          .mapInPandas(paint)                      one numpy pass per Arrow
+                                                   batch over its tile runs
+                                                   (groups.run_bounds)
   -> tile rows (binary uint32 count grids) -> CheckpointStore.commit
 """
 
@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 from ..grid.hilbert import bbox_cover_cell_count, bbox_cover_cell_ids
 from ..grid.tiles import X_BITS
 from ..sources.pages import LAT_SQL, LON_SQL
-from .groups import stream_groups
+from .groups import frames, stream_groups
 from .spatial import _prune_scan, cell_rollup, coarsen_sql
 
 RASTER_TILE_SCHEMA = (
@@ -84,10 +84,6 @@ def pixel_counts(points: DataFrame, z: int, px_bits: int = 6,
                     fine.bitwiseAND(m).cast("int").alias("py"), "n"))
 
 
-# upper bound on the uint32 grid block behind one yielded paint frame
-_PAINT_FRAME_BYTES = 64 << 20
-
-
 def rasterize_tiles(points: DataFrame, z: int, px_bits: int = 6,
                     lon="lon", lat="lat") -> DataFrame:
     """Paint per-pixel counts into dense uint32 tile rasters.
@@ -98,37 +94,31 @@ def rasterize_tiles(points: DataFrame, z: int, px_bits: int = 6,
 
     The paint is one streamed pass, not a Python call per tile:
     groups.stream_groups hash-partitions the counts on ``cell``, sorts
-    them and hands whole tiles to one mapInPandas, which paints every
-    tile of an Arrow batch at once — tile runs from ``np.unique`` on the
-    sorted cells, one fancy-index assignment into an
-    ``(n_tiles, size * size)`` block (exact: ``(cell, px, py)`` is
-    unique, one row per fine cell) and ``n_pages`` from one segmented
-    sum.
+    them and hands whole tiles, with their run bounds, to one
+    mapInPandas, which paints every tile of an Arrow batch at once — one
+    fancy-index assignment into an ``(n_tiles, size * size)`` block
+    (exact: ``(cell, px, py)`` is unique, one row per fine cell) and
+    ``n_pages`` from one segmented sum.
 
     Memory: at most one tile's rows (``size**2``) carry across a batch
-    boundary, and each yielded frame holds at most
-    ``_PAINT_FRAME_BYTES`` (64 MB) of grids — or one tile when a single
-    grid is larger.
+    boundary, and ``groups.frames`` caps each yielded frame at 64 MB of
+    grids — or one tile when a single grid is larger.
     """
     size = 1 << px_bits
     npix = size * size
-    per_frame = max(1, _PAINT_FRAME_BYTES // (4 * npix))
 
-    def tiles(pdf):
-        # rows of whole tiles, sorted by cell -> frames of <= per_frame tiles
+    def tiles(pdf, bounds):
         cell, px, py, n = (pdf[c].to_numpy() for c in ("cell", "px", "py", "n"))
-        ids, start, inv = np.unique(cell, return_index=True, return_inverse=True)
-        bounds = np.r_[start, len(cell)]
-        for a in range(0, len(ids), per_frame):
-            b = min(a + per_frame, len(ids))
+        for a, b in frames(bounds, 4 * npix):
             lo, hi = bounds[a], bounds[b]
             grid = np.zeros((b - a, npix), dtype=np.uint32)
-            grid[inv[lo:hi] - a, py[lo:hi] * size + px[lo:hi]] = n[lo:hi]
+            tile = np.repeat(np.arange(b - a), np.diff(bounds[a:b + 1]))
+            grid[tile, py[lo:hi] * size + px[lo:hi]] = n[lo:hi]
             yield pd.DataFrame({
-                "cell": ids[a:b],
+                "cell": cell[bounds[a:b]],
                 "z": np.full(b - a, z, dtype=np.int32),
                 "px_size": np.full(b - a, size, dtype=np.int32),
-                "n_pages": np.add.reduceat(n[lo:hi], start[a:b] - lo),
+                "n_pages": np.add.reduceat(n[lo:hi], bounds[a:b] - lo),
                 "data": [g.tobytes() for g in grid],
             })
 

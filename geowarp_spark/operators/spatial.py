@@ -22,6 +22,7 @@ from ..grid.hilbert import (Z_BITS, bbox_cover_cell_count,
                             bbox_cover_cell_ids, coalesce_ranges,
                             with_hilbert_cell)
 from ..grid.tiles import X_BITS, cell_sql_expr, disk_cells
+from .groups import run_bounds
 
 # Driver-side guard for _prune_scan's cover enumeration: at most ~4M
 # ids (~32 MB of int64).  A larger cover spans most of the grid anyway,
@@ -169,14 +170,33 @@ def pip_join_polygon(points: DataFrame, polys: DataFrame, lon="lon", lat="lat") 
     return points.join(F.broadcast(polys), pre & inside)
 
 
+def _first_k(batches, k: int, query_id: str):
+    """Phase 1 of _topk_two_phase: the first ``k`` rows of each query run
+    (``groups.run_bounds``) of (query, dist2, id)-sorted batches; only
+    the last query's count carries into the next batch."""
+    last, held = None, 0   # the previous batch's last query, its rows
+    for pdf in batches:
+        if len(pdf) == 0:
+            continue
+        bounds = run_bounds(pdf, [query_id])
+        rank = np.arange(len(pdf)) - np.repeat(bounds[:-1], np.diff(bounds))
+        q = pdf[query_id].to_numpy()
+        if q[0] == last:
+            rank[:bounds[1]] += held
+        last, held = q[-1], int(rank[-1]) + 1
+        keep = rank < k
+        if keep.any():
+            yield pdf.loc[keep]
+
+
 def _topk_two_phase(cand: DataFrame, k: int, query_id: str, point_id: str) -> DataFrame:
     """Scalable top-k per query, memory-bounded.
 
     Phase 1 (no shuffle): Tungsten external sort within each existing
-    partition on (query, dist2, id), then an Arrow mapInPandas pass that
-    keeps only the first k rows per query per partition — vectorized
-    cumcount, O(queries x k) state, streams batches.  Phase 2: a rank
-    window over only (partitions x k) survivors per query.
+    partition on (query, dist2, id), then an Arrow mapInPandas pass
+    (_first_k) that keeps the first k rows of each query run, holding
+    one count across batches.  Phase 2: a rank window over only
+    (partitions x k) survivors per query.
 
     Why not a single rank window: it shuffles EVERY candidate into one
     partition per query (serial sort of millions of rows).  Why not
@@ -184,29 +204,10 @@ def _topk_two_phase(cand: DataFrame, k: int, query_id: str, point_id: str) -> Da
     in one aggregation buffer (measured GC storms / 5x wall variance at
     5M candidates).  Sorting spills; state never grows with candidates.
     """
-    import pandas as pd
-
     cand = cand.select(query_id, point_id, "dist2")
-    qt = dict(cand.dtypes)[query_id]
-    pt = dict(cand.dtypes)[point_id]
-    out_schema = f"{query_id} {qt}, {point_id} {pt}, dist2 double"
-    sorted_parts = cand.sortWithinPartitions(query_id, "dist2", point_id)
-
-    def topk_gen(batches):
-        seen: dict = {}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            base = pdf[query_id].map(seen).fillna(0).to_numpy()
-            within = pdf.groupby(query_id, sort=False).cumcount().to_numpy()
-            rank = base + within
-            for q, cnt in pdf.groupby(query_id, sort=False).size().items():
-                seen[q] = seen.get(q, 0) + int(cnt)
-            keep = rank < k
-            if keep.any():
-                yield pdf.loc[keep]
-
-    partial = sorted_parts.mapInPandas(topk_gen, schema=out_schema)
+    out_schema = ", ".join(f"{c} {t}" for c, t in cand.dtypes)
+    partial = cand.sortWithinPartitions(query_id, "dist2", point_id).mapInPandas(
+        lambda batches: _first_k(batches, k, query_id), schema=out_schema)
     w = Window.partitionBy(query_id).orderBy(F.col("dist2").asc(), F.col(point_id).asc())
     return partial.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 

@@ -34,12 +34,12 @@ from pyspark.sql.types import (
     StructField, StructType,
 )
 
-from ..grid.tiles import tile_to_bbox_3857, tile_to_bbox_4326
+from ..grid.tiles import point_to_tile, tile_to_bbox_3857, tile_to_bbox_4326
 from ..kernels.affine import Geotransform
 from ..kernels.bbox import reproject_bbox
-from ..kernels.proj import transformer
-from ..kernels.warp import _cast_band, warp
-from .groups import stream_groups
+from ..kernels.proj import WEB_MERCATOR_EXTENT, transformer
+from ..kernels.warp import _cast_band, _sample_map, _scale_integer, warp
+from .groups import frames, stream_groups
 
 CHUNK_SCHEMA = StructType([
     StructField("raster_id", StringType()),
@@ -182,7 +182,6 @@ PIECE_SCHEMA = StructType([
     StructField("pc0", IntegerType()),
     StructField("ph", IntegerType()),
     StructField("pw", IntegerType()),
-    StructField("dtype", StringType()),
     StructField("no_data", DoubleType()),
     StructField("data", BinaryType()),
 ])
@@ -369,7 +368,6 @@ def mosaic_chunks(chunks: DataFrame, *, chunk=256, halo=8,
                             "raster_id": rec["raster_id"],
                             "pr0": ir0, "pc0": ic0,
                             "ph": ir1 - ir0, "pw": ic1 - ic0,
-                            "dtype": rec["dtype"],
                             "no_data": rec["no_data"],
                             "data": piece.tobytes(),
                         })
@@ -378,43 +376,42 @@ def mosaic_chunks(chunks: DataFrame, *, chunk=256, halo=8,
 
     g, to4326 = Geotransform(vgt), transformer(srs, 4326)
 
-    def composite(pdf: pd.DataFrame) -> pd.DataFrame:
-        wr0, wr1 = lat.window(int(pdf["vkr"].iloc[0]), vh)
-        wc0, wc1 = lat.window(int(pdf["vkc"].iloc[0]), vw)
-        canvas = np.full((bands, wr1 - wr0, wc1 - wc0), np.nan)
-        # pieces arrive in ascending raster_id: later pieces (higher id)
-        # overwrite where valid; within one raster overlapping halo pieces
-        # are identical pixels, so tie order is value-neutral
-        for p in pdf.itertuples(index=False):
-            block = np.frombuffer(p.data, dtype=np.dtype(p.dtype)).reshape(
-                bands, int(p.ph), int(p.pw)).astype(np.float64)
-            valid = np.isfinite(block)
-            if p.no_data is not None and not pd.isna(p.no_data):
-                valid &= block != float(p.no_data)
-            view = canvas[:, int(p.pr0) - wr0:int(p.pr0) - wr0 + int(p.ph),
-                          int(p.pc0) - wc0:int(p.pc0) - wc0 + int(p.pw)]
-            view[...] = np.where(valid, block, view)
-        data = np.where(np.isnan(canvas), hole_fill, canvas).astype(dt)
-        return pd.DataFrame([{
-            "raster_id": raster_id,
-            "srs": srs,
-            "geotransform": vgt,
-            "row_off": wr0, "col_off": wc0,
-            "height": wr1 - wr0, "width": wc1 - wc0,
-            "bands": bands,
-            "dtype": str(dt),
-            "no_data": out_nd,
-            "bbox_4326": lat.bbox_4326(g, to4326, wr0, wr1, wc0, wc1),
-            "raster_height": vh, "raster_width": vw,
-            "data": data.tobytes(),
-        }])
+    def composite(pdf, bounds):
+        vkr, vkc, pr0, pc0, ph, pw, pnd, pdata = (pdf[c].to_numpy() for c in (
+            "vkr", "vkc", "pr0", "pc0", "ph", "pw", "no_data", "data"))
+        wins = [(lat.window(int(kr), vh), lat.window(int(kc), vw))
+                for kr, kc in zip(vkr[bounds[:-1]], vkc[bounds[:-1]])]
+        nbytes = [bands * dt.itemsize * (r1 - r0) * (c1 - c0)
+                  for (r0, r1), (c0, c1) in wins]
+        for a, b in frames(bounds, nbytes):
+            rows = []
+            for i in range(a, b):
+                (wr0, wr1), (wc0, wc1) = wins[i]
+                canvas = np.full((bands, wr1 - wr0, wc1 - wc0), np.nan)
+                # pieces arrive in ascending raster_id: later ones overwrite
+                # where valid; overlapping halo pieces of one raster hold
+                # identical pixels, so tie order is value-neutral
+                for j in range(bounds[i], bounds[i + 1]):
+                    h, w = int(ph[j]), int(pw[j])
+                    block = np.frombuffer(pdata[j], dtype=dt).reshape(
+                        bands, h, w).astype(np.float64)
+                    # != NaN holds everywhere: a piece without no_data
+                    valid = np.isfinite(block) & (block != pnd[j])
+                    r0, c0 = int(pr0[j]) - wr0, int(pc0[j]) - wc0
+                    view = canvas[:, r0:r0 + h, c0:c0 + w]
+                    view[...] = np.where(valid, block, view)
+                data = np.where(np.isnan(canvas), hole_fill, canvas).astype(dt)
+                rows.append(dict(
+                    raster_id=raster_id, srs=srs, geotransform=vgt,
+                    row_off=wr0, col_off=wc0, height=wr1 - wr0, width=wc1 - wc0,
+                    bands=bands, dtype=str(dt), no_data=out_nd,
+                    bbox_4326=lat.bbox_4326(g, to4326, wr0, wr1, wc0, wc1),
+                    raster_height=vh, raster_width=vw, data=data.tobytes()))
+            yield pd.DataFrame(rows)
 
-    keys = ["vkr", "vkc"]
     return stream_groups(
-        chunks.mapInPandas(gen_pieces, schema=PIECE_SCHEMA), keys,
-        ["raster_id", "pr0", "pc0"],
-        lambda pdf: (composite(g) for _, g in pdf.groupby(keys, sort=False)),
-        CHUNK_SCHEMA)
+        chunks.mapInPandas(gen_pieces, schema=PIECE_SCHEMA), ["vkr", "vkc"],
+        ["raster_id", "pr0", "pc0"], composite, CHUNK_SCHEMA)
 
 
 def tiles_df(spark: SparkSession, zooms, bbox_4326=None,
@@ -425,8 +422,6 @@ def tiles_df(spark: SparkSession, zooms, bbox_4326=None,
     inverse-gudermannian for 4326 lat edges).  No driver-side loop — at
     z=15 the table is a billion rows and must never materialize on the
     driver."""
-    from ..kernels.proj import WEB_MERCATOR_EXTENT
-
     E = WEB_MERCATOR_EXTENT
     per_zoom = []
     for z in zooms:
@@ -434,8 +429,6 @@ def tiles_df(spark: SparkSession, zooms, bbox_4326=None,
         if bbox_4326 is None:
             x0, x1, y0, y1 = 0, n - 1, 0, n - 1
         else:
-            from ..grid.tiles import point_to_tile
-
             w, s, e, nn = bbox_4326
             xa, ya = point_to_tile(np.array([w]), np.array([nn]), z)
             xb, yb = point_to_tile(np.array([e]), np.array([s]), z)
@@ -644,7 +637,7 @@ def warp_tiles(tiles: DataFrame, chunks: DataFrame, *, method="near",
     changes the grid ownership runs on: samples are computed on the
     scaled (hs, ws) grid and replicated to out_size (geowarp.js:506-521),
     so a replicated block must have ONE owner — ownership is derived at
-    the SAMPLE centers and expanded with the same rounded edge maps
+    the SAMPLE centers and expanded with the same sample map
     _materialize uses (see _chunk_partials).
 
     Each raster_id warps to its own tiles.  Several rasters merge into
@@ -739,34 +732,32 @@ def warp_tiles(tiles: DataFrame, chunks: DataFrame, *, method="near",
 
     fill_out = np.nan if out_no_data is None else float(out_no_data)
 
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        first = pdf.iloc[0]
-        bands = int(first["bands"])
-        dt = np.dtype(first["dtype"])
-        canvas = np.full((bands, out_size, out_size), fill_out)
-        for p in pdf.itertuples(index=False):
-            rh, rw = int(p.rh), int(p.rw)
-            mask = np.unpackbits(
-                np.frombuffer(p.mask, dtype=np.uint8), count=rh * rw
-            ).astype(bool).reshape(rh, rw)
-            block = np.frombuffer(p.data, dtype=dt).reshape(bands, rh, rw)
-            view = canvas[:, int(p.r0):int(p.r0) + rh, int(p.c0):int(p.c0) + rw]
-            view[:, mask] = block[:, mask].astype(np.float64)
-        # the dtype materialization kernels.warp._materialize uses
-        return pd.DataFrame([_tile_row(
-            first["raster_id"], first["z"], first["x"], first["y"],
-            method_name, _cast_band(canvas, dt), len(pdf))])
+    def merge(pdf, bounds):
+        rid, z, x, y, nb, pdt, r0, c0, rh, rw, pdata, pmask = (
+            pdf[c].to_numpy() for c in PARTIAL_SCHEMA.fieldNames())
+        nb, dts = nb[bounds[:-1]], [np.dtype(d) for d in pdt[bounds[:-1]]]
+        nbytes = [out_size * out_size * int(n) * dt.itemsize for n, dt in zip(nb, dts)]
+        for a, b in frames(bounds, nbytes):
+            rows = []
+            for i in range(a, b):
+                lo, hi, dt, bands = bounds[i], bounds[i + 1], dts[i], int(nb[i])
+                canvas = np.full((bands, out_size, out_size), fill_out)
+                for j in range(lo, hi):
+                    h, w, rj, cj = int(rh[j]), int(rw[j]), int(r0[j]), int(c0[j])
+                    mask = np.unpackbits(np.frombuffer(pmask[j], np.uint8),
+                                         count=h * w).astype(bool).reshape(h, w)
+                    block = np.frombuffer(pdata[j], dtype=dt).reshape(bands, h, w)
+                    view = canvas[:, rj:rj + h, cj:cj + w]
+                    view[:, mask] = block[:, mask].astype(np.float64)
+                # the dtype materialization kernels.warp._materialize uses
+                rows.append(_tile_row(rid[lo], z[lo], x[lo], y[lo], method_name,
+                                      _cast_band(canvas, dt), hi - lo))
+            yield pd.DataFrame(rows)
 
-    # one payload exchange: stream_groups' explicit width keeps the
-    # ~64 KB partial rects from being coalesced to a few merge tasks
-    # (measured: the merge ran 3-way at local[8] under AQE's advisory
-    # size).  Owned rects are disjoint per tile, so the sort's rect
-    # order only fixes the merge's input order.
-    merge_keys = ["raster_id", "z", "x", "y"]
-    return stream_groups(
-        partials, merge_keys, ["raster_id", "r0", "c0"],
-        lambda pdf: (merge(g) for _, g in pdf.groupby(merge_keys, sort=False)),
-        TILE_OUT_SCHEMA)
+    # one payload exchange; owned rects are disjoint per tile, so the
+    # sort's rect order only fixes the merge's input order
+    return stream_groups(partials, ["raster_id", "z", "x", "y"],
+                         ["raster_id", "r0", "c0"], merge, TILE_OUT_SCHEMA)
 
 
 def _chunk_partials(rec, method, out_size, out_srs, out_dtype, turbo,
@@ -784,14 +775,11 @@ def _chunk_partials(rec, method, out_size, out_srs, out_dtype, turbo,
     matched to the record (``meta_bboxes``) that differs from its own
     raises too: that metadata was cut on another lattice.  The
     sample-grid owned mask is expanded to the full out_size grid with
-    the SAME js_round edge maps _materialize uses, so every pixel of a
+    the SAME kernels.warp._sample_map _materialize uses, so every pixel of a
     replicated sample block has exactly one owner.  cutline / row-range
     masking needs no ownership handling: masked pixels hold the fill
     value in every partial, owner included, which equals the
     full-raster path's fill."""
-    from ..kernels.stats import js_round
-    from ..kernels.warp import _scale_integer
-
     bbox = list(rec["bbox_4326"])
     for meta in rec["meta_bboxes"]:
         if list(meta) != bbox:
@@ -814,6 +802,9 @@ def _chunk_partials(rec, method, out_size, out_srs, out_dtype, turbo,
     xr, yr = warp_kwargs.get("out_resolution", (1.0, 1.0))
     ws_s, _, x_scale = _scale_integer(out_size, xr)
     hs_s, _, y_scale = _scale_integer(out_size, yr)
+    # the sample each out pixel replicates, as _materialize maps it
+    col_map = _sample_map(out_size, ws_s, x_scale)
+    row_map = _sample_map(out_size, hs_s, y_scale)
 
     out = []
     for tk in rec["tile_keys"]:
@@ -834,17 +825,7 @@ def _chunk_partials(rec, method, out_size, out_srs, out_dtype, turbo,
             owned_s = (np.isfinite(cx) & np.isfinite(cy)
                        & (cx >= own_c0) & (cx < own_c1)
                        & (cy >= own_r0) & (cy < own_r1)).reshape(hs_s, ws_s)
-        owned = owned_s
-        if (hs_s, ws_s) != (out_size, out_size):
-            # replicate sample ownership to the full pixel grid with the
-            # exact edge maps _materialize uses (geowarp.js:506-521)
-            col_edges = js_round(np.arange(ws_s + 1, dtype=np.float64) * x_scale).astype(np.int64)
-            row_edges = js_round(np.arange(hs_s + 1, dtype=np.float64) * y_scale).astype(np.int64)
-            col_map = np.clip(np.searchsorted(col_edges, np.arange(out_size), side="right") - 1,
-                              0, ws_s - 1)
-            row_map = np.clip(np.searchsorted(row_edges, np.arange(out_size), side="right") - 1,
-                              0, hs_s - 1)
-            owned = owned_s[row_map][:, col_map]
+        owned = owned_s[row_map][:, col_map]
         if not owned.any():
             continue
         # restrict the kernel to the owned SAMPLE-row range: rows outside

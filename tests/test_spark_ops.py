@@ -2542,3 +2542,103 @@ def test_grouped_warp_stages_identical_across_batches(spark):
             assert runs() == want, batch
     finally:
         spark.conf.set(key, old)
+
+
+def test_stream_groups_hands_fn_whole_runs_across_batches(spark):
+    """stream_groups hands ``fn`` whole key runs with their run_bounds:
+    a NULL-key run, a 40-row run that spans at least 3 Arrow batches at
+    maxRecordsPerBatch 1 and 7, and runs of 1-3 rows each reach ``fn``
+    exactly once, whole and in sort order, at batch sizes 1, 7 and the
+    default.  ``frames`` packs runs into frames of at most the frame
+    bound and sends a run larger than the bound out whole, alone.
+    Empty input yields no rows."""
+    import uuid
+
+    from geowarp_spark.operators.groups import (
+        _FRAME_BYTES, frames, run_bounds, stream_groups)
+
+    keyed = pd.DataFrame({"g": [None, None, "a", "b", "b"], "h": [1, 1, 2, 2, 3]})
+    assert run_bounds(keyed, ["g"]).tolist() == [0, 2, 3, 5]
+    assert run_bounds(keyed, ["g", "h"]).tolist() == [0, 2, 3, 4, 5]
+    assert run_bounds(keyed.iloc[:0], ["g"]).tolist() == [0]
+
+    rng = np.random.default_rng(3)
+    sizes = {None: 5, "big": 40, **{f"k{i:02d}": 1 + i % 3 for i in range(30)}}
+    g = [key for key, m in sizes.items() for _ in range(m)]
+    pdf = pd.DataFrame({"g": g, "o": rng.permutation(len(g)).astype(np.int64)})
+    want = {key: sorted(pdf.loc[pdf["g"].isna() if key is None else pdf["g"] == key,
+                                "o"]) for key in sizes}
+    df = spark.createDataFrame(pdf.sample(frac=1, random_state=4),
+                               "g string, o long")
+    unit = _FRAME_BYTES // 16   # output bytes charged per input row
+
+    def fn(part, bounds):
+        keys, o = part["g"].to_numpy(), part["o"].to_numpy()
+        for a, b in frames(bounds, unit * np.diff(bounds)):
+            yield pd.DataFrame({
+                "g": keys[bounds[a:b]], "frame": uuid.uuid4().hex,
+                "o": [o[bounds[i]:bounds[i + 1]].tolist() for i in range(a, b)]})
+
+    schema = "g string, frame string, o array<long>"
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    try:
+        for batch in ("1", "7", old):
+            spark.conf.set(key, batch)
+            rows = stream_groups(df, ["g"], ["o"], fn, schema).collect()
+            assert sorted((r["g"] or "", r["o"]) for r in rows) == sorted(
+                (k or "", v) for k, v in want.items()), batch
+            per_frame = {}
+            for r in rows:
+                per_frame.setdefault(r["frame"], []).append(len(r["o"]))
+            for n_rows in per_frame.values():
+                assert len(n_rows) == 1 or sum(n_rows) * unit <= _FRAME_BYTES, batch
+            assert [40] in per_frame.values(), batch
+            if batch != "1":   # batches of several runs pack frames
+                assert max(map(len, per_frame.values())) > 1, batch
+        assert stream_groups(df.limit(0), ["g"], ["o"], fn, schema).collect() == []
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_knn_topk_carries_query_count_across_batches(spark):
+    """The phase-1 top-k (spatial._first_k) carries the row count of the
+    query a batch ends on into the next batch.  At maxRecordsPerBatch 1
+    and 7 every query's candidates span batch boundaries: phase 1 alone
+    keeps exactly the first k rows of each query run of a sorted
+    partition, and knn_join and knn_join_cells equal a numpy
+    brute-force top-k."""
+    from geowarp_spark.operators.spatial import _first_k, knn_join, knn_join_cells
+
+    rng = np.random.default_rng(8)
+    n, nq, k = 60, 4, 5
+    plon, plat = rng.uniform(-20, 20, n), rng.uniform(-10, 10, n)
+    qlon, qlat = rng.uniform(-15, 15, nq), rng.uniform(-8, 8, nq)
+    dx, dy = plon[None] - qlon[:, None], plat[None] - qlat[:, None]
+    d2 = dx * dx + dy * dy
+    want = {(q, i, r + 1) for q in range(nq)
+            for r, i in enumerate(np.lexsort((np.arange(n), d2[q]))[:k])}
+    pts = spark.createDataFrame(pd.DataFrame(
+        {"doc_id": np.arange(n), "lon": plon, "lat": plat})).repartition(2)
+    qs = spark.createDataFrame(pd.DataFrame(
+        {"query_id": np.arange(nq), "qlon": qlon, "qlat": qlat}))
+    cand = pd.DataFrame({"query_id": np.repeat(np.arange(nq), n),
+                         "doc_id": np.tile(np.arange(n), nq), "dist2": d2.ravel()})
+    first = cand.sort_values(["query_id", "dist2", "doc_id"]).groupby("query_id").head(k)
+    phase1 = spark.createDataFrame(cand.sample(frac=1, random_state=2)).coalesce(1) \
+        .sortWithinPartitions("query_id", "dist2", "doc_id").mapInPandas(
+            lambda it: _first_k(it, k, "query_id"),
+            schema="query_id long, doc_id long, dist2 double")
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    try:
+        for batch in ("1", "7"):
+            spark.conf.set(key, batch)
+            assert sorted(tuple(r) for r in phase1.collect()) == sorted(
+                first.itertuples(index=False, name=None)), batch
+            for got in (knn_join(pts, qs, k=k),
+                        knn_join_cells(pts, qs, k=k, z=3, ring=1)):
+                assert {(r["query_id"], r["doc_id"], r["rank"])
+                        for r in got.collect()} == want, batch
+    finally:
+        spark.conf.set(key, old)
