@@ -38,7 +38,9 @@ def get_spark(app_name: str = "geowarp-spark", master: str | None = None,
     exactly this).  Pre-touching moves that cost to JVM startup and
     also stabilizes steady-state (no G1 region growth mid-job).  Costs
     ~10 s startup + pins the heap, so it defaults ON for bench/scaling
-    entry points (SPARK_GRAFT_PRETOUCH=1) and OFF for tests."""
+    entry points (SPARK_GRAFT_PRETOUCH=1) and OFF for tests.  The heap
+    is -Xmx16g -Xms14g, each capped at a quarter of physical memory;
+    SPARK_GRAFT_DRIVER_MEM / SPARK_GRAFT_XMS override both."""
     # set in the driver env too: in local mode python workers fork from
     # the driver-launched JVM and inherit this environment
     for var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
@@ -86,8 +88,13 @@ def get_spark(app_name: str = "geowarp-spark", master: str | None = None,
         # or better steady state).  The throughput collector is the
         # right default for batch analytics; a latency-sensitive
         # deployment can override via extra_conf.
-        mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
-        xms = os.environ.get("SPARK_GRAFT_XMS", "14g")
+        # default heap: 16g max / 14g pre-touched, capped at a quarter
+        # of physical memory so a small host is not driven out of memory
+        quarter_mb = (os.sysconf("SC_PHYS_PAGES")
+                      * os.sysconf("SC_PAGE_SIZE")) >> 22
+        mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM",
+                             f"{min(16 << 10, quarter_mb)}m")
+        xms = os.environ.get("SPARK_GRAFT_XMS", f"{min(14 << 10, quarter_mb)}m")
         b = (b.config("spark.driver.memory", mem)
              .config("spark.driver.extraJavaOptions",
                      f"-Xms{xms} -XX:+AlwaysPreTouch -XX:+UseParallelGC"))

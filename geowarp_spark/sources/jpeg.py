@@ -38,7 +38,6 @@ ZIGZAG = np.array([
     35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
     58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
 ], dtype=np.int64)
-UNZIGZAG = np.argsort(ZIGZAG)
 
 # T.81 Annex K.1 example quantization tables (luminance / chrominance)
 K1_LUMA = np.array([
@@ -117,6 +116,11 @@ AC_CHROMA_VALS = [
 ]
 assert sum(AC_LUMA_BITS) == len(AC_LUMA_VALS) == 162
 assert sum(AC_CHROMA_BITS) == len(AC_CHROMA_VALS) == 162
+# (class, id) -> (BITS, HUFFVAL); class 0 = DC, 1 = AC; id 0 = luma
+ANNEX_K3 = {(0, 0): (DC_LUMA_BITS, DC_LUMA_VALS),
+            (1, 0): (AC_LUMA_BITS, AC_LUMA_VALS),
+            (0, 1): (DC_CHROMA_BITS, DC_CHROMA_VALS),
+            (1, 1): (AC_CHROMA_BITS, AC_CHROMA_VALS)}
 
 
 def _dct_matrix() -> np.ndarray:
@@ -170,49 +174,67 @@ class _BitWriter:
 
 
 class _BitReader:
-    """Entropy-segment reader: unstuffs 0xFF00, stops at markers (which
-    the scan loop consumes explicitly for RSTn)."""
+    """Entropy-segment reader with a 16-bit lookahead: unstuffs 0xFF00 and
+    stops at markers (which the scan loop consumes explicitly for RSTn).
+
+    At a marker, or past the end of ``buf``, it buffers 1-bits without
+    advancing, so a Huffman peek may look beyond the segment's last byte;
+    a block that consumes one of those bits raises.  ``acc`` keeps only
+    the live bits: at most 16 lookahead bits plus one byte."""
 
     def __init__(self, buf: bytes, pos: int):
         self.buf = buf
         self.pos = pos
         self.acc = 0
         self.nbits = 0
+        self.pad = 0            # buffered 1-bits that stand for a marker
 
-    def _fill(self):
-        b = self.buf[self.pos]
-        if b == 0xFF:
-            nxt = self.buf[self.pos + 1]
-            if nxt == 0x00:
-                self.pos += 2
+    def _fill(self, need: int):
+        buf, pos, nbits = self.buf, self.pos, self.nbits
+        # drop the consumed high bits first: an unbounded acc makes every
+        # shift O(bytes consumed), i.e. O(n^2) per restart-free segment
+        acc = self.acc & ((1 << nbits) - 1)
+        while nbits < need:
+            b = buf[pos] if pos < len(buf) else 0xFF
+            if b != 0xFF:
+                pos += 1
+            elif pos + 1 < len(buf) and buf[pos + 1] == 0x00:
+                pos += 2
             else:
-                # marker: feed 1-bits so a block mid-decode errors out
-                # loudly rather than reading past the segment
-                raise ValueError(
-                    f"JPEG entropy segment hit marker FF{nxt:02X} mid-block")
-        else:
-            self.pos += 1
-        # keep only the unconsumed low ``nbits`` bits before appending —
-        # an unbounded acc makes every shift O(bytes consumed), turning
-        # a restart-free multi-MB strip into O(n^2) (r6 ADVICE)
-        self.acc = ((self.acc & ((1 << self.nbits) - 1)) << 8) | b
-        self.nbits += 8
+                self.pad += 8
+            acc = (acc << 8) | b
+            nbits += 8
+        self.pos, self.acc, self.nbits = pos, acc, nbits
 
-    def bit(self) -> int:
-        if self.nbits == 0:
-            self._fill()
-        self.nbits -= 1
-        return (self.acc >> self.nbits) & 1
+    def _overrun(self):
+        raise ValueError(f"JPEG entropy segment hit a marker (or the end of "
+                         f"data) at byte {self.pos} mid-block")
 
-    def receive(self, length: int) -> int:
-        v = 0
-        for _ in range(length):
-            v = (v << 1) | self.bit()
-        return v
+    def decode(self, table) -> int:
+        """Next Huffman symbol: one ``_lookahead`` lookup on 16 bits."""
+        if self.nbits < 16:
+            self._fill(16)
+        e = table[(self.acc >> (self.nbits - 16)) & 0xFFFF]
+        if not e:
+            raise ValueError("corrupt JPEG: Huffman code longer than 16 bits")
+        self.nbits -= e >> 8
+        if self.nbits < self.pad:
+            self._overrun()
+        return e & 0xFF
+
+    def receive(self, n: int) -> int:
+        """The next ``n`` bits as an unsigned integer."""
+        if self.nbits < n:
+            self._fill(n)
+        self.nbits -= n
+        if self.nbits < self.pad:
+            self._overrun()
+        return (self.acc >> self.nbits) & ((1 << n) - 1)
 
     def align_to_marker(self):
         self.acc = 0
         self.nbits = 0
+        self.pad = 0
 
 
 def _extend(v: int, size: int) -> int:
@@ -231,41 +253,30 @@ def _category(v: int) -> int:
 
 
 def _canonical_codes(bits, vals):
-    """T.81 Annex C: (BITS, HUFFVAL) -> {symbol: (code, length)}."""
-    codes = {}
+    """T.81 Annex C: (BITS, HUFFVAL) -> [(symbol, code, length)] in
+    HUFFVAL order; the encoder and the decoder tables both come from
+    here."""
+    codes = []
     code = 0
     k = 0
     for length in range(1, 17):
         for _ in range(bits[length - 1]):
-            codes[vals[k]] = (code, length)
+            codes.append((vals[k], code, length))
             code += 1
             k += 1
         code <<= 1
     return codes
 
 
-def _decode_table(bits, vals):
-    """{(length, code): symbol} for bit-serial decode."""
-    table = {}
-    code = 0
-    k = 0
-    for length in range(1, 17):
-        for _ in range(bits[length - 1]):
-            table[(length, code)] = vals[k]
-            code += 1
-            k += 1
-        code <<= 1
-    return table
-
-
-def _read_symbol(r: _BitReader, table) -> int:
-    code = 0
-    for length in range(1, 17):
-        code = (code << 1) | r.bit()
-        sym = table.get((length, code))
-        if sym is not None:
-            return sym
-    raise ValueError("corrupt JPEG: Huffman code longer than 16 bits")
+def _lookahead(bits, vals) -> list:
+    """Decode table indexed by the next 16 stream bits: every index that
+    starts with a symbol's code holds (length << 8) | symbol; 0 marks a
+    bit pattern that no code of 16 bits or fewer prefixes."""
+    table = np.zeros(1 << 16, dtype=np.int32)
+    for sym, code, length in _canonical_codes(bits, vals):
+        table[code << (16 - length):(code + 1) << (16 - length)] = \
+            (length << 8) | sym
+    return table.tolist()
 
 
 # ------------------------------------------------------------ encoder
@@ -327,11 +338,13 @@ def _dqt_segment(luma_q, chroma_q=None) -> bytes:
     return _marker(0xFFDB, payload)
 
 
-def _dht_segment(tables) -> bytes:
-    """tables: list of (class, id, bits, vals); class 0=DC 1=AC."""
+def _dht_segment(color: bool) -> bytes:
+    """DHT segment of the Annex K.3 tables: luma, then chroma for color."""
     payload = b""
-    for cls, tid, bits, vals in tables:
-        payload += bytes([(cls << 4) | tid]) + bytes(bits) + bytes(vals)
+    for tid in range(2 if color else 1):
+        for cls in (0, 1):
+            bits, vals = ANNEX_K3[cls, tid]
+            payload += bytes([(cls << 4) | tid]) + bytes(bits) + bytes(vals)
     return _marker(0xFFC4, payload)
 
 
@@ -340,12 +353,7 @@ def jpeg_tables_stream(quality: int = 90, color: bool = True) -> bytes:
     (TechNote 2): SOI + DQT + DHT + EOI, no frame."""
     luma_q, chroma_q = quant_tables(quality)
     out = b"\xff\xd8" + _dqt_segment(luma_q, chroma_q if color else None)
-    tabs = [(0, 0, DC_LUMA_BITS, DC_LUMA_VALS),
-            (1, 0, AC_LUMA_BITS, AC_LUMA_VALS)]
-    if color:
-        tabs += [(0, 1, DC_CHROMA_BITS, DC_CHROMA_VALS),
-                 (1, 1, AC_CHROMA_BITS, AC_CHROMA_VALS)]
-    return out + _dht_segment(tabs) + b"\xff\xd9"
+    return out + _dht_segment(color) + b"\xff\xd9"
 
 
 def encode_jpeg(arr: np.ndarray, quality: int = 90, subsampling=(1, 1),
@@ -406,10 +414,9 @@ def encode_jpeg(arr: np.ndarray, quality: int = 90, subsampling=(1, 1),
     preds = [0] * len(planes)
     n_since_rst = 0
     rst_idx = 0
-    dc_codes = [_canonical_codes(DC_LUMA_BITS, DC_LUMA_VALS),
-                _canonical_codes(DC_CHROMA_BITS, DC_CHROMA_VALS)]
-    ac_codes = [_canonical_codes(AC_LUMA_BITS, AC_LUMA_VALS),
-                _canonical_codes(AC_CHROMA_BITS, AC_CHROMA_VALS)]
+    codes = {key: {sym: (code, length)
+                   for sym, code, length in _canonical_codes(*tab)}
+             for key, tab in ANNEX_K3.items()}
     body_chunks = []
     for my in range(mcy):
         for mx in range(mcx):
@@ -428,8 +435,7 @@ def encode_jpeg(arr: np.ndarray, quality: int = 90, subsampling=(1, 1),
                         blk = zzgrid[my * cvs + byi, mx * chs + bxi]
                         preds[ci] = _encode_block(
                             bw, blk, preds[ci],
-                            dc_codes[0 if qsel[ci] == 0 else 1],
-                            ac_codes[0 if qsel[ci] == 0 else 1])
+                            codes[0, qsel[ci]], codes[1, qsel[ci]])
             n_since_rst += 1
     bw.align()
     body_chunks.append(bytes(bw.out))
@@ -444,18 +450,12 @@ def encode_jpeg(arr: np.ndarray, quality: int = 90, subsampling=(1, 1),
         comps += bytes([ci + 1, (chs << 4) | cvs, qsel[ci]])
     out += _marker(0xFFC0, struct.pack(">BHHB", 8, h, w, len(planes)) + comps)
     if not omit_tables:
-        tabs = [(0, 0, DC_LUMA_BITS, DC_LUMA_VALS),
-                (1, 0, AC_LUMA_BITS, AC_LUMA_VALS)]
-        if color:
-            tabs += [(0, 1, DC_CHROMA_BITS, DC_CHROMA_VALS),
-                     (1, 1, AC_CHROMA_BITS, AC_CHROMA_VALS)]
-        out += _dht_segment(tabs)
+        out += _dht_segment(color)
     if restart_interval:
         out += _marker(0xFFDD, struct.pack(">H", restart_interval))
     scomp = b""
     for ci in range(len(planes)):
-        t = 0 if qsel[ci] == 0 else 1
-        scomp += bytes([ci + 1, (t << 4) | t])
+        scomp += bytes([ci + 1, (qsel[ci] << 4) | qsel[ci]])
     out += _marker(0xFFDA, bytes([len(planes)]) + scomp + b"\x00\x3f\x00")
     out += b"".join(body_chunks)
     out += b"\xff\xd9"  # EOI
@@ -470,32 +470,33 @@ def parse_tables(buf: bytes):
     ({qid: qtable-natural-order}, {(cls, tid): decode-table}) for
     TIFF's JPEGTables tag."""
     qt, ht = {}, {}
-    _scan_segments(buf, qt, ht, stop_at_frame=True)
+    _scan_segments(buf, 0, qt, ht, 0)
     return qt, ht
 
 
-def _scan_segments(buf: bytes, qt, ht, stop_at_frame=False, state=None):
-    """Walk marker segments, filling table dicts; returns (pos, marker)
-    at the first frame/scan marker (or (None, None) at EOI).
-
-    ``state``: optional dict; a DRI segment seen BEFORE SOF (legal in
-    T.81) records its interval as ``state['restart']`` so the decoder
-    picks it up (r6 ADVICE — previously fell through the generic skip
-    and restart markers then crashed the entropy reader)."""
-    if buf[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG stream (missing SOI)")
-    pos = 2
+def _scan_segments(buf: bytes, pos: int, qt, ht, restart: int):
+    """The one marker walk: from ``pos`` (0 checks SOI first), fill ``qt``
+    from DQT and ``ht`` from DHT (as ``_lookahead`` tables) and take the
+    interval of a DRI, wherever they appear (T.81 allows all three before
+    SOF and between SOF and SOS).  Stops at the first SOF0/1 or SOS ->
+    (marker, segment body, position after the segment, restart), or at
+    EOI -> (None, None, None, restart)."""
+    if pos == 0:
+        if buf[:2] != b"\xff\xd8":
+            raise ValueError("not a JPEG stream (missing SOI)")
+        pos = 2
     while pos < len(buf):
         if buf[pos] != 0xFF:
             raise ValueError(f"JPEG marker expected at {pos}")
         marker = buf[pos + 1]
         if marker == 0xD9:       # EOI
-            return None, None
+            return None, None, None, restart
         if marker in (0x01,) or 0xD0 <= marker <= 0xD7:
             pos += 2
             continue
         seglen = struct.unpack(">H", buf[pos + 2:pos + 4])[0]
         body = buf[pos + 4:pos + 2 + seglen]
+        pos += 2 + seglen
         if marker == 0xDB:       # DQT
             i = 0
             while i < len(body):
@@ -514,22 +515,18 @@ def _scan_segments(buf: bytes, qt, ht, stop_at_frame=False, state=None):
                 bits = list(body[i + 1:i + 17])
                 nval = sum(bits)
                 vals = list(body[i + 17:i + 17 + nval])
-                ht[(cls, tid)] = _decode_table(bits, vals)
+                ht[(cls, tid)] = _lookahead(bits, vals)
                 i += 17 + nval
-        elif marker in (0xC0, 0xC1):   # SOF0/1 baseline sequential
-            return pos, marker
+        elif marker in (0xC0, 0xC1, 0xDA):   # SOF0/1 baseline, SOS
+            return marker, body, pos, restart
         elif marker in (0xC2, 0xC3, 0xC5, 0xC6, 0xC7,
                         0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
             raise NotImplementedError(
                 f"JPEG SOF{marker - 0xC0}: only baseline sequential "
                 "(SOF0/SOF1) is supported — progressive/hierarchical/"
                 "arithmetic streams are out of scope")
-        elif marker == 0xDD:     # DRI may legally precede SOF
-            if state is not None:
-                state["restart"] = struct.unpack(">H", body[:2])[0]
-        elif marker == 0xDA:     # SOS before SOF -> corrupt
-            return pos, marker
-        pos += 2 + seglen
+        elif marker == 0xDD:     # DRI
+            restart = struct.unpack(">H", body[:2])[0]
     raise ValueError("JPEG stream ended without EOI")
 
 
@@ -543,14 +540,11 @@ def decode_jpeg(buf: bytes, tables=None, to_rgb: bool = True) -> np.ndarray:
     or raw component access."""
     qt = dict(tables[0]) if tables else {}
     ht = dict(tables[1]) if tables else {}
-    pre = {}
-    pos, marker = _scan_segments(buf, qt, ht, state=pre)
-    if pos is None:
+    marker, body, pos, restart = _scan_segments(buf, 0, qt, ht, 0)
+    if marker is None:
         raise ValueError("JPEG stream has no frame (tables-only?)")
     if marker == 0xDA:
         raise ValueError("corrupt JPEG: SOS before SOF")
-    seglen = struct.unpack(">H", buf[pos + 2:pos + 4])[0]
-    body = buf[pos + 4:pos + 2 + seglen]
     precision, h, w, ncomp = struct.unpack(">BHHB", body[:6])
     if precision != 8:
         raise NotImplementedError(f"{precision}-bit JPEG (baseline is 8)")
@@ -558,46 +552,15 @@ def decode_jpeg(buf: bytes, tables=None, to_rgb: bool = True) -> np.ndarray:
     for ci in range(ncomp):
         cid, hv, tq = body[6 + 3 * ci:9 + 3 * ci]
         comps.append({"id": cid, "h": hv >> 4, "v": hv & 0xF, "tq": tq})
-    pos += 2 + seglen
 
-    # walk remaining segments up to SOS (more DQT/DHT/DRI may appear)
-    restart = pre.get("restart", 0)
-    while True:
-        if buf[pos] != 0xFF:
-            raise ValueError(f"JPEG marker expected at {pos}")
-        marker = buf[pos + 1]
-        seglen = struct.unpack(">H", buf[pos + 2:pos + 4])[0]
-        body = buf[pos + 4:pos + 2 + seglen]
-        if marker == 0xDA:
-            break
-        if marker == 0xDB:
-            i = 0
-            while i < len(body):
-                tq = body[i] & 0xF
-                tbl = np.frombuffer(body[i + 1:i + 65], dtype=np.uint8)
-                q = np.zeros(64, dtype=np.int64)
-                q[ZIGZAG] = tbl
-                qt[tq] = q.reshape(8, 8)
-                i += 65
-        elif marker == 0xC4:
-            i = 0
-            while i < len(body):
-                cls, tid = body[i] >> 4, body[i] & 0xF
-                bits = list(body[i + 1:i + 17])
-                nval = sum(bits)
-                vals = list(body[i + 17:i + 17 + nval])
-                ht[(cls, tid)] = _decode_table(bits, vals)
-                i += 17 + nval
-        elif marker == 0xDD:
-            restart = struct.unpack(">H", body[:2])[0]
-        pos += 2 + seglen
-
+    marker, body, pos, restart = _scan_segments(buf, pos, qt, ht, restart)
+    if marker != 0xDA:
+        raise ValueError("corrupt JPEG: no SOS after SOF")
     ns = body[0]
     sel = {}
     for si in range(ns):
         cs, tt = body[1 + 2 * si], body[2 + 2 * si]
         sel[cs] = (tt >> 4, tt & 0xF)
-    pos += 2 + seglen
 
     hmax = max(c["h"] for c in comps)
     vmax = max(c["v"] for c in comps)
@@ -632,13 +595,12 @@ def decode_jpeg(buf: bytes, tables=None, to_rgb: bool = True) -> np.ndarray:
                 for byi in range(c["v"]):
                     for bxi in range(c["h"]):
                         zz = np.zeros(64, dtype=np.int64)
-                        size = _read_symbol(r, dct)
-                        diff = _extend(r.receive(size), size)
-                        preds[ci] += diff
+                        size = r.decode(dct)
+                        preds[ci] += _extend(r.receive(size), size)
                         zz[0] = preds[ci]
                         kk = 1
                         while kk < 64:
-                            rs = _read_symbol(r, act)
+                            rs = r.decode(act)
                             run, size = rs >> 4, rs & 0xF
                             if size == 0:
                                 if run == 15:   # ZRL

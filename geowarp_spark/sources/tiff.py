@@ -478,61 +478,39 @@ def read_tiff(buf: bytes, raster_id: str = "tiff", level: int = 0,
         # photometric 1/2: components are gray/RGB already
         jpeg_ctx = {"tables": tables, "to_rgb": photometric == 6}
 
-    def finish_seg(seg, rows, width):
-        ns = spp if planar == 1 else 1
-        if predictor == 3:
-            a = _undo_fp_predictor(seg, rows, width, ns, dt)
-        else:
-            a = np.frombuffer(seg, dtype=dt)
-            a = a[: rows * width * ns].reshape(rows, width, ns)
-            if predictor == 2:
-                a = _undo_predictor(a)
-        return a
-
     if _T_TILE_OFFSETS in t:
-        tw = int(t[_T_TILE_WIDTH][0])
-        th = int(t[_T_TILE_LENGTH][0])
-        offs = t[_T_TILE_OFFSETS]
-        cnts = t[_T_TILE_BYTE_COUNTS]
-        tx = (w + tw - 1) // tw
-        ty = (h + th - 1) // th
-        per_plane = tx * ty
-        planes = spp if planar == 2 else 1
-        ns = spp if planar == 1 else 1
-        n_total = per_plane * planes
-        full = np.zeros((planes, wh, ww, ns), dtype=dt.newbyteorder("="))
-        for p in range(planes):
-            for j in range(wr0 // th, (wr1 - 1) // th + 1):
-                for i in range(wc0 // tw, (wc1 - 1) // tw + 1):
-                    k = p * per_plane + j * tx + i
-                    a = finish_seg(
-                        _segment(buf, offs, cnts, k, comp, jpeg=jpeg_ctx),
-                        th, tw)
-                    n_decoded += 1
-                    r0, c0 = j * th, i * tw
-                    a0, a1 = max(r0, wr0), min(r0 + th, wr1, h)
-                    b0, b1 = max(c0, wc0), min(c0 + tw, wc1, w)
-                    full[p, a0 - wr0:a1 - wr0, b0 - wc0:b1 - wc0] = \
-                        a[a0 - r0:a1 - r0, b0 - c0:b1 - c0]
+        th, tw = int(t[_T_TILE_LENGTH][0]), int(t[_T_TILE_WIDTH][0])
+        offs, cnts = t[_T_TILE_OFFSETS], t[_T_TILE_BYTE_COUNTS]
     else:
-        rps = int(t.get(_T_ROWS_PER_STRIP, [h])[0])
-        offs = t[_T_STRIP_OFFSETS]
-        cnts = t[_T_STRIP_BYTE_COUNTS]
-        per_plane = (h + rps - 1) // rps
-        planes = spp if planar == 2 else 1
-        ns = spp if planar == 1 else 1
-        n_total = per_plane * planes
-        full = np.zeros((planes, wh, ww, ns), dtype=dt.newbyteorder("="))
-        for p in range(planes):
-            for s in range(wr0 // rps, (wr1 - 1) // rps + 1):
-                r0 = s * rps
-                rows = min(rps, h - r0)
-                a = finish_seg(
-                    _segment(buf, offs, cnts, p * per_plane + s, comp,
-                             jpeg=jpeg_ctx), rows, w)
+        # a strip is a full-width tile; the last strip may hold fewer rows
+        th, tw = int(t.get(_T_ROWS_PER_STRIP, [h])[0]), w
+        offs, cnts = t[_T_STRIP_OFFSETS], t[_T_STRIP_BYTE_COUNTS]
+    tx, ty = (w + tw - 1) // tw, (h + th - 1) // th
+    planes = spp if planar == 2 else 1
+    ns = spp if planar == 1 else 1
+    n_total = tx * ty * planes
+    full = np.zeros((planes, wh, ww, ns), dtype=dt.newbyteorder("="))
+    for p in range(planes):
+        for j in range(wr0 // th, (wr1 - 1) // th + 1):
+            # rows past the image edge, in padded tiles, are never read
+            r0 = j * th
+            rows = min(th, h - r0)
+            for i in range(wc0 // tw, (wc1 - 1) // tw + 1):
+                seg = _segment(buf, offs, cnts, (p * ty + j) * tx + i, comp,
+                               jpeg=jpeg_ctx)
                 n_decoded += 1
+                if predictor == 3:
+                    a = _undo_fp_predictor(seg, rows, tw, ns, dt)
+                else:
+                    a = np.frombuffer(seg, dtype=dt)
+                    a = a[: rows * tw * ns].reshape(rows, tw, ns)
+                    if predictor == 2:
+                        a = _undo_predictor(a)
+                c0 = i * tw
                 a0, a1 = max(r0, wr0), min(r0 + rows, wr1)
-                full[p, a0 - wr0:a1 - wr0] = a[a0 - r0:a1 - r0, wc0:wc1]
+                b0, b1 = max(c0, wc0), min(c0 + tw, wc1)
+                full[p, a0 - wr0:a1 - wr0, b0 - wc0:b1 - wc0] = \
+                    a[a0 - r0:a1 - r0, b0 - c0:b1 - c0]
 
     if planar == 1:
         data = np.ascontiguousarray(np.moveaxis(full[0], 2, 0))  # (S,H,W)
@@ -612,8 +590,10 @@ def write_tiff(fx: dict, *, compression="none", layout="strips",
     real GeoTIFFs carry."""
     from ..kernels.affine import Geotransform
 
+    comp_code = {"none": 1, "lzw": 5, "deflate": 8,
+                 "packbits": 32773, "jpeg": 7}[compression]
     jpeg_tables = None
-    if compression == "jpeg":
+    if comp_code == 7:
         nb = int(fx["data"].shape[0])
         if fx["data"].dtype != np.uint8 or nb not in (1, 3):
             raise NotImplementedError(
@@ -645,8 +625,6 @@ def write_tiff(fx: dict, *, compression="none", layout="strips",
         b, h, w = data.shape
         dt = data.dtype
         fmt = {"u": 1, "i": 2, "f": 3}[dt.kind]
-        comp_code = {"none": 1, "lzw": 5, "deflate": 8,
-                     "packbits": 32773, "jpeg": 7}[compression]
         entries = [
             (_T_IMAGE_WIDTH, 4, [w]),
             (_T_IMAGE_LENGTH, 4, [h]),
@@ -716,8 +694,6 @@ def write_tiff(fx: dict, *, compression="none", layout="strips",
         data = lv["data"]
         b, h, w = data.shape
         dt = data.dtype
-        comp_code = {"none": 1, "lzw": 5, "deflate": 8,
-                     "packbits": 32773, "jpeg": 7}[compression]
         chunky = np.ascontiguousarray(np.moveaxis(data, 0, 2))  # (H,W,B)
 
         if comp_code == 7:
@@ -738,25 +714,25 @@ def write_tiff(fx: dict, *, compression="none", layout="strips",
                     ).astype(dt)  # wraps mod 2^bits for integer dtypes
                 return seg_arr.tobytes()
 
+        # strips are full-width tiles; edge tiles are zero-padded to full
+        # size, the last strip is cut short instead
+        seg_h, seg_w = ((rows_per_strip, w) if layout == "strips"
+                        else (tile_size, tile_size))
         segs = []
-        if layout == "strips":
-            for r0 in range(0, h, rows_per_strip):
-                segs.append(enc(chunky[r0:r0 + rows_per_strip]))
-        else:
-            ts = tile_size
-            for j in range(0, h, ts):
-                for i in range(0, w, ts):
-                    tile = np.zeros((ts, ts, b), dtype=dt)
-                    blockv = chunky[j:j + ts, i:i + ts]
-                    tile[: blockv.shape[0], : blockv.shape[1]] = blockv
-                    segs.append(enc(tile))
+        for j in range(0, h, seg_h):
+            rows = min(seg_h, h - j) if layout == "strips" else seg_h
+            for i in range(0, w, seg_w):
+                blk = chunky[j:j + rows, i:i + seg_w]
+                segs.append(enc(np.pad(blk, ((0, rows - blk.shape[0]),
+                                             (0, seg_w - blk.shape[1]),
+                                             (0, 0)))))
         if comp_code == 8:
             segs = [zlib.compress(s, 6) for s in segs]
         elif comp_code == 5:
             segs = [_lzw_encode(s) for s in segs]
         elif comp_code == 32773:
             # §9: each scanline is packed separately
-            row_bytes = (w if layout == "strips" else tile_size) * b * dt.itemsize
+            row_bytes = seg_w * b * dt.itemsize
             segs = [b"".join(_packbits_encode_row(s[k:k + row_bytes])
                              for k in range(0, len(s), row_bytes))
                     for s in segs]

@@ -563,17 +563,64 @@ def test_jpeg_dri_before_sof_honored():
         encode_jpeg(img, quality=90, restart_interval=2)))
 
 
+def test_jpeg_16bit_quant_table_after_sof_raises():
+    """A DQT with Pq=1 (16-bit entries) is rejected wherever it appears:
+    T.81 allows tables between SOF and SOS too, and a table read there
+    must not decode silently as 8-bit."""
+    from geowarp_spark.sources.jpeg import decode_jpeg, encode_jpeg
+
+    buf = bytearray(encode_jpeg(np.full((16, 16), 90, dtype=np.uint8)))
+    i = buf.find(b"\xff\xdb")
+    dqt = bytearray(buf[i:i + 2 + int.from_bytes(buf[i + 2:i + 4], "big")])
+    del buf[i:i + len(dqt)]
+    dqt[4] |= 0x10                          # Pq=1 on the table's first byte
+    sof = buf.find(b"\xff\xc0")
+    after_sof = sof + 2 + int.from_bytes(buf[sof + 2:sof + 4], "big")
+    with pytest.raises(NotImplementedError, match="Pq=1"):
+        decode_jpeg(bytes(buf[:after_sof] + dqt + buf[after_sof:]))
+    with pytest.raises(NotImplementedError, match="Pq=1"):
+        decode_jpeg(bytes(buf[:sof] + dqt + buf[sof:]))
+
+
+def test_jpeg_truncated_entropy_data_raises():
+    """The reader peeks 16 bits ahead, past the last entropy byte into the
+    EOI marker or the end of the buffer, as 1-bits; a block that consumes
+    any of them is corrupt and must raise, not decode padding."""
+    from geowarp_spark.sources.jpeg import (DC_LUMA_BITS, DC_LUMA_VALS,
+                                            _BitReader, _lookahead,
+                                            decode_jpeg, encode_jpeg)
+
+    r = _BitReader(b"\x2b\xff\xd9", 0)     # one entropy byte, then EOI
+    assert r.decode(_lookahead(DC_LUMA_BITS, DC_LUMA_VALS)) == 0  # code 00
+    assert r.receive(6) == 0x2B            # the peek saw 1-bits, took none
+    with pytest.raises(ValueError, match="mid-block"):
+        r.receive(1)
+
+    rng = np.random.default_rng(3)
+    buf = encode_jpeg(rng.integers(0, 256, (32, 32), dtype=np.uint8))
+    sos = buf.find(b"\xff\xda")
+    cut = (sos + len(buf)) // 2
+    with pytest.raises(ValueError):
+        decode_jpeg(buf[:cut] + b"\xff\xd9")      # EOI mid-scan
+    with pytest.raises(ValueError):
+        decode_jpeg(buf[:cut])                     # no EOI at all
+
+
 def test_jpeg_bitreader_acc_bounded():
-    """The entropy reader's accumulator must stay bounded (<=16 live
-    bits) as bytes stream through — an unbounded acc makes every shift
-    O(bytes consumed), i.e. O(n^2) per restart-free segment (r6
-    ADVICE)."""
-    from geowarp_spark.sources.jpeg import _BitReader
+    """The entropy reader's accumulator must stay bounded as bytes stream
+    through — an unbounded acc makes every shift O(bytes consumed), i.e.
+    O(n^2) per restart-free segment (r6 ADVICE).  The lookahead reader
+    holds at most 16 peeked bits plus one byte, whatever it has read."""
+    from geowarp_spark.sources.jpeg import (AC_LUMA_BITS, AC_LUMA_VALS,
+                                            _BitReader, _lookahead)
 
     data = bytes(range(1, 200)) * 50  # no 0xFF stuffing concerns
+    table = _lookahead(AC_LUMA_BITS, AC_LUMA_VALS)
     br = _BitReader(data, 0)
-    for k in range(8 * len(data) // 2):
-        br.bit()
-        if k % 997 == 0:
-            assert br.acc.bit_length() <= 16
-    assert br.acc.bit_length() <= 16
+    n = 0
+    while br.pos < len(data) - 2:
+        br.receive(1 + n % 16)
+        br.decode(table)
+        n += 1
+        assert br.acc.bit_length() <= 16 + 8, n
+    assert n > 2000
